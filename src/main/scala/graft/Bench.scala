@@ -73,28 +73,39 @@ object Bench {
         System.err.println(f"[bench] WARNING: starting loaded (${loadNow}%.2f)")
     }
     val loadBefore = loadNow
-    val samples = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      // noop sink, not count(): count() lets Catalyst prune every computed
-      // column, so map-only queries would be timed as bare scans. The noop
-      // sink fully evaluates each output row and discards it.
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
+    // One timed sample. noop sink, not count(): count() lets Catalyst
+    // prune every computed column, so map-only queries would be timed as
+    // bare scans. The noop sink fully evaluates each output row and
+    // discards it. A FAILED sample is +inf, never its (near-zero) elapsed
+    // time: a fast failure must not win a min or be summed as a fast row.
+    val registry = SparkEntry.queries
+    def once(name: String): Double = {
+      val t0 = System.nanoTime()
+      try {
+        registry(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Double.PositiveInfinity
       }
-      // Each query runs twice and reports the MIN: a loaded machine (or a
-      // first-run one-off like JIT warm-up / learned-quantizer training,
-      // which is amortized index-build cost, not query cost) cannot
-      // manufacture a 10x artifact in a single sample. Totals reproduce
-      // within ~10% across runs.
-      name -> ((once(), once()))
     }
-    val firstPass = samples.map { case (k, (a, b)) => k -> math.min(a, b) }
+    // Each query runs twice and reports the MIN: a loaded machine (or a
+    // first-run one-off like JIT warm-up / learned-quantizer training,
+    // which is amortized index-build cost, not query cost) cannot
+    // manufacture a 10x artifact in a single sample. Totals reproduce
+    // within ~10% across runs.
+    val samples = registry.keys.toSeq
+      .filter(name => only.isEmpty || only(name))
+      .map(name => name -> ((once(name), once(name))))
+    // Rows whose every sample failed carry no measurement: they are listed
+    // under "failed" and left out of the per-row map and the total.
+    val failed = samples.collect {
+      case (k, (a, b)) if a.isInfinity && b.isInfinity => k
+    }.sorted
+    val firstPass = samples.collect {
+      case (k, (a, b)) if !failed.contains(k) => k -> math.min(a, b)
+    }.toMap
     // Full-capture pins parsed from the committed pin envelope so the
     // capture can adjudicate EVERY row, not just the 16-row canary.
     // The "queries" block holds only bare numbers, so the first '}' after
@@ -154,21 +165,7 @@ object Bench {
         retimePins.get(k).filter(pin => v > 3.0 * pin && v > 0.3).map { _ =>
           System.err.println(f"[bench] $k%s ended at $v%.2fs > 3x its " +
             f"pinned value ${retimePins(k)}%.2fs — re-timing")
-          val fn = SparkEntry.queries(k)
-          // A FAILED retime sample returns +inf, never its (near-zero)
-          // elapsed time — a fast failure must not win the min and
-          // silently under-report an already-suspicious row (ADVICE r20).
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $k retime failed: ${e.getMessage}")
-              Double.PositiveInfinity
-            }
-          }
-          val re = math.min(once(), once())
+          val re = math.min(once(k), once(k))
           // Both retime samples failed: keep the original measurement and
           // stamp the failure (an infinite 'remeasure' would break the
           // JSON consumers downstream).
@@ -255,8 +252,11 @@ object Bench {
         f""""$k":{"orig":$orig%.3f,"remeasure":$re%.3f}"""
       }.mkString(""""anomaly_retimes":{""", ",", "},")
     }
+    val failedJson = failed.map(k => s""""$k"""")
+      .mkString(""""failed":[""", ",", "],")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        failedJson +
         s"""$retimeJson$canaryJson,$load,"sf":"$sfDir"}"""
     // The complete per-query envelope ALSO lands on disk (VERDICT r14 item
     // 5: the driver keeps only a bounded tail of stdout, so the full
@@ -264,8 +264,9 @@ object Bench {
     // The file carries both raw samples per query so a post-hoc adjudicator
     // can separate first-run one-offs (index training, codegen compile)
     // from steady-state cost without re-running.
+    def sample(x: Double): String = if (x.isInfinity) "null" else f"$x%.3f"
     val both = samples.map { case (k, (a, b)) =>
-      f""""$k":[$a%.3f,$b%.3f]""" }.mkString("{", ",", "}")
+      s""""$k":[${sample(a)},${sample(b)}]""" }.mkString("{", ",", "}")
     // Declared output-linear queries (Q.outputLinear): the scale probe
     // (tools/bench_scale.py) prices their slope as expected result volume
     // instead of flagging them super-linear every round.
@@ -274,7 +275,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     val envelope =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
-        s""""queries":$qs,"samples":$both,"output_linear":$outLinear,""" +
+        s""""queries":$qs,$failedJson"samples":$both,"output_linear":$outLinear,""" +
         s"""$retimeJson$canaryJson,$load,"sf":"$sfDir"}""" + "\n"
     Files.writeString(Paths.get(outPath), envelope)
     // VERDICT r15 item 3: the driver's round capture (BENCH_rNN.json) keeps
@@ -334,7 +335,7 @@ object Bench {
       .mkString("{", ",", "}")
     val fullPtr = fullStamped.map(p => s""""full":"$p",""").getOrElse("")
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""n":${results.size},$fullPtr$canaryJson,"queries":$top,$load,""" +
+      s""""n":${results.size},$fullPtr$failedJson$canaryJson,"queries":$top,$load,""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
   }

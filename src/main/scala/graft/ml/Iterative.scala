@@ -45,24 +45,6 @@ object GradientDescent {
       mw: Double = 0.0, mb: Double = 0.0,
       vw: Double = 0.0, vb: Double = 0.0)
 
-  /** Per-(session, dir, tag) cache of sufficient statistics. The moments
-    * of a fixed projection of a fixed input dir are a pure value; the
-    * training-algorithm queries (Adam, checkpoint/resume, epoch loop)
-    * share them the way a production pipeline shares a feature store —
-    * recomputing the identical aggregate per algorithm measures nothing
-    * new (`ml_train_gd_iterations` and `ml_linreg_normal_eq` keep their
-    * own uncached passes, so the stats-build cost itself stays visible in
-    * the bench). Keyed by session identity so a restarted session never
-    * sees stale state.
-    */
-  private val momentsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), AnyRef]
-
-  def cached[T <: AnyRef](
-      s: SparkSession, dir: String, tag: String)(build: => T): T =
-    momentsCache.getOrElseUpdate(
-      (org.apache.spark.sql.graft.GraftSqlBridge.sessionUUID(s), dir, tag), build).asInstanceOf[T]
-
   /** ONE distributed pass over a DataFrame with columns (x, y). */
   def moments(xy: DataFrame): Moments = {
     val m = xy.agg(

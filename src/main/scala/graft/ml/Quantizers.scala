@@ -1,11 +1,10 @@
 package graft.ml
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.Staged
 
 /** LEARNED quantizers for the ANN indexes (SURVEY.md §2.K), trained on the
   * actual embedding table instead of the round-2 fixed toy values — the way
@@ -21,8 +20,9 @@ import graft.Tables
   * oracle SQL ([[sqlFloat]] prints a float's exact double value, which
   * DuckDB's correctly-rounded parser reads back to the same double).
   *
-  * Results are memoized per data dir: the IVF query, the PQ query, their
-  * oracle generation, and the recall gate all share one training pass.
+  * Results are staged per (session, data dir) in [[Staged]]: the IVF query,
+  * the PQ query, their oracle generation, and the recall gate all share
+  * one training pass.
   * Model state is O(k·dim) floats on the driver; the data never leaves the
   * cluster (one scan + one (cluster, dim) aggregate per Lloyd iteration).
   */
@@ -36,21 +36,18 @@ object Quantizers {
   val PqCodes = 16
   val PqIters = 3
 
-  private val ivfCache = TrieMap.empty[String, Array[Array[Float]]]
-  private val pqCache = TrieMap.empty[String, Array[Array[Array[Float]]]]
-
   /** 8 coarse IVF centroids (64-dim), k-means-trained on `embeddings`. */
   def ivf(s: SparkSession, dir: String): Array[Array[Float]] =
-    ivfCache.getOrElseUpdate(dir, {
+    Staged.memo(s, dir, "quantizer/ivf") {
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       KMeansLloyd.run(e, KMeansLloyd.init(e, IvfK), 0, IvfIters)._1
-    })
+    }
 
   /** PQ codebook: per 16-dim subspace, [[PqCodes]] k-means-trained
     * codewords (a 2-byte code per vector at 16 codes x 4 subspaces).
     */
   def pq(s: SparkSession, dir: String): Array[Array[Array[Float]]] =
-    pqCache.getOrElseUpdate(dir, {
+    Staged.memo(s, dir, "quantizer/pq") {
       Array.tabulate(PqSubs) { si =>
         val sub = Tables(s, dir, "embeddings")
           .select(
@@ -59,7 +56,7 @@ object Quantizers {
               .as("embedding"))
         KMeansLloyd.run(sub, KMeansLloyd.init(sub, PqCodes), 0, PqIters)._1
       }
-    })
+    }
 
   /** SQL literal of a float's exact double value: `Double.toString` emits
     * the shortest decimal that round-trips, and float->double widening is
@@ -71,9 +68,6 @@ object Quantizers {
 
   val OpqDim = 64
   val OpqIters = 6
-
-  private val opqCache =
-    TrieMap.empty[String, (Array[Array[Float]], Array[Array[Array[Float]]])]
 
   /** OPQ model: (rotation rows, rotated-space PQ codebook). The rotation
     * is the paper's "natural" (eigenvalue-allocation) initialization made
@@ -91,7 +85,7 @@ object Quantizers {
     */
   def opq(s: SparkSession, dir: String)
       : (Array[Array[Float]], Array[Array[Array[Float]]]) =
-    opqCache.getOrElseUpdate(dir, {
+    Staged.memo(s, dir, "quantizer/opq") {
       val d = OpqDim
       val g = Array.ofDim[Double](d, d)
       graft.queries.MLOps.pcaGram(s, dir).collect()
@@ -139,7 +133,7 @@ object Quantizers {
         KMeansLloyd.run(sub, KMeansLloyd.init(sub, PqCodes), 0, PqIters)._1
       }
       (rot, cb)
-    })
+    }
 
   /** Apply the OPQ rotation: y_d = r_d · x in double (the shared native
     * dot), rounded once to float — both engines reproduce the identical
@@ -174,14 +168,12 @@ object Quantizers {
   def semK(n: Long): Int =
     math.max(IvfK.toLong, (n + SemClusterSize - 1) / SemClusterSize).toInt
 
-  private val semCache = TrieMap.empty[String, Array[Array[Float]]]
-
   /** k-means-trained SemDeDup centroids over `embeddings`, k = [[semK]](n),
-    * memoized per dir (one training pass shared by the query, its generated
-    * oracle, and the scale spec).
+    * staged (one training pass shared by the query, its generated oracle,
+    * and the scale spec).
     */
   def sem(s: SparkSession, dir: String): Array[Array[Float]] =
-    semCache.getOrElseUpdate(dir,
+    Staged.memo(s, dir, "quantizer/sem")(
       semTrain(Tables(s, dir, "embeddings").select("vec_id", "embedding")))
 
   /** DataFrame-form training body, so specs can probe synthetic scales

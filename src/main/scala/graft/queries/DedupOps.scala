@@ -916,25 +916,13 @@ object DedupOps extends QueryPack {
   private[graft] val SaSeedGram = 8
   private[graft] val SaK = 16
 
-  /** Derived round count per (session, dir) — the probe is a property of
-    * the corpus, so it stages like the learned-quantizer codebooks (one
-    * bounded fold per session+dir, shared by the query body and the
-    * oracle generator; cross-session keying matches the Staged/typedSpools
-    * convention). Keyed by the session's own UUID
-    * (GraftSqlBridge.sessionUUID — stable for the session's lifetime and
-    * never reused after GC; ADVICE r19: an identityHashCode can collide
-    * across collected sessions in one JVM; r21 unified every memo on this
-    * key). Like the spools convention, the memo assumes the data dir
-    * is IMMUTABLE within a session: rewriting the corpus at `dir`
-    * mid-session would reuse a stale round count / token-contract verdict.
+  /** Derived round count, staged — the probe is a property of the corpus
+    * (one bounded fold, shared by the query body and the oracle
+    * generator).
     */
-  private val saRoundsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Int]
-
-  private def saRounds(s: SparkSession, dir: String): Int = {
-    val sid = org.apache.spark.sql.graft.GraftSqlBridge.sessionUUID(s)
-    saRoundsMemo.getOrElseUpdate((sid, dir), saRoundsOf(saSlice(s, dir)))
-  }
+  private def saRounds(s: SparkSession, dir: String): Int =
+    Staged.memo(s, dir, "dedup/sa_rounds")(
+      Int.box(saRoundsOf(saSlice(s, dir)))).intValue
 
   /** Derive the k=[[SaK]] round count from the slice's max doc length
     * (coverage [[SaSeedGram]]·[[SaK]]^r ≥ maxlen), and enforce the token

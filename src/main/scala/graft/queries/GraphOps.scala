@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, QueryPack, Tables}
 import graft.Fns._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -44,38 +44,24 @@ import org.apache.spark.sql.types.DecimalType
 object GraphOps extends QueryPack {
 
   /** Distinct customer→supplier trade edges, both directions, node ids in
-    * disjoint even/odd spaces. Memoized per (session, dir) with the same
-    * policy as [[Tables]]: the symmetrized edge list is the derived base
-    * table of this whole family — a real deployment persists it once
-    * (bucketed by src) and every traversal reads ~|E| scalars instead of
-    * re-running the fact join. PageRank/BFS timings then measure the
-    * iterations, not the edge build.
+    * disjoint even/odd spaces, staged: the symmetrized edge list is the
+    * derived base table of this whole family — a real deployment persists
+    * it once (bucketed by src) and every traversal reads ~|E| scalars
+    * instead of re-running the fact join. PageRank/BFS timings then
+    * measure the iterations, not the edge build.
     */
-  // Keyed by the session OBJECT (WeakHashMap): a stopped session's entry
-  // becomes collectable instead of pinning dead localCheckpoint blocks, and
-  // no identity-hash reuse by a later session can resurrect one. Guarded by
-  // its own monitor — WeakHashMap is not thread-safe and queries can race.
-  private val edgeCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
   private def tradeEdges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.synchronized {
-      edgeCache
-        .computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir, {
-        val eds = Tables(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-          .join(
-            Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(
-            (col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        eds.union(eds.select(col("dst").as("src"), col("src").as("dst")))
-          .localCheckpoint()
-        })
+    Staged(s, dir, "trade_edges") {
+      val eds = Tables(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"))
+        .join(
+          Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(
+          (col("o_custkey") * 2).as("src"),
+          (col("l_suppkey") * 2 + 1).as("dst"))
+        .distinct()
+      eds.union(eds.select(col("dst").as("src"), col("src").as("dst")))
     }
 
   /** The ONE build of the staged "knn_und_200" artifact (ADVICE r17): the
@@ -105,6 +91,15 @@ object GraphOps extends QueryPack {
         .distinct()
     }
   }
+
+  /** One long key for a partkey pair `pa < pb < 2^32`: `pa << 32 | pb`.
+    * For `pa >= 2^31` the shift sets the sign bit, so [[pairHi]] decodes
+    * with an UNSIGNED shift; an arithmetic shift would sign-extend it.
+    */
+  private[graft] def packPair(pa: Column, pb: Column): Column =
+    shiftleft(pa, 32) + pb
+  private[graft] def pairHi(pk: Column): Column = shiftrightunsigned(pk, 32)
+  private[graft] def pairLo(pk: Column): Column = pk.bitwiseAND(lit(4294967295L))
 
   /** The shared edge derivation as SQL, for the DuckDB oracles. */
   private val edgesSql =
@@ -871,21 +866,22 @@ object GraphOps extends QueryPack {
         // grouping key instead of a 16-byte two-column key — ~half the
         // shuffle bytes and a cheaper hash/compare in the hash aggregate
         // (guide §2.3 "narrower types"). Valid while partkey < 2^32 (TPC-H
-        // ≤ SF ~20k); beyond that revert to the two-column key. The y > x
+        // ≤ SF ~20k; see packPair); beyond that revert to the two-column
+        // key. The y > x
         // array filter drops same-part pairs BEFORE the explode (the sorted
         // basket makes y > x ⟺ y ≠ x), replacing the post-explode pa < pb
         // filter row-for-row.
         val pairsOf = flatten(transform(ps, (x, i) =>
           transform(filter(slice(ps, i + 2, size(ps) - i - 1), y => y > x),
-            y => shiftleft(x, 32) + y)))
+            y => packPair(x, y))))
         Tables(s, dir, "lineitem")
           .groupBy("l_orderkey")
           .agg(sort_array(collect_list(col("l_partkey"))).as("ps"))
           .select(explode(pairsOf).as("pk"))
           .groupBy(col("pk"))
           .agg(cnt.as("n"))
-          .select(shiftright(col("pk"), 32).as("pa"),
-            col("pk").bitwiseAND(lit(4294967295L)).as("pb"), col("n"))
+          .select(pairHi(col("pk")).as("pa"), pairLo(col("pk")).as("pb"),
+            col("n"))
           .orderBy(col("n").desc, col("pa"), col("pb")).limit(20)
       },
       outputLinear = true),

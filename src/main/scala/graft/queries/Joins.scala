@@ -25,35 +25,16 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Joins extends QueryPack {
 
-  /** Once-per-JVM staging registry for `join_dpp_partition_prune` (value =
-    * path). Keyed by (pid, input dir) like the binary-blob spill: concurrent
-    * harness JVMs (Verify ∥ Bench) each own a private staged copy, so an
-    * overwrite in one process can never race a read in another, and repeated
-    * bench samples measure the DPP join itself rather than re-paying the
-    * partitioned rewrite on every invocation.
+  /** Staged catalog tables for `join_cbo_reorder`: the three join inputs
+    * land as catalog tables (ANALYZE only works on catalog tables) with
+    * full column statistics, EXTERNAL over scratch paths rather than
+    * managed in the repo warehouse. Returns the table-name map.
     */
-  private val dppStaged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Once-per-(session, dir) catalog staging for `join_cbo_reorder`:
-    * the three join inputs land as catalog tables (ANALYZE only works on
-    * catalog tables) and get full column statistics. Returns the
-    * dir-disambiguated table-name map.
-    */
-  private val cboStaged =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Map[String, String]]
-
   private[graft] def cboTables(
       s: org.apache.spark.sql.SparkSession,
       dir: String): Map[String, String] =
-    cboStaged.getOrElseUpdate((org.apache.spark.sql.graft.GraftSqlBridge.sessionUUID(s), dir), {
-      // pid + dir digest: concurrent harness JVMs (each with its own
-      // in-memory catalog but a SHARED filesystem) must never collide on
-      // a table location, so the tables are EXTERNAL over pid-private
-      // tmp paths rather than managed in the repo warehouse.
-      val tag = s"${ProcessHandle.current().pid()}_" +
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    Staged.memo(s, dir, "join/cbo_tables") {
+      val tag = Scratch.newTag()
       val slices = Map(
         "orders" -> Tables(s, dir, "orders")
           .select("o_custkey", "o_totalprice"),
@@ -63,15 +44,13 @@ object Joins extends QueryPack {
           .select("n_nationkey", "n_name"))
       slices.map { case (name, df) =>
         val t = s"graft_cbo_${name}_$tag"
-        val path =
-          s"${System.getProperty("java.io.tmpdir")}/graft_cbo_${name}_$tag"
+        val path = Scratch.path(s"graft_cbo_$name", tag)
         df.write.mode("overwrite").parquet(path)
-        s.sql(s"DROP TABLE IF EXISTS $t")
         s.sql(s"CREATE TABLE $t USING parquet LOCATION '$path'")
         s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
         name -> t
       }
-    })
+    }
 
   /** The deliberately fact-first join text `join_cbo_reorder` hands the
     * optimizer (CboReorderSpec pins that CBO flips it dimension-first).
@@ -748,14 +727,15 @@ object Joins extends QueryPack {
              |FROM orders o JOIN dim ON o.o_orderpriority = dim.pri
              |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_dpp_orders_" +
-          s"${ProcessHandle.current().pid()}_${Integer.toHexString(dir.hashCode)}"
-        dppStaged.getOrElseUpdate(tmp, {
+        // Staged once per (session, dir): repeated bench samples measure
+        // the DPP join itself, not the partitioned rewrite.
+        val tmp = Staged.memo(s, dir, "join/dpp_orders") {
+          val p = Scratch.path("graft_dpp_orders")
           Tables(s, dir, "orders")
             .withColumn("pri", col("o_orderpriority"))
-            .write.mode("overwrite").partitionBy("pri").parquet(tmp)
-          tmp
-        })
+            .write.mode("overwrite").partitionBy("pri").parquet(p)
+          p
+        }
         val fact = s.read.parquet(tmp)
         // Runtime-valued dim: DISTINCT over the fact's own priority column
         // with the selective predicate — the values reach the fact scan

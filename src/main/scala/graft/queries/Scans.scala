@@ -14,30 +14,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Scans extends QueryPack {
 
-  /** Per-invocation unique scratch dir for write-then-read-back staging.
-    * A FIXED path here is a correctness hazard: the test harness runs
-    * suites in parallel in one JVM, and two concurrent invocations of the
-    * same query sharing one staging dir can interleave delete/append/read
-    * (the round-20 suite caught `graft_metrics_log` serving a 4th stale
-    * generation exactly that way). Uniqueness removes the race; created
-    * dirs are registered in [[Scratch]] and deleted on JVM exit (ADVICE
-    * r20: a full bench run otherwise leaves several fresh parquet copies
-    * of orders/documents in the tmpdir PER SAMPLE, accumulating
-    * unboundedly across runs).
+  /** Per-invocation unique scratch dir for write-then-read-back staging
+    * (see [[Scratch.path]]).
     */
-  private def scratch(prefix: String): String =
-    Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-        java.util.UUID.randomUUID.toString.replace("-", ""))
-
-
-  /** Once-per-JVM spill registry for `scan_binary_blobs` (value = path). */
-  private val binarySpilled =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Once-per-JVM stage registry for `sink_blob_content_addressed`. */
-  private val blobStaged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private def scratch(prefix: String): String = Scratch.path(prefix)
 
   /** The 2-D box predicate served by the z-ordered layout. Plain column
     * comparisons on the MATERIALIZED dims (`ck`, `dy`): parquet stats
@@ -77,10 +57,6 @@ object Scans extends QueryPack {
       .parquet(path)
   }
 
-  /** Once-per-JVM stage registry for `sink_bloom_colindex_skipping`. */
-  private val bloomStaged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Write `df` (orders) in the bloom + column-index pruning layout:
     * sorted by `o_orderkey` (so the parquet COLUMN INDEX — per-page
     * min/max, written by default since parquet-mr 1.11 — prunes pages
@@ -113,45 +89,30 @@ object Scans extends QueryPack {
 
   private[graft] def bloomIndexedPath(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    bloomStaged.getOrElseUpdate(dir, {
-      // pid-isolated like bucketedTable / cboTables / the blob-CAS root:
-      // concurrent harness JVMs share the filesystem, and two JVMs staging
-      // the same digest path would race mode(overwrite) against a reader.
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_bloom_idx_" +
-        s"${ProcessHandle.current().pid()}_" +
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    Staged.memo(s, dir, "scan/bloom_indexed") {
+      val tmp = Scratch.path("graft_bloom_idx")
       writeBloomIndexed(
         Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice"), tmp)
       tmp
-    })
+    }
 
-  /** Once-per-(session, dir) staged bucketed catalog table for
-    * `sink_bucket_pruning` (bucketBy is only expressible through the
-    * catalog). External over a pid-private path: concurrent harness JVMs
-    * share the filesystem but not the in-memory catalog.
+  /** Staged bucketed catalog table for `sink_bucket_pruning` (bucketBy is
+    * only expressible through the catalog), external over a scratch path.
     */
-  private val bucketStaged =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private[graft] def bucketedTable(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    bucketStaged.getOrElseUpdate((org.apache.spark.sql.graft.GraftSqlBridge.sessionUUID(s), dir), {
-      val tag = s"${ProcessHandle.current().pid()}_" +
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    Staged.memo(s, dir, "scan/bucketed_orders") {
+      val tag = Scratch.newTag()
       val t = s"graft_bucketed_orders_$tag"
-      s.sql(s"DROP TABLE IF EXISTS $t")
       Tables(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .write.mode("overwrite")
         .bucketBy(8, "o_custkey")
-        .option("path",
-          s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$tag")
+        .option("path", Scratch.path("graft_bucketed", tag))
         .saveAsTable(t)
       t
-    })
+    }
 
   /** Point predicate served by the bloom filter (custkey exists at every
     * test SF; row-group min/max cannot prune it — only the bloom can).
@@ -203,33 +164,28 @@ object Scans extends QueryPack {
              |FROM documents WHERE doc_id < 500 ORDER BY doc_id""".stripMargin),
       (s, dir) => {
         import org.apache.hadoop.fs.Path
-        // Path keyed by (pid, input dir) — same policy as the ORC sink:
-        // concurrent JVMs (Verify ∥ Bench) each own their spill. The spill
-        // is immutable once written, so it is staged ONCE per JVM+dir
-        // (memoized): repeated runs measure the binary SOURCE under test,
-        // not the local filesystem's 500-file re-spill.
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_binary_docs_" +
-          s"${ProcessHandle.current().pid()}_${Integer.toHexString(dir.hashCode)}"
-        binarySpilled.getOrElseUpdate(tmp, {
-          val root = new Path(tmp)
-          val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(root, true)
-          fs.mkdirs(root)
+        // The spill is immutable once written, so it is staged: repeated
+        // runs measure the binary SOURCE under test, not the local
+        // filesystem's 500-file re-spill.
+        val tmp = Staged.memo(s, dir, "scan/binary_docs") {
+          val spill = Scratch.path("graft_binary_docs")
+          val root = new Path(spill)
+          root.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(root)
           Tables(s, dir, "documents")
             .filter(col("doc_id") < 500)
             .select(col("doc_id"), col("text"))
             .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-              val pfs = new Path(tmp)
+              val pfs = new Path(spill)
                 .getFileSystem(new org.apache.hadoop.conf.Configuration())
               pfs.setWriteChecksum(false)
               rows.foreach { r =>
-                val out = pfs.create(new Path(tmp, s"doc_${r.get(0)}.bin"), true)
+                val out = pfs.create(new Path(spill, s"doc_${r.get(0)}.bin"), true)
                 try out.write(r.getString(1).getBytes("UTF-8"))
                 finally out.close()
               }
             }
-          tmp
-        })
+          spill
+        }
         s.read.format("binaryFile").load(tmp)
           .select(
             regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1)
@@ -261,20 +217,11 @@ object Scans extends QueryPack {
              |FROM documents WHERE doc_id < 500 ORDER BY doc_id""".stripMargin),
       (s, dir) => {
         import org.apache.hadoop.fs.Path
-        // Key the staged root by a strong digest of the FULL dir string —
-        // a 32-bit hashCode collision between dataset dirs would silently
-        // reuse the wrong staged blobs.
-        val dirKey = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_blob_cas_" +
-          s"${ProcessHandle.current().pid()}_$dirKey"
-        val blobs = s"$root/blobs"
-        val manifest = s"$root/manifest"
-        blobStaged.getOrElseUpdate(root, {
-          val rp = new Path(root)
-          val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(rp, true)
-          fs.mkdirs(new Path(blobs))
+        val root = Staged.memo(s, dir, "scan/blob_cas") {
+          val cas = Scratch.path("graft_blob_cas")
+          val blobs = s"$cas/blobs"
+          new Path(blobs).getFileSystem(s.sparkContext.hadoopConfiguration)
+            .mkdirs(new Path(blobs))
           val slice = Tables(s, dir, "documents")
             .filter(col("doc_id") < 500)
             .select(
@@ -304,9 +251,10 @@ object Scans extends QueryPack {
               }
             }
           slice.select("doc_id", "addr")
-            .write.mode("overwrite").parquet(manifest)
-          root
-        })
+            .write.mode("overwrite").parquet(s"$cas/manifest")
+          cas
+        }
+        val blobs = s"$root/blobs"
         val back = s.read.format("binaryFile")
           .option("recursiveFileLookup", "true").load(blobs)
           .select(
@@ -314,7 +262,7 @@ object Scans extends QueryPack {
               .as("file_addr"),
             sha2(col("content"), 256).as("sha"),
             length(col("content")).cast("long").as("n"))
-        s.read.parquet(manifest)
+        s.read.parquet(s"$root/manifest")
           .join(back, col("addr") === col("file_addr"), "left")
           .select(
             col("doc_id"), col("addr"), col("n"),
@@ -969,10 +917,8 @@ object Scans extends QueryPack {
              |FROM c ORDER BY vec_id, dim""".stripMargin),
       (s, dir) => {
         import s.implicits._
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_npz_" +
-          s"${ProcessHandle.current().pid()}_${Integer.toHexString(dir.hashCode)}"
-        graft.sources.Npz.stageEmbeddings(
-          s, Tables(s, dir, "embeddings").select("vec_id", "embedding"), tmp)
+        val tmp = graft.sources.Npz.stageEmbeddings(
+          s, dir, Tables(s, dir, "embeddings").select("vec_id", "embedding"))
         s.read.format("binaryFile").load(tmp)
           .select(col("content"))
           .as[Array[Byte]]

@@ -42,4 +42,14 @@ private[graft] class ScratchRegistry {
 
 private[graft] object Scratch extends ScratchRegistry {
   Runtime.getRuntime.addShutdownHook(new Thread(() => sweep()))
+
+  /** 32 fresh hex chars: unique per call, also fit for a table name. */
+  def newTag(): String = java.util.UUID.randomUUID.toString.replace("-", "")
+
+  /** A registered, never-shared path `<tmpdir>/<prefix>_<tag>`. A fixed
+    * path would let two invocations (or two sessions staging the same
+    * layout) interleave overwrite and read.
+    */
+  def path(prefix: String, tag: String = newTag()): String =
+    register(s"${System.getProperty("java.io.tmpdir")}/${prefix}_$tag")
 }

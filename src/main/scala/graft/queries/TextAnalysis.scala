@@ -106,16 +106,10 @@ object TextAnalysis extends QueryPack {
        |ORDER BY d.doc_id""".stripMargin
   }
 
-  /** Per-dir memo of the trained merge table, shared by the train query
-    * (which always recomputes and refreshes it — the measured-training
-    * policy) and the apply query (which reads it — the amortized-artifact
-    * policy the ANN quantizers use).
-    */
-  private val bpeMergeCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, Long)]]
-
   /** The distributed 5-round BPE training loop (see `text_bpe_train_merges`
-    * for the full design notes).
+    * for the full design notes). The train query always recomputes it, so
+    * training stays measured; the apply query reads the staged merge
+    * table.
     */
   private def bpeTrainFresh(
       s: org.apache.spark.sql.SparkSession, dir: String)
@@ -335,9 +329,8 @@ object TextAnalysis extends QueryPack {
       "text_bpe_train_merges",
       Some(bpeTrainSql(5)),
       (s, dir) => {
-        val trace = bpeTrainFresh(s, dir)
-        bpeMergeCache.put(dir, trace)
-        s.createDataFrame(trace).toDF("merge_idx", "a", "b", "n")
+        s.createDataFrame(bpeTrainFresh(s, dir))
+          .toDF("merge_idx", "a", "b", "n")
       }),
 
     // APPLY the trained tokenizer — the other half of the train/apply pair
@@ -358,7 +351,7 @@ object TextAnalysis extends QueryPack {
       "text_bpe_encode_tokens",
       Some(bpeEncodeSql(5)),
       (s, dir) => {
-        val merges = bpeMergeCache.getOrElseUpdate(dir, bpeTrainFresh(s, dir))
+        val merges = Staged.memo(s, dir, "text/bpe_merges")(bpeTrainFresh(s, dir))
         def mergedOf(w: Column): Column =
           merges.foldLeft(regexp_replace(w, "(.)", "<$1>")) {
             case (acc, (_, a, b, _)) =>

@@ -38,27 +38,22 @@ object TransformerOps extends QueryPack {
   /** Σ x_i — native dot against ones (x_i * 1.0 is exact, fold unchanged). */
   private def ndot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Per-(session, dir) materialized K/V cache for `ml_kv_cache_decode`:
-    * keys/values for positions 1..7 of every sequence, value checksums
-    * precomputed at stage time (that's what a value cache IS), pinned with
-    * localCheckpoint so decode steps read it as an ExistingRDD scan
-    * instead of rederiving it from the corpus.
+  /** Staged K/V cache for `ml_kv_cache_decode`: keys/values for positions
+    * 1..7 of every sequence, value checksums precomputed at stage time
+    * (that's what a value cache IS), checkpointed so decode steps read it
+    * as an ExistingRDD scan instead of rederiving it from the corpus.
     */
-  private val kvCaches = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.DataFrame]
-
   private[graft] def kvCache(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    kvCaches.getOrElseUpdate((org.apache.spark.sql.graft.GraftSqlBridge.sessionUUID(s), dir), {
+    Staged(s, dir, "kv_cache") {
       Tables(s, dir, "embeddings")
         .select(expr("vec_id div 8").as("gid"),
           (col("vec_id") % 8 + 1).cast("int").as("kpos"),
           col("embedding").as("kv"))
         .filter(col("kpos") <= 7)
         .withColumn("vsum", round(ndot(col("kv"), fvec(Ones)), 8))
-        .localCheckpoint()
-    })
+    }
 
   private def fvec(xs: Seq[Double]): Column =
     typedlit[Array[Float]](xs.map(_.toFloat).toArray)

@@ -110,22 +110,18 @@ object Npz {
     out.iterator
   }
 
-  private val staged = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage the embeddings table as an npz landing dir (one npz per 50-id
     * group, one npy entry per vector, entries name-sorted) — executor-side
     * writes through the Hadoop FS API (local tmp here; the same code
     * addresses HDFS/object stores), grouped so whole groups land in one
-    * task after the `repartition(grp)`. Memoized per target path: Bench's
-    * min-of-2 and repeated dev calls restage nothing; the pid-keyed path
-    * (caller-supplied) isolates concurrent JVMs.
+    * task after the `repartition(grp)`. Staged once per (session, dir):
+    * Bench's min-of-2 and repeated dev calls restage nothing.
     */
-  def stageEmbeddings(s: SparkSession, emb: DataFrame, tmp: String): String =
-    staged.getOrElseUpdate(tmp, {
+  def stageEmbeddings(s: SparkSession, dir: String, emb: DataFrame): String =
+    graft.queries.Staged.memo(s, dir, "npz/embeddings") {
+      val tmp = graft.queries.Scratch.path("graft_npz")
       val root = new Path(tmp)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      fs.mkdirs(root)
+      root.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(root)
       emb
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
           (col("vec_id").cast("long") / 50).cast("long").as("grp"))
@@ -148,5 +144,5 @@ object Npz {
           }
         }
       tmp
-    })
+    }
 }

@@ -71,4 +71,17 @@ class GraphOpsSpec extends SparkSpec {
     Seq(res.getAs[Double]("m0"), res.getAs[Double]("m1") / 50.0,
       res.getAs[Double]("m2")).foreach(m => assert(math.abs(m) < scale * 1e-3))
   }
+
+  test("graph_bipartite_copurchase: packed pair key round-trips past 2^31") {
+    import org.apache.spark.sql.functions._
+    import queries.GraphOps.{packPair, pairHi, pairLo}
+    val ks = Seq((1L << 31) - 1, 1L << 31, (1L << 31) + 1)
+    val pairs = for (a <- ks; b <- ks :+ ((1L << 32) - 1) if a < b) yield (a, b)
+    import spark.implicits._
+    val back = pairs.toDF("pa", "pb")
+      .select(packPair(col("pa"), col("pb")).as("pk"))
+      .select(pairHi(col("pk")), pairLo(col("pk")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(back == pairs)
+  }
 }

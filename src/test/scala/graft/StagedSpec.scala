@@ -4,9 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
 
-/** VERDICT r17 item 7 / ADVICE r17 — [[graft.queries.Staged]] hygiene:
-  * session-identity keying with eviction, and at-most-once builds under
-  * concurrent first access.
+/** [[graft.queries.Staged]], the one cross-query memo: session-identity
+  * keying with eviction that releases blocks, at-most-once builds under
+  * concurrent first access, and session-private staged file layouts.
   */
 class StagedSpec extends SparkSpec {
 
@@ -68,5 +68,53 @@ class StagedSpec extends SparkSpec {
     assert(builds.get() == 1,
       s"concurrent first access ran the build ${builds.get()} times")
     Staged.invalidate(child)
+  }
+
+  test("a non-frame value builds once per session; a fresh session rebuilds") {
+    val builds = new AtomicInteger(0)
+    val child = spark.newSession()
+    def params(s: org.apache.spark.sql.SparkSession) =
+      Staged.memo(s, sf, "spec_params")(Array(builds.incrementAndGet().toFloat))
+    val a = params(spark)
+    assert(params(spark) eq a, "re-read rebuilt a staged value")
+    val b = params(child)
+    assert(builds.get() == 2, s"expected one build per session, got ${builds.get()}")
+    assert(b.toSeq == Seq(2f))
+    // Learned quantizers are staged the same way: a fresh session trains
+    // its own instead of serving one trained for another session.
+    val q = graft.ml.Quantizers.ivf(child, sf)
+    assert(graft.ml.Quantizers.ivf(child, sf) eq q)
+    assert(graft.ml.Quantizers.ivf(spark, sf) ne q)
+    Staged.invalidate(child)
+  }
+
+  test("invalidate drops a child session's Tables entries and their cache") {
+    import org.apache.spark.storage.StorageLevel
+    val own = java.nio.file.Files.createTempDirectory("graft_staged_spec").toString
+    spark.range(5).toDF("r_regionkey").write.parquet(s"$own/region.parquet")
+    val child = spark.newSession()
+    Tables(spark, sf, "region").count()
+    Tables(child, sf, "region").count()
+    val mine = Tables(child, own, "region")
+    assert(mine.count() == 5 && mine.storageLevel != StorageLevel.NONE)
+    assert(Staged.invalidate(child) == 2, "expected the two table entries evicted")
+    assert(Staged.invalidate(child) == 0)
+    // The child's own table is uncached; the one it shared with the parent
+    // session stays cached for the parent.
+    assert(mine.storageLevel == StorageLevel.NONE)
+    assert(Tables(spark, sf, "region").storageLevel != StorageLevel.NONE)
+    queries.Scratch.register(own)
+  }
+
+  test("two sessions staging the same file layout get different paths") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    val pa = queries.Scans.bloomIndexedPath(a, sf)
+    val pb = queries.Scans.bloomIndexedPath(b, sf)
+    assert(pa != pb, "two sessions share one staged layout path")
+    assert(queries.Scans.bloomIndexedPath(a, sf) == pa)
+    assert(spark.read.parquet(pa).count() == spark.read.parquet(pb).count())
+    Staged.invalidate(a)
+    Staged.invalidate(b)
   }
 }

@@ -98,6 +98,12 @@ def check_bench_capture(bench_path, oracle_json_path):
         bench = json.load(f)
     with open(oracle_json_path) as f:
         registry = set(json.load(f))
+    failed = bench.get("failed") or []
+    if failed:
+        print(f"FAIL bench capture {bench_path}: {len(failed)} rows failed "
+              f"every sample ({', '.join(failed)}) — a capture with failed "
+              f"rows measures less than the registry")
+        sys.exit(1)
     got = set(bench.get("queries", {}))
     missing = sorted(registry - got)
     if missing or "load_avg_1m" not in bench or "samples" not in bench:
@@ -129,30 +135,33 @@ def check_bench_capture(bench_path, oracle_json_path):
     # match the committed pin envelope. tools/canary_pins.json records the
     # sha256 of every source file hosting a canary row at the last re-pin;
     # a capture taken after an un-acknowledged edit to one of them is
-    # rejected (checked only when the repo sources are present — the gate
-    # runs from the repo root, same as the oracle checks).
+    # rejected. A missing pins file fails too: the tripwire must never be
+    # skipped without a word.
     pins_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "canary_pins.json")
-    if os.path.exists(pins_path):
-        with open(pins_path) as f:
-            pins = json.load(f)
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        changed = []
-        for rel, want in sorted(pins.get("files", {}).items()):
-            p = os.path.join(repo_root, rel)
-            if not os.path.exists(p):
-                changed.append(f"{rel} (missing)")
-                continue
-            with open(p, "rb") as f:
-                have = hashlib.sha256(f.read()).hexdigest()
-            if have != want:
-                changed.append(rel)
-        if changed:
-            print(f"FAIL bench capture {bench_path}: canary-row source "
-                  f"changed without a re-pin ack — {', '.join(changed)} "
-                  f"no longer match tools/canary_pins.json; either revert, "
-                  f"or re-pin and update the hash in the same commit")
-            sys.exit(1)
+    if not os.path.exists(pins_path):
+        print(f"FAIL bench capture {bench_path}: {pins_path} is missing — "
+              f"the canary source tripwire cannot run")
+        sys.exit(1)
+    with open(pins_path) as f:
+        pins = json.load(f)
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    changed = []
+    for rel, want in sorted(pins.get("files", {}).items()):
+        p = os.path.join(repo_root, rel)
+        if not os.path.exists(p):
+            changed.append(f"{rel} (missing)")
+            continue
+        with open(p, "rb") as f:
+            have = hashlib.sha256(f.read()).hexdigest()
+        if have != want:
+            changed.append(rel)
+    if changed:
+        print(f"FAIL bench capture {bench_path}: canary-row source "
+              f"changed without a re-pin ack — {', '.join(changed)} "
+              f"no longer match tools/canary_pins.json; either revert, "
+              f"or re-pin and update the hash in the same commit")
+        sys.exit(1)
     total = bench["value"]
     norm = total / max(cons, 1.0)
     agree = max(ratio, all_ratio) / max(min(ratio, all_ratio), 1e-9)
