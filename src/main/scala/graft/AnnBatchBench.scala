@@ -32,6 +32,8 @@ object AnnBatchBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // The walk runs SimOps internals directly, not through `Q.run`.
+    functions.Native.register(spark)
 
     def walk(n: Int): Long =
       queries.SimOps.hnswGreedy(spark, dir,

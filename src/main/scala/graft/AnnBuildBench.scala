@@ -38,6 +38,8 @@ object AnnBuildBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // The builds run SimOps internals directly, not through `Q.run`.
+    functions.Native.register(s)
     s
   }
 

@@ -20,18 +20,23 @@ final case class Q(
     body: (SparkSession, String) => DataFrame,
     oracleGen: Option[(SparkSession, String) => String] = None,
     outputLinear: Boolean = false) {
-  /** Build the query plan. Registers the native function surface first:
-    * most builders hit it via [[Tables]], but a few read files directly
-    * (e.g. the bloom-filter join, which must see real scans, not
-    * InMemoryRelations), and they still resolve `graft_*` functions.
+  /** Build the query plan. Installs the native functions and custom
+    * operators first, under the install rule stated on
+    * [[graft.functions.Native.register]]: the probe runs per query because a
+    * caller may hand any session, fresh ones included (`IsolationSpec`).
     */
   def run(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Native.register(s)
     body(s, dir)
   }
 
-  def oracleFor(s: SparkSession, dir: String): Option[String] =
+  /** The oracle SQL. Installs like [[run]]: the learned-quantizer oracles
+    * train on `graft_*` functions, possibly in a session no query ran in.
+    */
+  def oracleFor(s: SparkSession, dir: String): Option[String] = {
+    graft.functions.Native.register(s)
     oracleGen.map(_(s, dir)).orElse(oracle)
+  }
 }
 
 trait QueryPack {

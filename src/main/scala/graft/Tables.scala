@@ -78,10 +78,6 @@ object Tables {
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Every query path goes through here first — register the native
-    // function surface (graft_dsum & co., idempotent) so the Fns dialect
-    // helpers resolve in any session without a per-pack register call.
-    graft.functions.Native.register(spark)
     if (noCache) load(spark, sfDir, name)
     else graft.queries.Staged.memo(spark, sfDir, s"table/$name")(
       load(spark, sfDir, name).cache())

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -9,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Shared nullability contract for the fused float-array expressions
   * ([[DotProduct]], [[CosineSim]]): the result can be null not only when a
@@ -197,59 +199,60 @@ object Native {
         .BloomFilterAggregate(args(0), args(1), args(2))
     })
 
-  /** Idempotent per-session registration (temp functions live in the
-    * session's registry). Called from every `Tables` access, so it probes
-    * the session's OWN registry as the done-marker — an identity-hash
-    * memo would mistake a fresh session for a seen one after GC reuses
-    * the hash (sessions are cheap and plentiful in fresh-REPL tests).
+  /** Planner strategies for the whole-plan operators in `graft.plans`. */
+  val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.GreedyPackStrategy, graft.plans.CusumStrategy)
+
+  private val FallbackKey =
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+  /** The install rule: everything a session needs before a `graft` plan
+    * can analyze and plan. `Q.run` and `Q.oracleFor` are its callers in
+    * the engine (and the two ANN probe mains, which bypass `Q`, once per
+    * session); a query body never installs anything itself. Three
+    * independent idempotent guards, so a second call, a session built with
+    * [[GraftExtensions]] or a partly installed session all end the same:
+    *
+    *  - each temp function in [[fns]] is registered if the session's own
+    *    registry lacks it (temp functions live per session, so a fresh
+    *    `newSession()` starts with none);
+    *  - each of [[strategies]] the session's planner does not already hold
+    *    is appended to `experimental.extraStrategies`;
+    *  - `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` is
+    *    raised from Spark's default of 128 to 4,194,304. DecSum runs on the
+    *    ObjectHashAggregate path, which past 128 keys silently degrades to
+    *    SORT-BASED execution, a full sort of the input for a hash-shaped
+    *    query; one live BigDecimal per (group, function) is tiny. The raise
+    *    is session-global (collect_list, percentile, ... too), so it only
+    *    happens while the conf still sits at 128: a user- or
+    *    deployment-set value always wins.
     */
   def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dsum"))) return
+    val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
-    // DecSum runs on the ObjectHashAggregate path, whose default in-memory
-    // hash map capacity (spark.sql.objectHashAggregate.sortBased.
-    // fallbackThreshold = 128 keys) silently degrades any >128-group
-    // aggregate to SORT-BASED execution — a full sort of the input for a
-    // hash-shaped query. One live BigDecimal per (group, function) is tiny,
-    // so size the map for real group cardinalities instead.
-    //
-    // SESSION-GLOBAL side effect, scoped deliberately: the raise applies
-    // to every ObjectHashAggregate in the session (collect_list,
-    // percentile, ...), trading the sort-based memory safety valve for
-    // hash speed. That is the right default for this engine's bounded
-    // group cardinalities, but it must never CLOBBER an operator's choice:
-    // only raise when the conf still sits at Spark's shipped default, so
-    // a user- or deployment-set value always wins.
-    val fallbackKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    if (spark.conf.get(fallbackKey) == "128")
-      spark.conf.set(fallbackKey, "4194304")
+    val missing = strategies.filterNot(spark.sessionState.planner.strategies.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
+    if (spark.conf.get(FallbackKey) == "128") spark.conf.set(FallbackKey, "4194304")
   }
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` — registers the
-  * native functions in every session built with the extension (the idiomatic
-  * deployment path on a shared cluster).
+/** `spark.sql.extensions=graft.functions.GraftExtensions`: the same
+  * functions and strategies as [[Native.register]], injected into every
+  * session built with the extension. The threshold raise stays with
+  * `register`, which `Q` still calls on such sessions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // One source of truth: inject exactly the temp-function surface
-    // (`Native.fns`) so the two deployment paths cannot drift.
     Native.fns.foreach { case (name, builder) =>
       ext.injectFunction((
-        FunctionIdentifierHelper(name),
+        FunctionIdentifier(name),
         new ExpressionInfo(classOf[Native.type].getName, name),
         builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.RewritePowAsMultiply)
+    Native.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
   }
-}
-
-private object FunctionIdentifierHelper {
-  def apply(name: String): org.apache.spark.sql.catalyst.FunctionIdentifier =
-    org.apache.spark.sql.catalyst.FunctionIdentifier(name)
 }

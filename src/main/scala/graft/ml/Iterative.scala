@@ -224,7 +224,6 @@ object KMeansLloyd {
 
   /** Deterministic init: vectors 0..k-1. */
   def init(e: DataFrame, k: Int = K): Centroids = {
-    graft.functions.Native.register(e.sparkSession)
     e.filter(col("vec_id") < k).orderBy("vec_id")
       .collect()
       .map(_.getSeq[Float](1).toArray)
@@ -235,7 +234,6 @@ object KMeansLloyd {
     * exact DECIMAL → merge-order-independent state.
     */
   def step(e: DataFrame, centroids: Centroids): (Centroids, Double, Int) = {
-    graft.functions.Native.register(e.sparkSession)
     import org.apache.spark.sql.functions.{call_function => cf}
     val k = centroids.length
     val dim = centroids.head.length

@@ -140,7 +140,6 @@ object Quantizers {
     * round-to-nearest-even floats.
     */
   def opqRotate(e: DataFrame, rot: Array[Array[Float]]): DataFrame = {
-    graft.functions.Native.register(e.sparkSession)
     import org.apache.spark.sql.functions.{call_function => cf, typedLit}
     // One fused graft_matvec kernel (graft.functions.MatVec): bit-equal to
     // the 64-column `array(graft_dot(embedding, lit(row)).cast("float"))`

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.DoubleType
   * every predecessor's *clamped* value — not expressible as any window
   * aggregate (a running sum ignores the clamp; no frame recovers it), so
   * it gets a custom [[LogicalPlan]] node + [[SparkStrategy]] + physical
-  * operator injected via `spark.experimental.extraStrategies`.
+  * operator, its strategy installed with GreedyPack's by `Native.register`.
   *
   * Scale shape: the exec declares `ClusteredDistribution(group)` +
   * per-group ordering — Spark plans exactly one hash exchange + sort —
@@ -46,9 +46,6 @@ object Cusum {
       order: Seq[String],
       valueCol: String): DataFrame = {
     val s = df.sparkSession
-    if (!s.experimental.extraStrategies.contains(CusumStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ CusumStrategy
     val lp = df.queryExecution.analyzed
     def resolve(n: String): Attribute = lp.output
       .find(_.name == n)

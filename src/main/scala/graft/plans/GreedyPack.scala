@@ -25,10 +25,9 @@ import org.apache.spark.sql.types.LongType
   * inexpressible as a window function (each row's pack depends on every
   * predecessor's *decision*, not just their values), so this is the
   * SURVEY §4.3(c) whole-operator tier: a custom [[LogicalPlan]] node, a
-  * [[SparkStrategy]], and a physical operator, planned through
-  * `spark.experimental.extraStrategies` (the injection point available on
-  * an already-built session; `SparkSessionExtensions` needs to own session
-  * construction, which an embedding host does not offer).
+  * [[SparkStrategy]], and a physical operator. The strategy is one of
+  * `Native.strategies`, installed by `Native.register` (or injected by
+  * `GraftExtensions`), never by this operator.
   *
   * Scale shape: the exec declares `ClusteredDistribution(group)` +
   * per-group ordering, so Spark inserts exactly one hash exchange + one
@@ -49,11 +48,6 @@ object GreedyPack {
       order: Seq[String],
       tokCol: String): DataFrame = {
     val s = df.sparkSession
-    // Per-session idempotent strategy registration (the same pattern as the
-    // per-session temp-function registration, IsolationSpec-compatible).
-    if (!s.experimental.extraStrategies.contains(GreedyPackStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GreedyPackStrategy
     val lp = df.queryExecution.analyzed
     def resolve(n: String): Attribute = lp.output
       .find(_.name == n)

@@ -568,7 +568,6 @@ object CurationOps extends QueryPack {
              |FROM t LEFT JOIN c ON t.doc_id = c.doc_id
              |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val d = Tables(s, dir, "documents")
           .select(col("doc_id"), coalesce(col("lang"), lit("??")).as("lang"),
             lower(col("text")).as("tx"))
@@ -1168,7 +1167,6 @@ object CurationOps extends QueryPack {
               |GROUP BY m.vec_id, m.max_cos
               |ORDER BY m.vec_id""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val e = Tables(s, dir, "embeddings")
         val ev = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("eid"), col("embedding").as("ee"))

@@ -188,7 +188,6 @@ object DedupOps extends QueryPack {
              |FROM inter JOIN sz sa ON da = sa.doc_id JOIN sz sb ON db = sb.doc_id
              |ORDER BY jaccard DESC, da, db LIMIT 20""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val d = Tables(s, dir, "documents")
           .filter(col("doc_id") < 100)
           .select(col("doc_id"), lower(col("text")).as("tx"))
@@ -245,7 +244,6 @@ object DedupOps extends QueryPack {
              |FROM directed
              |ORDER BY containment DESC, da, db LIMIT 20""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val d = Tables(s, dir, "documents")
           .filter(col("doc_id") < 100)
           .select(col("doc_id"), lower(col("text")).as("tx"))
@@ -311,7 +309,6 @@ object DedupOps extends QueryPack {
              |SELECT da, db, max_run_chars, n_runs FROM pairs
              |ORDER BY max_run_chars DESC, da, db LIMIT 30""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val d = Tables(s, dir, "documents")
           .filter(col("doc_id") < 150)
           .select(col("doc_id"), lower(col("text")).as("tx"))
@@ -496,7 +493,6 @@ object DedupOps extends QueryPack {
              |SELECT comp AS rep_doc, CAST(COUNT(*) AS BIGINT) AS csize
              |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val d = Tables(s, dir, "documents")
           .filter(col("doc_id") < 100)
           .select(col("doc_id"), lower(col("text")).as("tx"))
@@ -632,7 +628,6 @@ object DedupOps extends QueryPack {
               |WHERE n_docs >= $spanMinDocs
               |ORDER BY n_docs DESC, gram""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val d = Tables(s, dir, "documents")
           .select(col("doc_id"), lower(col("text")).as("tx"))
           .filter(length(col("tx")) >= 20)
@@ -1082,7 +1077,6 @@ object DedupOps extends QueryPack {
     */
   private[graft] def incrementalDedup(
       s: SparkSession, dir: String, useBloom: Boolean): DataFrame = {
-    graft.functions.Native.register(s)
     val fp = md5(array_join(array_sort(array_distinct(
       split(lower(col("text")), " "))), " "))
     val f = Tables(s, dir, "documents")
@@ -1111,7 +1105,6 @@ object DedupOps extends QueryPack {
     * published corpus count and persists the sketch next to it).
     */
   private[graft] def snapshotBloom(s: SparkSession, dir: String): Array[Byte] = {
-    graft.functions.Native.register(s)
     val fp = md5(array_join(array_sort(array_distinct(
       split(lower(col("text")), " "))), " "))
     Tables(s, dir, "documents")

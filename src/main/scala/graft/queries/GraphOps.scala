@@ -72,7 +72,6 @@ object GraphOps extends QueryPack {
     * under an edit, with execution-order-dependent results.
     */
   private def knnUnd200(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Native.register(s)
     val e = Tables(s, dir, "embeddings").filter(col("vec_id") < 200)
     val a = e.select(col("vec_id").as("qa"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
@@ -444,7 +443,6 @@ object GraphOps extends QueryPack {
              |FROM deg2 JOIN deg0 ON deg2.n = deg0.n
              |ORDER BY node""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val e = Tables(s, dir, "embeddings").filter(col("vec_id") < 200)
         val a = e.select(col("vec_id").as("qa"), col("embedding").as("ea"))
         val b = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
@@ -741,7 +739,6 @@ object GraphOps extends QueryPack {
              |SELECT scc_id, CAST(COUNT(*) AS BIGINT) AS csize
              |FROM scc GROUP BY 1 ORDER BY scc_id""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val q = Tables(s, dir, "embeddings").filter(col("vec_id") < 60)
         val a = q.select(col("vec_id").as("src"), col("embedding").as("ea"))
         val b = q.select(col("vec_id").as("dst"), col("embedding").as("eb"))

@@ -1404,7 +1404,6 @@ object MLOps extends QueryPack {
              |FROM dcg d JOIN ideal i USING (qa) JOIN nrel n USING (qa)
              |ORDER BY qa""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         val e = Tables(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), col("embedding").as("qe"),

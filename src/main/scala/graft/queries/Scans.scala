@@ -862,19 +862,13 @@ object Scans extends QueryPack {
     // pushdown and column pruning work the same as parquet's). Values must
     // survive the write→read hop bit-for-bit; the oracle aggregates the
     // original table, so any ORC encode/decode drift is a hash mismatch.
-    // Sink path is keyed by (pid, input dir): the pid isolates concurrent
-    // JVMs over the same dir (Verify and Bench can overlap on the driver
-    // box), the dir hex separates in-process runs over different dirs —
-    // and a cross-dir String.hashCode collision would only co-locate two
-    // overwrite-then-read round-trips, never corrupt one.
     Q(
       "scan_orc_roundtrip",
       Some("""SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
              |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS bal
              |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_orc_customer_" +
-          s"${ProcessHandle.current().pid()}_${Integer.toHexString(dir.hashCode)}"
+        val tmp = Scratch.path("graft_orc_customer")
         Tables(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal")
           .write.mode("overwrite").orc(tmp)

@@ -81,9 +81,6 @@ object SimOps extends QueryPack {
   private[graft] def ncos(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
-  private def native(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.Native.register(s)
-
   /** Query-INDEPENDENT staged ANN-graph edge build (r17 items 2 + 6): the
     * (src, dst) top-`k` digraph over the bounded node slice, self-loops
     * included, staged once per (session, dir) — the built-once graph
@@ -126,7 +123,6 @@ object SimOps extends QueryPack {
       s: org.apache.spark.sql.SparkSession, dir: String,
       sample: Boolean, k: Int, bounded: Boolean,
       slice: Long): org.apache.spark.sql.DataFrame = {
-    native(s)
     val all = Tables(s, dir, "embeddings").filter(col("vec_id") < slice)
       .select(col("vec_id"), col("embedding"))
     val n = if (sample) all.filter(col("vec_id") % 8 === 0) else all
@@ -204,7 +200,6 @@ object SimOps extends QueryPack {
       boundedBuild: Boolean = true,
       nQueries: Int = 5): org.apache.spark.sql.DataFrame = {
     require(lowerHops >= 1, "beam walk needs at least one lower-layer hop")
-    native(s)
     val emb = Tables(s, dir, "embeddings")
     val n = emb.filter(col("vec_id") < 200)
       .select(col("vec_id"), col("embedding"))
@@ -300,7 +295,6 @@ object SimOps extends QueryPack {
       s: org.apache.spark.sql.SparkSession,
       e: org.apache.spark.sql.DataFrame,
       cs: Array[Array[Float]]): org.apache.spark.sql.DataFrame = {
-    native(s)
     val cents = s.createDataFrame(
       cs.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c.toIndexedSeq) })
       .toDF("cid", "ce")
@@ -833,7 +827,6 @@ object SimOps extends QueryPack {
              |SELECT qa, qb, cos, CAST(rn AS INT) AS rn
              |FROM r WHERE rn <= 5 ORDER BY qa, rn""".stripMargin),
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), col("embedding").as("ea"))
@@ -865,7 +858,6 @@ object SimOps extends QueryPack {
              |SELECT va, vb, ROUND(dot / (na * nb), 6) AS cos
              |FROM p ORDER BY cos DESC, va, vb LIMIT 20""".stripMargin),
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings").filter(col("vec_id") < 200)
         val x = e.select(col("vec_id").as("va"), col("embedding").as("ea"))
         val y = e.select(col("vec_id").as("vb"), col("embedding").as("eb"))
@@ -917,7 +909,6 @@ object SimOps extends QueryPack {
                 |FROM r WHERE rn <= 3 ORDER BY qa, rn""".stripMargin)
       },
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         def bucketCol(t: Int): Column = (0 until 4)
           .map(i => when(ndot(col("embedding"), planeLit(4 * t + i)) > 0, 1 << i).otherwise(0))
@@ -958,7 +949,6 @@ object SimOps extends QueryPack {
              |  CAST(octet_length(encode(text)) % 30 + 1 AS INT) AS n_frames
              |FROM documents ORDER BY doc_id""".stripMargin),
       (s, dir) => {
-        native(s)
         val blob = encode(col("text"), "UTF-8")
         val nBytes = length(blob)
         Tables(s, dir, "documents")
@@ -985,7 +975,6 @@ object SimOps extends QueryPack {
       "sim_ann_ivf_topk",
       None,
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val learned = graft.ml.Quantizers.ivf(s, dir)
         val cents = s.createDataFrame(
@@ -1036,7 +1025,6 @@ object SimOps extends QueryPack {
       "sim_ann_pq_topk",
       None,
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val cb = graft.ml.Quantizers.pq(s, dir)
         // First-minimal argmin code assignment and the per-query exact LUT
@@ -1082,7 +1070,6 @@ object SimOps extends QueryPack {
       "sim_ann_opq_topk",
       None,
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val (rotW, cb) = graft.ml.Quantizers.opq(s, dir)
         val rot = Staged(s, dir, "opq_rot")(
@@ -1166,7 +1153,6 @@ object SimOps extends QueryPack {
              |SELECT qa, qb, rrf, CAST(rn AS INT) AS rn
              |FROM r WHERE rn <= 3 ORDER BY qa, rn""".stripMargin),
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), col("embedding").as("ea"))
@@ -1271,7 +1257,6 @@ object SimOps extends QueryPack {
       "sim_ann_ivfpq_topk",
       None,
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val cents = s.createDataFrame(
           graft.ml.Quantizers.ivf(s, dir).toIndexedSeq.zipWithIndex
@@ -1404,7 +1389,6 @@ object SimOps extends QueryPack {
              |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
              |ORDER BY d.doc_id""".stripMargin),
       (s, dir) => {
-        native(s) // register graft_dot — must not rely on session ordering
         Tables(s, dir, "documents")
           .join(Tables(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
           .select(
@@ -1450,7 +1434,6 @@ object SimOps extends QueryPack {
              |SELECT qd, dd, maxsim, CAST(rn AS INT) AS rn
              |FROM r WHERE rn <= 5 ORDER BY qd, rn""".stripMargin),
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
           .select(expr("vec_id div 8").as("gid"), col("vec_id"), col("embedding"))
         val q = e.filter(col("gid") < 3)
@@ -1613,7 +1596,6 @@ object SimOps extends QueryPack {
              |SELECT qa, CAST(lb AS INT) AS pred_label, votes
              |FROM b WHERE vr = 1 ORDER BY qa""".stripMargin),
       (s, dir) => {
-        native(s)
         val e = Tables(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), col("embedding").as("ea"))

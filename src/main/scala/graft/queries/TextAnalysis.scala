@@ -405,7 +405,6 @@ object TextAnalysis extends QueryPack {
              |  md5(norm) AS digest
              |FROM n ORDER BY doc_id""".stripMargin),
       (s, dir) => {
-        graft.functions.Native.register(s)
         Tables(s, dir, "documents")
           .select(
             col("doc_id"),

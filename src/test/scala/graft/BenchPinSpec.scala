@@ -70,4 +70,13 @@ class BenchPinSpec extends AnyFunSuite {
         "re-captured), update the sha256 in tools/canary_pins.json in the " +
         "same commit; check.py --bench enforces the same tripwire")
   }
+
+  test("Bench.PinScale is the pin_scale_vs_r17 in tools/canary_pins.json") {
+    val txt = Files.readString(Paths.get("tools/canary_pins.json"))
+    val pinned = "\"pin_scale_vs_r17\":\\s*([0-9.]+)".r.findFirstMatchIn(txt)
+      .getOrElse(fail("tools/canary_pins.json has no pin_scale_vs_r17"))
+      .group(1).toDouble
+    assert(Bench.PinScale == pinned,
+      s"Bench.PinScale=${Bench.PinScale} but tools/canary_pins.json pins $pinned")
+  }
 }

@@ -29,7 +29,6 @@ class DecSumSpec extends SparkSpec {
   }
 
   test("adversarial doubles: bit-equal across magnitude bands, signs, and denormals") {
-    graft.functions.Native.register(spark)
     import spark.implicits._
     // Deterministic pseudo-random doubles across the magnitudes that FIT
     // each decimal type (ANSI mode makes the declarative cast THROW on
@@ -55,7 +54,6 @@ class DecSumSpec extends SparkSpec {
   }
 
   test("nulls, NaN, infinities skip; empty group yields null; row cast-overflow skips") {
-    graft.functions.Native.register(spark)
     import spark.implicits._
     val df = Seq[(Int, java.lang.Double)](
       (1, 1.5), (1, null), (1, Double.NaN), (1, Double.PositiveInfinity),
@@ -90,7 +88,6 @@ class DecSumSpec extends SparkSpec {
   }
 
   test("foldable NULL (p, s) fails analysis cleanly, not with an NPE") {
-    graft.functions.Native.register(spark)
     import spark.implicits._
     val df = Seq(1.0, 2.0).toDF("v")
     df.createOrReplaceTempView("decsum_null_ps")

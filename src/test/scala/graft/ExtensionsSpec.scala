@@ -1,9 +1,11 @@
 package graft
 
-import graft.functions.GraftExtensions
+import graft.functions.{GraftExtensions, Native}
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** The spark.sql.extensions deployment path registers the native functions. */
+/** The spark.sql.extensions deployment path installs the same functions and
+  * strategies as `Native.register`, and nothing else.
+  */
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions injects graft_dot into a SparkSessionExtensions") {
@@ -23,5 +25,13 @@ class ExtensionsSpec extends SparkSpec {
     for (n <- names)
       assert(reg.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier(n)), n)
+  }
+
+  test("GraftExtensions injects exactly Native.strategies and no optimizer rule") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    import org.apache.spark.sql.GraftTestHooks.{optimizerRules, plannerStrategies}
+    assert(plannerStrategies(ext, spark) == Native.strategies)
+    assert(optimizerRules(ext, spark).isEmpty)
   }
 }

@@ -10,14 +10,12 @@ import org.apache.spark.sql.functions._
 class GramHashesSpec extends SparkSpec {
 
   private def fixture = {
-    graft.functions.Native.register(spark)
     Tables(spark, sf, "documents")
       .select(col("doc_id"), lower(col("text")).as("tx"))
       .filter(length(col("tx")) >= 20)
   }
 
   private def edge = {
-    graft.functions.Native.register(spark)
     import spark.implicits._
     Seq(
       (1L, "héllo wörld ünïcode — ascii and not"),

@@ -18,7 +18,6 @@ class IncrementalBloomSpec extends SparkSpec {
   }
 
   test("the prefilter prunes: candidates cover all dups but not the batch") {
-    functions.Native.register(spark)
     val bloom = queries.DedupOps.snapshotBloom(spark, sf)
     val fp = md5(array_join(array_sort(array_distinct(
       split(lower(col("text")), " "))), " "))

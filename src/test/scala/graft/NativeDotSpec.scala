@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.Native
 import org.apache.spark.sql.functions._
 
 /** graft.functions.DotProduct: bit-equality with the declarative
@@ -9,7 +8,6 @@ import org.apache.spark.sql.functions._
 class NativeDotSpec extends SparkSpec {
 
   test("native dot is bit-equal to aggregate(zip_with(...)) on all embeddings") {
-    Native.register(spark)
     import graft.queries.SimOps.{dot, ndot}
     val e = Tables(spark, sf, "embeddings")
     val bad = e.select(
@@ -20,14 +18,12 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("null array yields null") {
-    Native.register(spark)
     val df = spark.sql(
       "SELECT graft_dot(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT))) AS d")
     assert(df.collect().head.isNullAt(0))
   }
 
   test("known value: dot([1,2,3],[4,5,6]) = 32") {
-    Native.register(spark)
     val d = spark.sql(
       """SELECT graft_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT), CAST(3 AS FLOAT)),
         |                 array(CAST(4 AS FLOAT), CAST(5 AS FLOAT), CAST(6 AS FLOAT))) AS d
@@ -36,7 +32,6 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("non-float-array input is rejected at analysis") {
-    Native.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_dot(array(1, 2), array(3, 4))").collect()
     }
@@ -44,7 +39,6 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("fused cosine is bit-equal to ndot/(nnorm*nnorm) on shifted pairs") {
-    Native.register(spark)
     import graft.queries.SimOps.{ncos, ndot, nnorm}
     val e = Tables(spark, sf, "embeddings")
     // Pair each vector with its successor's embedding (non-trivial pairs).
@@ -61,7 +55,6 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("cosine of a vector with itself is exactly 1 for nonzero vectors") {
-    Native.register(spark)
     import graft.queries.SimOps.ncos
     // ab == aa == bb in the fused loop, so ab/(sqrt(aa)*sqrt(bb)) == 1.0
     // whenever sqrt is exact-inverse — holds for aa*1.0; assert within ulp.
@@ -72,7 +65,6 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("dot stays inside whole-stage codegen (no CodegenFallback)") {
-    Native.register(spark)
     import graft.queries.SimOps.ndot
     val df = Tables(spark, sf, "embeddings")
       .select(ndot(col("embedding"), col("embedding")).as("d"))
@@ -94,7 +86,6 @@ class NativeDotSpec extends SparkSpec {
       math.cos(s * 1000 + c * 50 + i + 1).toFloat)
 
   test("graft_matvec is bit-equal to the 64-column array(graft_dot(vec, lit(row)).cast(float)) form") {
-    Native.register(spark)
     val w = synMat(64, 64)
     val composed = array(w.toIndexedSeq.map(r =>
       call_function("graft_dot", col("embedding"),
@@ -108,7 +99,6 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("graft_pq_encode is bit-equal to the array_position(array_min) chain") {
-    Native.register(spark)
     val (subs, codes, subdim) = (4, 16, 16)
     val cb = synCb(subs, codes, subdim)
     def cc(s: Int, c: Int): Double =
@@ -130,7 +120,6 @@ class NativeDotSpec extends SparkSpec {
   }
 
   test("graft_pq_lut is bit-equal to the 64 (selfdot - 2*dot + cc) projection columns") {
-    Native.register(spark)
     val (subs, codes, subdim) = (4, 16, 16)
     val cb = synCb(subs, codes, subdim)
     def cc(s: Int, c: Int): Double =
@@ -158,7 +147,6 @@ class NativeDotSpec extends SparkSpec {
     * compile failure into a hard error instead of a WARN.
     */
   test("wide dot projection over non-nullable inputs compiles under CODEGEN_ONLY") {
-    Native.register(spark)
     val key = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "CODEGEN_ONLY")

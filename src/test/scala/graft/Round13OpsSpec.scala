@@ -432,7 +432,6 @@ class Round13OpsSpec extends SparkSpec {
   // ---- The native graft_normalize expression.
 
   test("graft_normalize composes and decomposes per the requested form") {
-    functions.Native.register(spark)
     import spark.implicits._
     val r = Seq(("e\u0301", "\u00e9", "\ufb01")).toDF("dec", "comp", "lig")
       .selectExpr(
@@ -454,7 +453,6 @@ class Round13OpsSpec extends SparkSpec {
     val viaEval = functions.UnicodeNormalize(
       Literal(UTF8String.fromString(mixed)), Literal(UTF8String.fromString("NFC")))
       .eval(null).toString
-    functions.Native.register(spark)
     import spark.implicits._
     val viaCodegen = Seq(mixed).toDF("s")
       .selectExpr("graft_normalize(s, 'NFC')").head().getString(0)
@@ -465,7 +463,6 @@ class Round13OpsSpec extends SparkSpec {
 
 
   test("graft_normalize rejects a bad form at analysis time") {
-    functions.Native.register(spark)
     val e = intercept[AnalysisException] {
       spark.sql("SELECT graft_normalize('x', 'NOPE')").collect()
     }

@@ -6,29 +6,53 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-query state has one home, [[graft.queries.Staged]]. A concurrent
-  * or weak map declared anywhere else in the engine is a second memo with
-  * its own keying and lifetime, so this spec fails on one.
+/** Cross-query state has one home, [[graft.queries.Staged]], and session
+  * set-up one installer, `graft.functions.Native.register`. A concurrent or
+  * weak map declared anywhere else in the engine is a second memo with its
+  * own keying and lifetime, and an install call outside `Q` is a second
+  * install path, so this spec fails on either.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
-  test("no memo map is declared outside queries/Staged.scala") {
-    val root = Paths.get("src/main/scala")
+  private val root = Paths.get("src/main/scala")
+
+  /** `file:line` of every main source line matching `hit`, outside the
+    * `allowed` files (paths relative to `src/main/scala`).
+    */
+  private def offenders(allowed: String*)(hit: String => Boolean): List[String] = {
+    allowed.foreach(a => assert(Files.exists(root.resolve(a)), a))
     val walk = Files.walk(root)
-    val offenders =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filterNot(_.endsWith(Paths.get("graft/queries/Staged.scala")))
-        .flatMap { p: Path =>
-          Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if line.contains("TrieMap") || line.contains("WeakHashMap") =>
-              s"${root.relativize(p)}:${i + 1}"
-          }
-        }.toList
-      finally walk.close()
-    assert(Files.exists(root.resolve("graft/queries/Staged.scala")))
-    assert(offenders.isEmpty,
-      s"memo maps outside queries.Staged: ${offenders.mkString(", ")} — " +
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filterNot(p => allowed.exists(a => p.endsWith(Paths.get(a))))
+      .flatMap { p: Path =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if hit(line) => s"${root.relativize(p)}:${i + 1}"
+        }
+      }.toList
+    finally walk.close()
+  }
+
+  test("no memo map is declared outside queries/Staged.scala") {
+    val found = offenders("graft/queries/Staged.scala")(line =>
+      line.contains("TrieMap") || line.contains("WeakHashMap"))
+    assert(found.isEmpty,
+      s"memo maps outside queries.Staged: ${found.mkString(", ")} — " +
         "stage cross-query state with Staged.memo instead")
+  }
+
+  test("native functions and strategies are installed only through Q") {
+    val calls = offenders("graft/Registry.scala", "graft/functions/DotProduct.scala",
+      "graft/AnnBatchBench.scala", "graft/AnnBuildBench.scala")(
+      _.contains("Native.register("))
+    assert(calls.isEmpty,
+      s"Native.register outside Q: ${calls.mkString(", ")} — Q.run installs " +
+        "what a query needs; a query body installs nothing itself")
+    val assign = """extraStrategies\s*=(?!=)""".r
+    val strategies = offenders("graft/functions/DotProduct.scala")(
+      assign.findFirstIn(_).nonEmpty)
+    assert(strategies.isEmpty,
+      s"extraStrategies assigned outside Native: ${strategies.mkString(", ")} " +
+        "— add the strategy to Native.strategies instead")
   }
 }

@@ -15,6 +15,8 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // Specs call operators directly, not through `Q.run`: install once.
+    graft.functions.Native.register(s)
     s
   }
 }

@@ -81,7 +81,9 @@ class StagedSpec extends SparkSpec {
     assert(builds.get() == 2, s"expected one build per session, got ${builds.get()}")
     assert(b.toSeq == Seq(2f))
     // Learned quantizers are staged the same way: a fresh session trains
-    // its own instead of serving one trained for another session.
+    // its own instead of serving one trained for another session. Training
+    // runs graft_* functions, which `Q` would otherwise have installed.
+    graft.functions.Native.register(child)
     val q = graft.ml.Quantizers.ivf(child, sf)
     assert(graft.ml.Quantizers.ivf(child, sf) eq q)
     assert(graft.ml.Quantizers.ivf(spark, sf) ne q)
