@@ -1,35 +1,69 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
+import java.io.File
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
+/** The one timing main. It runs every registry row (or the
+  * `SPARK_GRAFT_ONLY` subset) min-of-two in one session and writes the
+  * envelope `bench_full.json`, plus `BENCH_FULL_rNN.json` for a full run.
+  * Harness rule: a timing question is answered here, not by a main of its
+  * own; a config probe goes through `SPARK_GRAFT_EXTRA_JVM`
+  * (e.g. `-Dspark.sql.adaptive.enabled=false`), which the envelope's `run`
+  * block stamps; the drift constants live in `tools/canary_pins.json`.
+  */
 object Bench {
-  /** Round-22 drift pin (VERDICT r20 item 1): the committed quiet-box full
-    * capture every official run adjudicates itself against, and the
-    * compounding factor that keeps stamped ratios on the round-17 scale
-    * (the pin capture itself measured conservative 1.074 vs the r17
-    * drift-free box — BENCH_r21.json, stamped by the round driver).
-    * Object-level so BenchPinSpec can check the pin file, the canary set
-    * and tools/canary_pins.json stay consistent.
+  private val json = new ObjectMapper()
+
+  /** Drift references: the committed pin envelope's per-row values
+    * (`all`), the canary subset of them, and the pin capture's own ratio
+    * vs the r17 drift-free box (`scale`), compounded into every ratio so
+    * stamped ratios stay on the r17 scale.
     */
-  private[graft] val PinFile = "BENCH_PIN_r22.json"
-  private[graft] val PinScale = 1.074
-  private[graft] val canaryRef: Map[String, Double] = Map(
-    "ml_conv_train_gd" -> 1.296,
-    "dedup_incremental_bloom" -> 0.605,
-    "ml_histogram_split_finding" -> 0.524,
-    "agg_bootstrap_ci" -> 0.424,
-    "stream_stream_left_outer" -> 1.828,
-    "stream_stream_right_outer" -> 1.870,
-    "stream_late_data_policy" -> 0.979,
-    "stream_static_enrich" -> 0.919,
-    "dedup_cc_clusters" -> 1.192,
-    "corpus_perplexity_kneser_ney" -> 0.952,
-    "corpus_perplexity_bigram_filter" -> 0.863,
-    "sql_flagship_twin" -> 1.301,
-    "stream_foreachbatch_sink" -> 0.870,
-    "sink_dynamic_partition_overwrite" -> 0.585,
-    "ml_conv2d_5x5_multiband" -> 0.491,
-    "agg_corr_covar" -> 0.411)
+  private[graft] final case class Pins(
+      file: String, scale: Double, canary: Map[String, Double], all: Map[String, Double])
+
+  /** Reads `pin_file`, `pin_scale_vs_r17` and `canary_rows` from the
+    * manifest and the reference values from the pin envelope it names. An
+    * unreadable envelope gives empty references (the caller warns); a
+    * missing manifest, or a canary row the envelope does not pin, throws.
+    */
+  private[graft] def loadPins(manifest: String = "tools/canary_pins.json"): Pins = {
+    val m = json.readTree(new File(manifest))
+    val file = m.get("pin_file").asText
+    val all =
+      if (!Files.isReadable(Paths.get(file))) Map.empty[String, Double]
+      else json.readTree(new File(file)).get("queries").properties.asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
+    val canary = if (all.isEmpty) Map.empty[String, Double] else
+      m.get("canary_rows").properties.asScala.map(_.getKey).map(k => k -> all.getOrElse(k,
+        throw new IllegalStateException(s"canary row $k has no pin in $file"))).toMap
+    Pins(file, m.get("pin_scale_vs_r17").asDouble, canary, all)
+  }
+
+  /** The config a run measured under, stamped as the envelope's `run`
+    * block: master (hence cpus), the effective shuffle partitions and AQE
+    * flag, max heap, `SPARK_GRAFT_EXTRA_JVM` verbatim, the ObjectHashAggregate
+    * fallback threshold and git HEAD (null outside a checkout).
+    */
+  private[graft] def runJson(spark: SparkSession): String = {
+    val conf = spark.conf
+    val head =
+      if (!Files.exists(Paths.get(".git"))) null
+      else scala.util.Try(sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim)
+        .getOrElse(null)
+    val run = json.createObjectNode()
+      .put("master", spark.sparkContext.master)
+      .put("shuffle_partitions", conf.get("spark.sql.shuffle.partitions").toInt)
+      .put("adaptive", conf.get("spark.sql.adaptive.enabled").toBoolean)
+      .put("max_heap_mib", Runtime.getRuntime.maxMemory >> 20)
+      .put("extra_jvm", sys.env.get("SPARK_GRAFT_EXTRA_JVM").orNull)
+      .put("ohagg_fallback_threshold",
+        conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold").toInt)
+      .put("git_head", head)
+    json.writeValueAsString(run)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,10 +72,6 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      // Dev loop only (driver never sets it): A/B the adaptive runtime's
-      // per-exchange stage-materialization latency on tiny-SF inputs.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Materialize the shared table cache up front so per-query timings
@@ -51,6 +81,22 @@ object Bench {
     // never sets it, so the per-round capture is always the full registry).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    // Round-22 re-pin (VERDICT r20 item 1): the drift reference is
+    // BENCH_PIN_r22.json, a committed snapshot of the round-22 quiet-box
+    // full capture (all 277 rows, current code, load < 1.5), so every row
+    // has a current-code pin for the allrows median and the retime
+    // safeguard. The r17 anchoring is kept by compounding: every ratio
+    // below is multiplied by `pins.scale`, that capture's own conservative
+    // ratio vs the r17 envelope (BENCH_r21.json), so check.py's 1.15 / 2.0
+    // thresholds keep their meaning.
+    val pins = loadPins()
+    // A FULL-registry run without the pin file cannot stamp the drift
+    // estimators check.py --bench requires — say so at capture time
+    // instead of producing an artifact that can never pass (ADVICE r20).
+    if (only.isEmpty && pins.all.isEmpty)
+      System.err.println(s"[bench] WARNING: ${pins.file} not readable " +
+        "from cwd — the capture will lack the drift estimators and " +
+        "check.py --bench will reject it; run from the repo root")
     def loadNow: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -106,48 +152,6 @@ object Bench {
     val firstPass = samples.collect {
       case (k, (a, b)) if !failed.contains(k) => k -> math.min(a, b)
     }.toMap
-    // Full-capture pins parsed from the committed pin envelope so the
-    // capture can adjudicate EVERY row, not just the 16-row canary.
-    // The "queries" block holds only bare numbers, so the first '}' after
-    // its opening brace closes it — no JSON library needed.
-    def pinsOf(file: String): Map[String, Double] = {
-      val p = Paths.get(file)
-      if (!Files.exists(p)) Map.empty
-      else {
-        val txt = Files.readString(p)
-        val start = txt.indexOf("\"queries\":{")
-        if (start < 0) Map.empty
-        else {
-          val body = txt.substring(start + 11, txt.indexOf('}', start))
-          val kv = "\"([A-Za-z0-9_]+)\":([0-9.Ee+-]+)".r
-          kv.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      }
-    }
-    // Round-22 re-pin (VERDICT r20 item 1, executed in the final
-    // optimization round): the drift reference moves from the aging r17
-    // envelope to BENCH_PIN_r22.json — a committed snapshot of the round-22
-    // quiet-box full capture (all 277 rows, current code, load < 1.5).
-    // The r17 ANCHORING is preserved by compounding: that pin capture
-    // itself measured conservative ratio 1.074 vs the r17 envelope
-    // (BENCH_r21.json, stamped by the round driver), so every ratio below
-    // is multiplied by PinScale — stamped drift ratios remain "box vs the
-    // r17 drift-free box" and check.py's 1.15 / 2.0 thresholds keep their
-    // meaning. What the re-pin buys: every row (including the 9 added
-    // after r17 and the rows legitimately changed by the r18-r21
-    // optimizations) now has a CURRENT-code pin, so the allrows median no
-    // longer mixes stale-code ratios and the retime safeguard needs no
-    // r19 drift-adjusted fallback.
-    val pinRef: Map[String, Double] = pinsOf(PinFile)
-    // A FULL-registry run without the pin file cannot stamp the allrows
-    // drift estimator check.py --bench requires — say so at capture time
-    // instead of producing an artifact that can never pass (ADVICE r20).
-    if (only.isEmpty && pinRef.isEmpty)
-      System.err.println(s"[bench] WARNING: $PinFile not readable " +
-        "from cwd — the capture will lack the allrows drift estimator and " +
-        "check.py --bench will reject it; run from the repo root")
-    val retimePins: Map[String, Double] = pinRef
     // In-run anomaly safeguard (VERDICT r19 item 2): the r19 capture kept
     // six rows at 10-60x their pins — capture-local pathology (page cache /
     // scheduling bursts), not regression — and they sat unadjudicated for a
@@ -162,9 +166,9 @@ object Bench {
     // threaten the gate, and each retime costs two more runs of wall time.
     val retimed: Map[String, (Double, Double)] =
       firstPass.flatMap { case (k, v) =>
-        retimePins.get(k).filter(pin => v > 3.0 * pin && v > 0.3).map { _ =>
+        pins.all.get(k).filter(pin => v > 3.0 * pin && v > 0.3).map { pin =>
           System.err.println(f"[bench] $k%s ended at $v%.2fs > 3x its " +
-            f"pinned value ${retimePins(k)}%.2fs — re-timing")
+            f"pinned value $pin%.2fs — re-timing")
           val re = math.min(once(k), once(k))
           // Both retime samples failed: keep the original measurement and
           // stamp the failure (an infinite 'remeasure' would break the
@@ -191,7 +195,7 @@ object Bench {
     // code-stable rows (implementations untouched since round 17) are
     // re-timed BY THIS VERY RUN and compared against their values in the
     // committed round-22 pin envelope (BENCH_PIN_r22.json); the
-    // measured/pinned median, compounded by PinScale, stamps into the
+    // measured/pinned median, compounded by the pin scale, stamps into the
     // artifact as a ratio on the ROUND-17 box scale: ~1.07 on a box at
     // the pin capture's speed; >1.15 means machine drift, and the
     // artifact carries its own drift-normalized total (total / ratio) so
@@ -201,8 +205,8 @@ object Bench {
     // (16 rows, 6 streaming / 10 not: the round-19 captures showed the
     // streaming floors spike hardest under this drift mode, so the
     // median needs a majority of non-streaming rows to track the
-    // all-rows estimate.) The canaryRef map itself lives at object level.
-    val canaryRows = canaryRef.toSeq.sortBy(_._1).flatMap { case (k, ref) =>
+    // all-rows estimate.) The rows are `canary_rows` in tools/canary_pins.json.
+    val canaryRows = pins.canary.toSeq.sortBy(_._1).flatMap { case (k, ref) =>
       results.get(k).map(m => k -> m / ref)
     }
     def median(xs: Seq[Double]): Double = {
@@ -215,7 +219,7 @@ object Bench {
     // a small minority of the registry, so the median is robust to them
     // without a hand-maintained stability list — and unlike the 16-row
     // canary it cannot be skewed by a handful of streaming floors spiking.
-    // Both estimators are compounded by PinScale (the pin capture's own
+    // Both estimators are compounded by the pin scale (the pin capture's own
     // measured ratio vs the r17 drift-free box) so the stamped values stay
     // on the r17 scale check.py's thresholds were calibrated against.
     // The stamped normalization uses the MORE CONSERVATIVE (smaller) of the
@@ -224,20 +228,20 @@ object Bench {
     // caps the credit (ratio <= 2.0) so an unbounded slowdown can never be
     // normalized away as machine drift (ADVICE r19).
     val allRowRatios = results.toSeq.collect {
-      case (k, v) if pinRef.contains(k) => v / pinRef(k) * PinScale
+      case (k, v) if pins.all.contains(k) => v / pins.all(k) * pins.scale
     }
     val canaryJson = if (canaryRows.size < 8) {
       // A dev-loop subset run can't adjudicate drift — say so explicitly
       // rather than stamping a ratio off 1-2 rows.
       s""""canary":{"ref_round":22,"n":${canaryRows.size},"ratio":null}"""
     } else {
-      val ratio = median(canaryRows.map(_._2)) * PinScale
-      val rows = canaryRows.map { case (k, r) => f""""$k":${r * PinScale}%.3f""" }
+      val ratio = median(canaryRows.map(_._2)) * pins.scale
+      val rows = canaryRows.map { case (k, r) => f""""$k":${r * pins.scale}%.3f""" }
         .mkString("{", ",", "}")
       val allJson = if (allRowRatios.size < 32) "" else {
         val allRatio = median(allRowRatios)
         val cons = math.min(ratio, allRatio)
-        f""""allrows":{"ref":"$PinFile","n":${allRowRatios.size},""" +
+        f""""allrows":{"ref":"${pins.file}","n":${allRowRatios.size},""" +
           f""""ratio":$allRatio%.3f},"ratio_conservative":$cons%.3f,"""
       }
       val normRatio =
@@ -254,10 +258,11 @@ object Bench {
     }
     val failedJson = failed.map(k => s""""$k"""")
       .mkString(""""failed":[""", ",", "],")
+    val run = s""""run":${runJson(spark)}"""
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         failedJson +
-        s"""$retimeJson$canaryJson,$load,"sf":"$sfDir"}"""
+        s"""$retimeJson$canaryJson,$load,$run,"sf":"$sfDir"}"""
     // The complete per-query envelope ALSO lands on disk (VERDICT r14 item
     // 5: the driver keeps only a bounded tail of stdout, so the full
     // 237-query map was only ever recoverable from a truncated log line).
@@ -276,7 +281,7 @@ object Bench {
     val envelope =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
         s""""queries":$qs,$failedJson"samples":$both,"output_linear":$outLinear,""" +
-        s"""$retimeJson$canaryJson,$load,"sf":"$sfDir"}""" + "\n"
+        s"""$retimeJson$canaryJson,$load,$run,"sf":"$sfDir"}""" + "\n"
     Files.writeString(Paths.get(outPath), envelope)
     // VERDICT r15 item 3: the driver's round capture (BENCH_rNN.json) keeps
     // only a 2000-char stdout tail, so the full per-query map can never ride
@@ -335,7 +340,7 @@ object Bench {
       .mkString("{", ",", "}")
     val fullPtr = fullStamped.map(p => s""""full":"$p",""").getOrElse("")
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""n":${results.size},$fullPtr$failedJson$canaryJson,"queries":$top,$load,""" +
+      s""""n":${results.size},$fullPtr$failedJson$canaryJson,"queries":$top,$load,$run,""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
   }

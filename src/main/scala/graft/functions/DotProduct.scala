@@ -208,8 +208,7 @@ object Native {
 
   /** The install rule: everything a session needs before a `graft` plan
     * can analyze and plan. `Q.run` and `Q.oracleFor` are its callers in
-    * the engine (and the two ANN probe mains, which bypass `Q`, once per
-    * session); a query body never installs anything itself. Three
+    * the engine; a query body never installs anything itself. Three
     * independent idempotent guards, so a second call, a session built with
     * [[GraftExtensions]] or a partly installed session all end the same:
     *

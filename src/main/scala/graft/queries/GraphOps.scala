@@ -94,9 +94,12 @@ object GraphOps extends QueryPack {
   /** One long key for a partkey pair `pa < pb < 2^32`: `pa << 32 | pb`.
     * For `pa >= 2^31` the shift sets the sign bit, so [[pairHi]] decodes
     * with an UNSIGNED shift; an arithmetic shift would sign-extend it.
+    * From `pb >= 2^32` on, `pb` spills into `pa`'s bits and distinct pairs
+    * share a key, so the plan raises an error there instead of merging them.
     */
   private[graft] def packPair(pa: Column, pb: Column): Column =
-    shiftleft(pa, 32) + pb
+    when(pb < lit(1L << 32), shiftleft(pa, 32) + pb)
+      .otherwise(raise_error(lit("packPair: partkey >= 2^32 overflows the key")))
   private[graft] def pairHi(pk: Column): Column = shiftrightunsigned(pk, 32)
   private[graft] def pairLo(pk: Column): Column = pk.bitwiseAND(lit(4294967295L))
 
@@ -863,8 +866,7 @@ object GraphOps extends QueryPack {
         // grouping key instead of a 16-byte two-column key — ~half the
         // shuffle bytes and a cheaper hash/compare in the hash aggregate
         // (guide §2.3 "narrower types"). Valid while partkey < 2^32 (TPC-H
-        // ≤ SF ~20k; see packPair); beyond that revert to the two-column
-        // key. The y > x
+        // ≤ SF ~20k; packPair raises an error beyond that). The y > x
         // array filter drops same-part pairs BEFORE the explode (the sorted
         // basket makes y > x ⟺ y ≠ x), replacing the post-explode pa < pb
         // filter row-for-row.

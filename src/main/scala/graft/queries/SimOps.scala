@@ -82,7 +82,7 @@ object SimOps extends QueryPack {
     call_function("graft_cosine", a, b)
 
   /** Query-INDEPENDENT staged ANN-graph edge build (r17 items 2 + 6): the
-    * (src, dst) top-`k` digraph over the bounded node slice, self-loops
+    * (src, dst) top-`k` digraph over the fixed 200-node slice, self-loops
     * included, staged once per (session, dir) — the built-once graph
     * index of a production ANN deployment, which by definition cannot
     * know the queries.
@@ -111,55 +111,45 @@ object SimOps extends QueryPack {
     val key =
       if (sample) "hnsw_edges_l1"
       else if (bounded) "hnsw_edges_l0" else "hnsw_edges_l0_exact"
-    Staged(s, dir, key)(annEdgesBuild(s, dir, sample, k, bounded, 200L))
-  }
-
-  /** The bare (unstaged) edge build behind [[annEdges]], slice
-    * parameterized so `graft.AnnBuildBench` can measure the BUILD's own
-    * scale slope (r17 item 2) on node slices that grow with the corpus —
-    * the staged registry path always builds the fixed 200-node shard.
-    */
-  private[graft] def annEdgesBuild(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      sample: Boolean, k: Int, bounded: Boolean,
-      slice: Long): org.apache.spark.sql.DataFrame = {
-    val all = Tables(s, dir, "embeddings").filter(col("vec_id") < slice)
-      .select(col("vec_id"), col("embedding"))
-    val n = if (sample) all.filter(col("vec_id") % 8 === 0) else all
-    val pairs =
-      if (sample || !bounded)
-        broadcast(n.select(col("vec_id").as("src")))
-          .crossJoin(n.select(col("vec_id").as("dst")))
-          .filter(col("src") =!= col("dst"))
-      else {
-        val cells = (0 until GraphLshTables).map { t =>
-          n.select(col("vec_id"), lit(t).as("t"),
-            graphBucket(col("embedding"), t).cast("int").as("bucket"))
-        }.reduce(_ unionAll _)
-        val probes = ((-1) until GraphLshBits).map { i =>
-          val p = if (i < 0) col("bucket")
-                  else col("bucket").bitwiseXOR(lit(1 << i))
-          cells.select(col("vec_id"), col("t"), p.cast("int").as("probe"))
-        }.reduce(_ unionAll _)
-        probes.as("x")
-          .join(cells.as("y"),
-            col("x.t") === col("y.t") && col("x.probe") === col("y.bucket") &&
-              col("x.vec_id") =!= col("y.vec_id"))
-          .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"))
-          .distinct()
-      }
-    val wr = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
-    pairs
-      .join(n.select(col("vec_id").as("src"), col("embedding").as("ea")),
-        "src")
-      .join(n.select(col("vec_id").as("dst"), col("embedding").as("eb")),
-        "dst")
-      .select(col("src"), col("dst"),
-        round(ncos(col("ea"), col("eb")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= k)
-      .select("src", "dst")
-      .union(n.select(col("vec_id").as("src"), col("vec_id").as("dst")))
+    Staged(s, dir, key) {
+      val all = Tables(s, dir, "embeddings").filter(col("vec_id") < 200L)
+        .select(col("vec_id"), col("embedding"))
+      val n = if (sample) all.filter(col("vec_id") % 8 === 0) else all
+      val pairs =
+        if (sample || !bounded)
+          broadcast(n.select(col("vec_id").as("src")))
+            .crossJoin(n.select(col("vec_id").as("dst")))
+            .filter(col("src") =!= col("dst"))
+        else {
+          val cells = (0 until GraphLshTables).map { t =>
+            n.select(col("vec_id"), lit(t).as("t"),
+              graphBucket(col("embedding"), t).cast("int").as("bucket"))
+          }.reduce(_ unionAll _)
+          val probes = ((-1) until GraphLshBits).map { i =>
+            val p = if (i < 0) col("bucket")
+                    else col("bucket").bitwiseXOR(lit(1 << i))
+            cells.select(col("vec_id"), col("t"), p.cast("int").as("probe"))
+          }.reduce(_ unionAll _)
+          probes.as("x")
+            .join(cells.as("y"),
+              col("x.t") === col("y.t") && col("x.probe") === col("y.bucket") &&
+                col("x.vec_id") =!= col("y.vec_id"))
+            .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"))
+            .distinct()
+        }
+      val wr = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
+      pairs
+        .join(n.select(col("vec_id").as("src"), col("embedding").as("ea")),
+          "src")
+        .join(n.select(col("vec_id").as("dst"), col("embedding").as("eb")),
+          "dst")
+        .select(col("src"), col("dst"),
+          round(ncos(col("ea"), col("eb")), 6).as("cos"))
+        .withColumn("rn", row_number().over(wr))
+        .filter(col("rn") <= k)
+        .select("src", "dst")
+        .union(n.select(col("vec_id").as("src"), col("vec_id").as("dst")))
+    }
   }
 
   /** 5-sign-bit bucket of `e` in graph-LSH table `t` (planes 5t..5t+4). */
@@ -197,19 +187,15 @@ object SimOps extends QueryPack {
       s: org.apache.spark.sql.SparkSession, dir: String,
       upperHops: Int, lowerHops: Int,
       beamWidth: Int = 1,
-      boundedBuild: Boolean = true,
-      nQueries: Int = 5): org.apache.spark.sql.DataFrame = {
+      boundedBuild: Boolean = true): org.apache.spark.sql.DataFrame = {
     require(lowerHops >= 1, "beam walk needs at least one lower-layer hop")
     val emb = Tables(s, dir, "embeddings")
     val n = emb.filter(col("vec_id") < 200)
       .select(col("vec_id"), col("embedding"))
-    // `nQueries` sizes the query BATCH (registry row: 5) — the
-    // batch-amortization knob: the per-invocation qd/m1 derivations are
-    // paid once per batch, so their cost per query falls ~|Q|-fold
-    // (measured in BENCH_ISOLATION.json's graph-walk batch sweep,
-    // VERDICT r18 item 4).
-    val qs = emb.filter(
-        col("vec_id") >= 200 && col("vec_id") < 200 + nQueries)
+    // A batch of 5 queries: the per-invocation qd/m1 derivations are paid
+    // once per batch, so their cost per query falls ~|Q|-fold (measured in
+    // BENCH_ISOLATION.json's graph-walk batch sweep, VERDICT r18 item 4).
+    val qs = emb.filter(col("vec_id") >= 200 && col("vec_id") < 205)
       .select(col("vec_id").as("q"), col("embedding").as("qe"))
     // Per-invocation |Q|·|V| query-node cosine table, materialized ONCE
     // (one tiny job) so the walk-time derivations below read a leaf

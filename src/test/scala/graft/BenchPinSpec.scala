@@ -1,58 +1,71 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** Round-22 drift re-pin consistency (VERDICT r20 item 1).
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+/** Bench's drift inputs and run stamp (VERDICT r20 item 1, r22 item 2).
   *
-  * The bench adjudicates machine drift against a committed pin envelope
-  * (Bench.PinFile) and a 16-row canary whose reference values must come
-  * from that same envelope; tools/canary_pins.json is the source tripwire
-  * check.py --bench enforces. This spec keeps the three artifacts
-  * consistent so a drifted edit fails in `sbt test` before it fails at
-  * the driver's gate:
+  * The bench adjudicates machine drift against the committed pin envelope
+  * that tools/canary_pins.json names, over the canary rows it lists;
+  * the same manifest is the source tripwire check.py --bench enforces.
+  * This spec fails in `sbt test` before a drifted edit fails at the gate:
   *   - the pin file exists, parses, and pins every registry id;
-  *   - every canaryRef entry equals the pin file's value for that row
-  *     (the canary IS a subset of the pin capture, not a separate memo);
+  *   - `Bench.loadPins` reads exactly the manifest's canary rows, each at
+  *     the pin envelope's value, and throws on a canary row the envelope
+  *     does not pin;
   *   - every file hash recorded in tools/canary_pins.json matches the
   *     working tree (an un-acknowledged edit to a canary row's source
-  *     file must fail loudly here, with the re-pin instructions).
+  *     file must fail loudly here, with the re-pin instructions);
+  *   - the envelope's `run` block reports the session it ran in.
   */
-class BenchPinSpec extends AnyFunSuite {
+class BenchPinSpec extends SparkSpec {
 
-  private def pinQueries: Map[String, Double] = {
-    val txt = Files.readString(Paths.get(Bench.PinFile))
-    val start = txt.indexOf("\"queries\":{")
-    require(start >= 0, s"${Bench.PinFile} has no queries block")
-    val body = txt.substring(start + 11, txt.indexOf('}', start))
-    "\"([A-Za-z0-9_]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
+  private val json = new ObjectMapper()
+  private def read(path: String): JsonNode = json.readTree(new File(path))
+  private def fields(n: JsonNode): Map[String, JsonNode] =
+    n.properties.asScala.map(e => e.getKey -> e.getValue).toMap
+
+  private val manifest = read("tools/canary_pins.json")
+  private val pinFile = manifest.get("pin_file").asText
+  private def pinQueries: Map[String, Double] =
+    fields(read(pinFile).get("queries")).map { case (k, v) => k -> v.asDouble }
 
   test("pin envelope exists and pins every registry id") {
-    assert(Files.exists(Paths.get(Bench.PinFile)), s"${Bench.PinFile} missing")
+    assert(Files.exists(Paths.get(pinFile)), s"$pinFile missing")
     val pins = pinQueries
     val missing = Registry.all.map(_.id).filterNot(pins.contains)
     assert(missing.isEmpty,
-      s"registry rows without a pin in ${Bench.PinFile}: $missing")
+      s"registry rows without a pin in $pinFile: $missing")
   }
 
-  test("canaryRef values come verbatim from the pin envelope") {
+  test("Bench loads exactly the canary_rows, each at its pin envelope value") {
+    val loaded = Bench.loadPins()
+    val rows = fields(manifest.get("canary_rows")).keySet
+    assert(rows.size == 16)
+    assert(loaded.canary.keySet == rows)
     val pins = pinQueries
-    Bench.canaryRef.foreach { case (k, v) =>
-      val pinned = pins.getOrElse(k, fail(s"canary row $k not in pin file"))
-      assert(math.abs(pinned - v) < 0.0005,
-        s"canaryRef($k)=$v != pin ${pinned} — re-pin canaryRef from ${Bench.PinFile}")
-    }
-    assert(Bench.canaryRef.size == 16)
+    loaded.canary.foreach { case (k, v) => assert(v == pins(k), k) }
+    assert(loaded.scale == manifest.get("pin_scale_vs_r17").asDouble)
+  }
+
+  test("a canary row the pin envelope does not pin fails the load") {
+    val dir = Files.createTempDirectory("graft_pins")
+    val env = dir.resolve("pin.json")
+    Files.writeString(env, """{"queries":{"agg_corr_covar":0.411}}""")
+    val m = dir.resolve("canary_pins.json")
+    Files.writeString(m, s"""{"pin_file":"$env","pin_scale_vs_r17":1.0,""" +
+      """"canary_rows":{"agg_corr_covar":"a","dedup_cc_clusters":"b"}}""")
+    val e = intercept[IllegalStateException](Bench.loadPins(m.toString))
+    assert(e.getMessage.contains("dedup_cc_clusters"), e.getMessage)
   }
 
   test("canary source tripwire hashes match the working tree") {
-    val txt = Files.readString(Paths.get("tools/canary_pins.json"))
-    val entries = "\"(src/[^\"]+)\":\\s*\"([0-9a-f]{64})\"".r
-      .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toSeq
+    val entries = fields(manifest.get("files")).map { case (k, v) => k -> v.asText }
     assert(entries.nonEmpty, "tools/canary_pins.json lists no file hashes")
     val md = MessageDigest.getInstance("SHA-256")
     val stale = entries.filter { case (path, want) =>
@@ -65,18 +78,22 @@ class BenchPinSpec extends AnyFunSuite {
     }
     assert(stale.isEmpty,
       s"canary-row source files changed without a re-pin ack: " +
-        s"${stale.map(_._1).mkString(", ")} — if the canary rows' " +
+        s"${stale.keys.mkString(", ")} — if the canary rows' " +
         "implementations are genuinely untouched (or the pin envelope was " +
         "re-captured), update the sha256 in tools/canary_pins.json in the " +
         "same commit; check.py --bench enforces the same tripwire")
   }
 
-  test("Bench.PinScale is the pin_scale_vs_r17 in tools/canary_pins.json") {
-    val txt = Files.readString(Paths.get("tools/canary_pins.json"))
-    val pinned = "\"pin_scale_vs_r17\":\\s*([0-9.]+)".r.findFirstMatchIn(txt)
-      .getOrElse(fail("tools/canary_pins.json has no pin_scale_vs_r17"))
-      .group(1).toDouble
-    assert(Bench.PinScale == pinned,
-      s"Bench.PinScale=${Bench.PinScale} but tools/canary_pins.json pins $pinned")
+  test("the run block stamps the session's config") {
+    val run = json.readTree(Bench.runJson(spark))
+    assert(run.get("master").asText == "local[4]")
+    assert(run.get("shuffle_partitions").asInt == 4)
+    assert(run.get("adaptive").asBoolean ==
+      spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    assert(run.get("max_heap_mib").asLong == Runtime.getRuntime.maxMemory >> 20)
+    assert(Option(run.get("extra_jvm")).filterNot(_.isNull).map(_.asText) ==
+      sys.env.get("SPARK_GRAFT_EXTRA_JVM"))
+    assert(run.get("ohagg_fallback_threshold").asInt == 4194304)
+    assert(run.get("git_head").isNull || run.get("git_head").asText.matches("[0-9a-f]{40}"))
   }
 }

@@ -83,5 +83,9 @@ class GraphOpsSpec extends SparkSpec {
       .select(pairHi(col("pk")), pairLo(col("pk")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(back == pairs)
+    // From 2^32 on the low half overflows into the high half: no pair back.
+    val over = intercept[Exception](Seq((1L, 1L << 32)).toDF("pa", "pb")
+      .select(packPair(col("pa"), col("pb"))).collect())
+    assert(over.getMessage.contains("2^32"), over.getMessage)
   }
 }

@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-query state has one home, [[graft.queries.Staged]], and session
-  * set-up one installer, `graft.functions.Native.register`. A concurrent or
-  * weak map declared anywhere else in the engine is a second memo with its
-  * own keying and lifetime, and an install call outside `Q` is a second
-  * install path, so this spec fails on either.
+/** Cross-query state has one home, [[graft.queries.Staged]], session
+  * set-up one installer, `graft.functions.Native.register`, and timing one
+  * harness, [[graft.Bench]]. A concurrent or weak map declared anywhere else
+  * in the engine is a second memo with its own keying and lifetime, an
+  * install call outside `Q` is a second install path, and a `main` outside
+  * the five entry points is a second harness, so this spec fails on each.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
@@ -42,8 +43,7 @@ class SingleMemoSpec extends AnyFunSuite {
   }
 
   test("native functions and strategies are installed only through Q") {
-    val calls = offenders("graft/Registry.scala", "graft/functions/DotProduct.scala",
-      "graft/AnnBatchBench.scala", "graft/AnnBuildBench.scala")(
+    val calls = offenders("graft/Registry.scala", "graft/functions/DotProduct.scala")(
       _.contains("Native.register("))
     assert(calls.isEmpty,
       s"Native.register outside Q: ${calls.mkString(", ")} — Q.run installs " +
@@ -54,5 +54,13 @@ class SingleMemoSpec extends AnyFunSuite {
     assert(strategies.isEmpty,
       s"extraStrategies assigned outside Native: ${strategies.mkString(", ")} " +
         "— add the strategy to Native.strategies instead")
+  }
+
+  test("a main is declared only by the five entry points") {
+    val mains = offenders("graft/Bench.scala", "graft/Verify.scala", "graft/Plans.scala",
+      "graft/PlanDump.scala", "graft/ScaleGen.scala")(_.contains("def main("))
+    assert(mains.isEmpty,
+      s"main outside the entry points: ${mains.mkString(", ")} — time a " +
+        "question with graft.Bench and probe config through SPARK_GRAFT_EXTRA_JVM")
   }
 }

@@ -31,7 +31,7 @@ def main():
     for name, t_small in sorted(small["queries"].items()):
         # A query absent from the big capture (added/removed between runs)
         # is skipped; a PRESENT-but-null timing is a FAILURE at that scale
-        # (the BenchIsolation convention) and must be reported, not dropped —
+        # (a null timing marks a failed run) and must be reported, not dropped —
         # `.get(name) is None` cannot tell the two apart.
         if name not in big["queries"]:
             continue
