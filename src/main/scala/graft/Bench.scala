@@ -22,10 +22,12 @@ object Bench {
     * stamped ratios stay on the r17 scale.
     */
   private[graft] final case class Pins(
-      file: String, scale: Double, canary: Map[String, Double], all: Map[String, Double])
+      file: String, scale: Double, canary: Map[String, Double], all: Map[String, Double],
+      master: Option[String])
 
-  /** Reads `pin_file`, `pin_scale_vs_r17` and `canary_rows` from the
-    * manifest and the reference values from the pin envelope it names. An
+  /** Reads `pin_file`, `pin_scale_vs_r17`, `canary_rows` and `pin_master`
+    * (the Spark master the pin envelope ran on) from the manifest and the
+    * reference values from the pin envelope it names. An
     * unreadable envelope gives empty references (the caller warns); a
     * missing manifest, or a canary row the envelope does not pin, throws.
     */
@@ -39,7 +41,8 @@ object Bench {
     val canary = if (all.isEmpty) Map.empty[String, Double] else
       m.get("canary_rows").properties.asScala.map(_.getKey).map(k => k -> all.getOrElse(k,
         throw new IllegalStateException(s"canary row $k has no pin in $file"))).toMap
-    Pins(file, m.get("pin_scale_vs_r17").asDouble, canary, all)
+    Pins(file, m.get("pin_scale_vs_r17").asDouble, canary, all,
+      Option(m.get("pin_master")).map(_.asText))
   }
 
   /** The config a run measured under, stamped as the envelope's `run`
@@ -97,9 +100,6 @@ object Bench {
       System.err.println(s"[bench] WARNING: ${pins.file} not readable " +
         "from cwd — the capture will lack the drift estimators and " +
         "check.py --bench will reject it; run from the repo root")
-    def loadNow: Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
     // Load gate (VERDICT r17 item 1): an official capture started at load
     // 4+ puts spurious 2-5x spikes on a handful of rows and costs a round
     // of adjudication. Wait (bounded) for the 1-min load to fall under the
@@ -118,23 +118,109 @@ object Bench {
       if (loadNow >= loadGate)
         System.err.println(f"[bench] WARNING: starting loaded (${loadNow}%.2f)")
     }
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
+    // VERDICT r15 item 3: the driver's round capture (BENCH_rNN.json) keeps
+    // only a 2000-char stdout tail, so the full per-query map can never ride
+    // the stdout line (263 keys ≈ 10 KB). Instead, stamp the SAME complete
+    // envelope into a round-numbered file that gets committed — cross-round
+    // per-query comparison reads these, never the log tail. Round number =
+    // 1 + the highest driver-written BENCH_rNN.json present (the driver
+    // writes round N's capture only after this run).
+    // Only a FULL registry run earns the round stamp — a dev-loop
+    // SPARK_GRAFT_ONLY subset must never clobber the committed capture.
+    // Round number: the driver-written BENCH_rNN.json are authoritative
+    // (driver writes round N's capture only after this run → stamp N+1)
+    // but untracked, so on a fresh clone only the committed
+    // BENCH_FULL_rNN.json exist — fall back to their max WITHOUT +1
+    // (max(driver+1, full) is idempotent: re-running the full bench in the
+    // same round re-stamps the same file instead of advancing the round).
+    val roundStamp = if (only.nonEmpty) None
+    else {
+      def maxRound(re: scala.util.matching.Regex): Int =
+        Option(Paths.get(".").toFile.list()).toSeq.flatten
+          .flatMap(f => re.findFirstMatchIn(f).map(_.group(1).toInt))
+          .foldLeft(0)(math.max)
+      val driver = maxRound("^BENCH_r(\\d+)\\.json$".r)
+      val full = maxRound("^BENCH_FULL_r(\\d+)\\.json$".r)
+      val r = math.max(driver + 1, full)
+      if (driver == 0 && full == 0) {
+        System.err.println("[bench] no BENCH_rNN.json/BENCH_FULL_rNN.json " +
+          "in cwd — round stamp skipped (envelope still at " + outPath + ")")
+        None
+      } else if (r != driver + 1 &&
+          Files.exists(Paths.get(f"BENCH_FULL_r$r%02d.json")) &&
+          !sys.env.get("SPARK_GRAFT_RESTAMP").contains("1")) {
+        // ADVICE r17: on a fresh clone (no untracked driver BENCH_rNN.json)
+        // the fallback resolves to the last COMMITTED round — overwriting
+        // that already-recorded capture with a new machine's numbers needs
+        // an explicit opt-in, not a silent clobber. Re-stamping the current
+        // round (r == driver + 1) stays idempotent as before.
+        System.err.println(s"[bench] BENCH_FULL_r$r.json is a committed " +
+          "capture of an already-recorded round (no driver BENCH_rNN.json " +
+          s"says we're in round $r) — refusing to overwrite; set " +
+          "SPARK_GRAFT_RESTAMP=1 to force (envelope still at " + outPath + ")")
+        None
+      } else Some(r)
+    }
+    val fullStamped = roundStamp.map(r => f"BENCH_FULL_r$r%02d.json")
+    val c = capture(spark, sfDir, only, pins, fullStamped)
+    Files.writeString(Paths.get(outPath), c.envelope)
+    fullStamped.foreach(p => Files.writeString(Paths.get(p), c.envelope))
+    // Two stdout lines, same shape: the full per-query map first, then the
+    // compact line (see [[Capture]]). (`run / outputStrategy :=
+    // StdoutOutput` keeps these bare — no `[info] ` prefix — so a
+    // line-oriented JSON scraper can parse them.)
+    println(c.fullLine)
+    println(c.compactLine)
+    spark.stop()
+  }
+
+  /** One capture's outputs: the envelope written to `bench_full.json` (and
+    * the round file), the full stdout line, and the compact final stdout
+    * line (top-15 slowest, 3 dp), which must fit a bounded tail capture of
+    * stdout: the full 277-row map is ~10 KB, and a consumer keeping only
+    * the last ~2 KB would see a truncated JSON line.
+    */
+  private[graft] final case class Capture(
+      envelope: String, fullLine: String, compactLine: String)
+
+  private def loadNow: Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+
+  /** Times the registry rows (all, or the `only` subset) in `spark` and
+    * builds the envelope. `fullStamped` is the round file the envelope will
+    * also be written to, if any; the compact line points to it.
+    */
+  private[graft] def capture(
+      spark: SparkSession, sfDir: String, only: Set[String], pins: Pins,
+      fullStamped: Option[String]): Capture = {
     val loadBefore = loadNow
     // One timed sample. noop sink, not count(): count() lets Catalyst
     // prune every computed column, so map-only queries would be timed as
     // bare scans. The noop sink fully evaluates each output row and
     // discards it. A FAILED sample is +inf, never its (near-zero) elapsed
     // time: a fast failure must not win a min or be summed as a fast row.
+    // Every sample runs under its own JobTally tag, so the envelope can
+    // stamp each row's job count for the sample its time comes from.
     val registry = SparkEntry.queries
+    val tally = new JobTally(spark.sparkContext)
+    val tags = scala.collection.mutable.ArrayBuffer.empty[(String, Double, String)]
     def once(name: String): Double = {
+      val tag = s"$name#${tags.size}"
       val t0 = System.nanoTime()
-      try {
-        registry(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        Double.PositiveInfinity
+      val t = tally.tagged(tag) {
+        try {
+          registry(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Double.PositiveInfinity
+        }
       }
+      tags += ((name, t, tag))
+      t
     }
     // Each query runs twice and reports the MIN: a loaded machine (or a
     // first-run one-off like JIT warm-up / learned-quantizer training,
@@ -179,9 +265,14 @@ object Bench {
     val results = firstPass.map { case (k, v) =>
       k -> retimed.get(k).map(r => math.min(v, r._2)).getOrElse(v)
     }
-    val loadAfter =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
+    // Jobs of each measured row's fastest sample (a failed row has none).
+    val jobs = results.keys.toSeq.sorted.map { k =>
+      k -> tally(tags.filter(t => t._1 == k && !t._2.isInfinity).minBy(_._2)._3)
+    }
+    tally.close()
+    val jobsJson = jobs.map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
+    val jobsTotal = jobs.map(_._2.toLong).sum
+    val loadAfter = loadNow
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -230,10 +321,14 @@ object Bench {
     val allRowRatios = results.toSeq.collect {
       case (k, v) if pins.all.contains(k) => v / pins.all(k) * pins.scale
     }
+    // The pin capture's master beside this run's (`run.master`): a ratio
+    // read across a core-count gap is not machine drift, and
+    // check.py --bench fails a capture whose master differs from it.
+    val pinMaster = s""""pin_master":${pins.master.fold("null")(m => s"\"$m\"")},"""
     val canaryJson = if (canaryRows.size < 8) {
       // A dev-loop subset run can't adjudicate drift — say so explicitly
       // rather than stamping a ratio off 1-2 rows.
-      s""""canary":{"ref_round":22,"n":${canaryRows.size},"ratio":null}"""
+      s""""canary":{"ref_round":22,$pinMaster"n":${canaryRows.size},"ratio":null}"""
     } else {
       val ratio = median(canaryRows.map(_._2)) * pins.scale
       val rows = canaryRows.map { case (k, r) => f""""$k":${r * pins.scale}%.3f""" }
@@ -246,7 +341,7 @@ object Bench {
       }
       val normRatio =
         if (allRowRatios.size < 32) ratio else math.min(ratio, median(allRowRatios))
-      f""""canary":{"ref_round":22,"n":${canaryRows.size},"ratio":$ratio%.3f,""" +
+      f""""canary":{"ref_round":22,$pinMaster"n":${canaryRows.size},"ratio":$ratio%.3f,""" +
         allJson +
         f""""total_drift_normalized":${total / math.max(normRatio, 1.0)}%.3f,""" +
         s""""rows":$rows}"""
@@ -277,71 +372,19 @@ object Bench {
     // instead of flagging them super-linear every round.
     val outLinear = Registry.all.filter(_.outputLinear).map(q => s""""${q.id}"""")
       .mkString("[", ",", "]")
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     val envelope =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
-        s""""queries":$qs,$failedJson"samples":$both,"output_linear":$outLinear,""" +
+        s""""queries":$qs,"jobs":$jobsJson,$failedJson"samples":$both,""" +
+        s""""output_linear":$outLinear,""" +
         s"""$retimeJson$canaryJson,$load,$run,"sf":"$sfDir"}""" + "\n"
-    Files.writeString(Paths.get(outPath), envelope)
-    // VERDICT r15 item 3: the driver's round capture (BENCH_rNN.json) keeps
-    // only a 2000-char stdout tail, so the full per-query map can never ride
-    // the stdout line (263 keys ≈ 10 KB). Instead, stamp the SAME complete
-    // envelope into a round-numbered file that gets committed — cross-round
-    // per-query comparison reads these, never the log tail. Round number =
-    // 1 + the highest driver-written BENCH_rNN.json present (the driver
-    // writes round N's capture only after this run).
-    // Only a FULL registry run earns the round stamp — a dev-loop
-    // SPARK_GRAFT_ONLY subset must never clobber the committed capture.
-    // Round number: the driver-written BENCH_rNN.json are authoritative
-    // (driver writes round N's capture only after this run → stamp N+1)
-    // but untracked, so on a fresh clone only the committed
-    // BENCH_FULL_rNN.json exist — fall back to their max WITHOUT +1
-    // (max(driver+1, full) is idempotent: re-running the full bench in the
-    // same round re-stamps the same file instead of advancing the round).
-    val roundStamp = if (only.nonEmpty) None
-    else {
-      def maxRound(re: scala.util.matching.Regex): Int =
-        Option(Paths.get(".").toFile.list()).toSeq.flatten
-          .flatMap(f => re.findFirstMatchIn(f).map(_.group(1).toInt))
-          .foldLeft(0)(math.max)
-      val driver = maxRound("^BENCH_r(\\d+)\\.json$".r)
-      val full = maxRound("^BENCH_FULL_r(\\d+)\\.json$".r)
-      val r = math.max(driver + 1, full)
-      if (driver == 0 && full == 0) {
-        System.err.println("[bench] no BENCH_rNN.json/BENCH_FULL_rNN.json " +
-          "in cwd — round stamp skipped (envelope still at " + outPath + ")")
-        None
-      } else if (r != driver + 1 &&
-          Files.exists(Paths.get(f"BENCH_FULL_r$r%02d.json")) &&
-          !sys.env.get("SPARK_GRAFT_RESTAMP").contains("1")) {
-        // ADVICE r17: on a fresh clone (no untracked driver BENCH_rNN.json)
-        // the fallback resolves to the last COMMITTED round — overwriting
-        // that already-recorded capture with a new machine's numbers needs
-        // an explicit opt-in, not a silent clobber. Re-stamping the current
-        // round (r == driver + 1) stays idempotent as before.
-        System.err.println(s"[bench] BENCH_FULL_r$r.json is a committed " +
-          "capture of an already-recorded round (no driver BENCH_rNN.json " +
-          s"says we're in round $r) — refusing to overwrite; set " +
-          "SPARK_GRAFT_RESTAMP=1 to force (envelope still at " + outPath + ")")
-        None
-      } else Some(r)
-    }
-    val fullStamped = roundStamp.map(r => f"BENCH_FULL_r$r%02d.json")
-    fullStamped.foreach(p => Files.writeString(Paths.get(p), envelope))
-    // Three stdout lines, same shape: the full per-query map first, then a
-    // compact final line (top-15 slowest, 3 dp) that fits inside a bounded
-    // tail capture of stdout — the full 237-query map is ~10 KB, so a
-    // consumer keeping only the last ~2 KB would otherwise see a truncated
-    // JSON line. (`run / outputStrategy := StdoutOutput` keeps these bare —
-    // no `[info] ` prefix — so a line-oriented JSON scraper can parse them.)
-    println(fullLine)
     val top = results.toSeq.sortBy(-_._2).take(15)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val fullPtr = fullStamped.map(p => s""""full":"$p",""").getOrElse("")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""n":${results.size},$fullPtr$failedJson$canaryJson,"queries":$top,$load,$run,""" +
-      s""""sf":"$sfDir"}""")
-    spark.stop()
+    val compactLine =
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
+        s""""n":${results.size},"jobs_total":$jobsTotal,$fullPtr$failedJson$canaryJson,""" +
+        s""""queries":$top,$load,$run,"sf":"$sfDir"}"""
+    Capture(envelope, fullLine, compactLine)
   }
 }

@@ -757,7 +757,7 @@ object SimOps extends QueryPack {
   private def pqCbLit(cb: Array[Array[Array[Float]]]): Column =
     typedLit(cb.map(_.map(_.toIndexedSeq).toIndexedSeq).toIndexedSeq)
 
-  /** PQ-encode every embedding: (idAlias, code0..codeN). ONE fused
+  /** PQ-encode every embedding: (idAlias, keep..., code0..codeN). ONE fused
     * `graft_pq_encode` kernel (graft.functions.PqEncode) computes all
     * subspace argmins per row — bit-equal to the
     * `array_position(ds, array_min(ds)) - 1` chain over
@@ -770,14 +770,43 @@ object SimOps extends QueryPack {
   private def pqCodesDf(
       e: org.apache.spark.sql.DataFrame,
       cb: Array[Array[Array[Float]]],
-      idAlias: String): org.apache.spark.sql.DataFrame =
+      idAlias: String,
+      keep: String*): org.apache.spark.sql.DataFrame =
     e.select(
-      col("vec_id").as(idAlias),
-      call_function("graft_pq_encode", col("embedding"), pqCbLit(cb)).as("pc"))
+      (col("vec_id").as(idAlias) +: keep.map(col)) :+
+        call_function("graft_pq_encode", col("embedding"), pqCbLit(cb)).as("pc"): _*)
       .select(
-        col(idAlias) +:
+        (col(idAlias) +: keep.map(col)) ++
           (0 until PqSubs).map(si =>
             element_at(col("pc"), si + 1).as(s"code$si")): _*)
+
+  /** `e`'s `vec_id` and `embedding` plus its IVF list order `ls`: the
+    * learned centroids as `struct(dist, cid)`, nearest first, computed in
+    * the projection. `dist` is `|c|^2 - 2 x.c` (`|x - c|^2` minus the
+    * rank-free `|x|^2`), `graft_dot` over the float centroid literals —
+    * the IEEE sequence the DuckDB oracles run. `array_sort` orders the
+    * structs by (dist, cid): the order, ties included, of a per-vector
+    * `row_number` over (dist, cid), since both compare with Spark's one
+    * double ordering. [[listCid]] is the vector's inverted list and
+    * [[probeCid]] the two distinct lists a query probes; no cross join,
+    * window or join back to `e` forms.
+    */
+  private def ivfLists(
+      e: org.apache.spark.sql.DataFrame,
+      cents: Array[Array[Float]]): org.apache.spark.sql.DataFrame = {
+    val x = col("embedding")
+    val ds = cents.zipWithIndex.map { case (c, i) =>
+      val ce = typedLit(c.toIndexedSeq)
+      struct((ndot(ce, ce) - lit(2.0) * ndot(x, ce)).as("dist"), lit(i).as("cid"))
+    }
+    e.select(col("vec_id"), x, array_sort(array(ds.toIndexedSeq: _*)).as("ls"))
+  }
+
+  /** After [[ivfLists]]: the vector's own list, and the two lists a query
+    * probes, one row each.
+    */
+  private val listCid: Column = col("ls")(0)("cid").as("cid")
+  private val probeCid: Column = explode(slice(col("ls"), 1, 2)("cid")).as("cid")
 
   /** Per-query exact 4x16 ADC lookup table as ONE `ARRAY<DOUBLE>` column
     * `lut` (`lut[s*codes + c]`), fused by graft.functions.PqLut —
@@ -956,37 +985,27 @@ object SimOps extends QueryPack {
     // and exact-scores only those candidates. At 100 TB the list id is the
     // partition key — the classic cluster-prune alternative to LSH
     // bucketing — and training cost is one k-means on a sample, O(k*dim)
-    // driver state.
+    // driver state. List assignment and probes come from the projection
+    // ([[ivfLists]]): the row runs one broadcast, the top-k window and the
+    // output order, four jobs in all.
     Q(
       "sim_ann_ivf_topk",
       None,
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-        val learned = graft.ml.Quantizers.ivf(s, dir)
-        val cents = s.createDataFrame(
-          learned.toIndexedSeq.zipWithIndex
-            .map { case (c, i) => (i, c.toIndexedSeq) })
-          .toDF("cid", "ce")
-        // |x - c|^2 - |x|^2 = |c|^2 - 2 x.c  (the |x|^2 term is rank-free)
-        val dists = e.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            (ndot(col("ce"), col("ce")) - lit(2.0) * ndot(col("embedding"), col("ce")))
-              .as("dist"))
-        val wd = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-        val ranked = dists.withColumn("rn", row_number().over(wd))
-        val assigned = ranked.filter(col("rn") === 1)
-          .select(col("vec_id").as("qb"), col("cid"))
-        val probes = ranked.filter(col("vec_id") < 20 && col("rn") <= 2)
-          .select(col("vec_id").as("qa"), col("cid"))
-        val cand = probes.join(assigned, "cid")
-          .filter(col("qa") =!= col("qb"))
-          .select("qa", "qb").distinct()
+        val lists = ivfLists(
+          Tables(s, dir, "embeddings"), graft.ml.Quantizers.ivf(s, dir))
+        // Both sides carry their vectors, so scoring needs no join back.
+        val assigned =
+          lists.select(col("vec_id").as("qb"), col("embedding").as("eb"), listCid)
+        val probes = lists.filter(col("vec_id") < 20)
+          .select(col("vec_id").as("qa"), col("embedding").as("ea"), probeCid)
+        // No distinct: each qb sits in one list and each qa probes two
+        // distinct lists, so every (qa, qb) pair occurs once.
         val ws = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        cand
-          .join(e.select(col("vec_id").as("qa"), col("embedding").as("ea")), "qa")
-          .join(e.select(col("vec_id").as("qb"), col("embedding").as("eb2")), "qb")
+        broadcast(probes).join(assigned, "cid")
+          .filter(col("qa") =!= col("qb"))
           .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb2")), 6)
+            round(ncos(col("ea"), col("eb")), 6)
               .as("cos"))
           .withColumn("rn", row_number().over(ws).cast("int"))
           .filter(col("rn") <= 3)
@@ -1244,28 +1263,15 @@ object SimOps extends QueryPack {
       None,
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
-        val cents = s.createDataFrame(
-          graft.ml.Quantizers.ivf(s, dir).toIndexedSeq.zipWithIndex
-            .map { case (c, i) => (i, c.toIndexedSeq) })
-          .toDF("cid", "ce")
         val cb = graft.ml.Quantizers.pq(s, dir)
-        val dists = e.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("cid"),
-            (ndot(col("ce"), col("ce")) - lit(2.0) * ndot(col("embedding"), col("ce")))
-              .as("dist"))
-        val wd = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-        val ranked = dists.withColumn("rn", row_number().over(wd))
-        val assigned = ranked.filter(col("rn") === 1)
-          .select(col("vec_id").as("qb"), col("cid"))
-        val probes = ranked.filter(col("vec_id") < 20 && col("rn") <= 2)
-          .select(col("vec_id").as("qa"), col("cid"))
+        val lists = ivfLists(e, graft.ml.Quantizers.ivf(s, dir))
         // The persisted index: list id + PQ codes per vector.
-        val codes = pqCodesDf(e, cb, "qb").join(assigned, "qb")
-        val q = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qa"), pqLutCol(cb))
-        // Each query expands to its <=2 probed lists; the join on cid is the
+        val codes = pqCodesDf(
+          lists.select(col("vec_id"), col("embedding"), listCid), cb, "qb", "cid")
+        // Each query expands to its 2 probed lists; the join on cid is the
         // list-prune — candidates never leave their list partition.
-        val probed = probes.join(q, "qa")
+        val probed = lists.filter(col("vec_id") < 20)
+          .select(col("vec_id").as("qa"), pqLutCol(cb), probeCid)
         val wAd = Window.partitionBy("qa").orderBy(col("adist"), col("qb"))
         val shortlist = broadcast(probed).join(codes, "cid")
           .filter(col("qa") =!= col("qb"))

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
@@ -9,7 +10,7 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   * analyzer/optimizer/planner, where a `spark.experimental.extraStrategies`
   * entry plans it to its physical operator.
   *
-  * This accessor is the ONLY non-public Spark API surface the library
+  * These accessors are the ONLY non-public Spark API surface the library
   * touches: `classic.Dataset.ofRows` sits behind `private[sql]`, and the
   * sanctioned alternative (`SparkSessionExtensions`) requires owning
   * session construction, which an embedding host that hands the library an
@@ -27,4 +28,11 @@ object GraftSqlBridge {
     */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[ClassicSession].sessionUUID
+
+  /** Blocks until the listener bus has delivered every queued event
+    * (`SparkContext.listenerBus`, `private[spark]`), so a listener's tally
+    * of the jobs an action just ran is complete when it is read.
+    */
+  def drainListeners(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -21,7 +21,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   *   - every file hash recorded in tools/canary_pins.json matches the
   *     working tree (an un-acknowledged edit to a canary row's source
   *     file must fail loudly here, with the re-pin instructions);
-  *   - the envelope's `run` block reports the session it ran in.
+  *   - the envelope's `run` block reports the session it ran in;
+  *   - the pin capture's master is read and stamped beside `run.master`;
+  *   - a capture stamps each row's job count and their total.
   */
 class BenchPinSpec extends SparkSpec {
 
@@ -51,6 +53,28 @@ class BenchPinSpec extends SparkSpec {
     val pins = pinQueries
     loaded.canary.foreach { case (k, v) => assert(v == pins(k), k) }
     assert(loaded.scale == manifest.get("pin_scale_vs_r17").asDouble)
+  }
+
+  test("Bench reads the pin capture's master") {
+    assert(manifest.get("pin_master").asText == "local[32]")
+    assert(Bench.loadPins().master.contains("local[32]"))
+  }
+
+  test("a subset capture stamps per-row jobs, their total and the pin master") {
+    val rows = Set("scan_parquet_full", "dedup_minhash_udaf")
+    val c = Bench.capture(spark, sf, rows, Bench.loadPins(), None)
+    val env = json.readTree(c.envelope)
+    assert(env.get("failed").isEmpty)
+    val jobs = fields(env.get("jobs")).map { case (k, v) => k -> v.asInt }
+    assert(jobs.keySet == rows)
+    assert(jobs.keySet == fields(env.get("queries")).keySet)
+    assert(jobs.values.forall(_ >= 1), jobs)
+    assert(env.get("canary").get("pin_master").asText == "local[32]")
+    assert(env.get("run").get("master").asText == "local[4]")
+    val compact = json.readTree(c.compactLine)
+    assert(compact.get("jobs_total").asLong == jobs.values.sum)
+    assert(compact.get("canary").get("pin_master").asText == "local[32]")
+    assert(c.compactLine.length < 1800, c.compactLine.length)
   }
 
   test("a canary row the pin envelope does not pin fails the load") {

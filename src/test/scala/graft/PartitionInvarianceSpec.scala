@@ -81,4 +81,17 @@ class PartitionInvarianceSpec extends SparkSpec {
   test("margin knot table (ml_dpo_pair_loss) is partition-invariant") {
     sweep("ml_dpo_pair_loss")
   }
+
+  // Projection-side IVF list assignment: array_sort over (dist, cid)
+  // structs replaces the per-vector row_number window, and the candidate
+  // pairs are no longer deduplicated by a shuffle.
+  test("projection-side IVF lists (sim_ann_ivf_topk) is partition-invariant") {
+    sweep("sim_ann_ivf_topk")
+  }
+
+  // The staged node count: later sweeps read it from the memo, so every
+  // partition count must still see the ranks the first one computed.
+  test("staged node count (graph_pagerank_unrolled) is partition-invariant") {
+    sweep("graph_pagerank_unrolled")
+  }
 }

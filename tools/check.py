@@ -162,6 +162,27 @@ def check_bench_capture(bench_path, oracle_json_path):
               f"no longer match tools/canary_pins.json; either revert, "
               f"or re-pin and update the hash in the same commit")
         sys.exit(1)
+    # Core-count gate: the pin envelope is a capture on `pin_master`; a run
+    # on another master reads its core-count gap as machine drift (a
+    # local[4] capture vs the local[32] pin read 2.1-2.8), so its ratios
+    # are not comparable. A capture from before the `run` stamp cannot be
+    # checked and is said so.
+    pin_master = pins.get("pin_master")
+    if not pin_master:
+        print(f"FAIL bench capture {bench_path}: {pins_path} has no "
+              f"pin_master — the core-count check cannot run")
+        sys.exit(1)
+    run_master = (bench.get("run") or {}).get("master")
+    if run_master is None:
+        master_note = (f"; no run.master stamped (capture predates the run "
+                       f"block), core-count check vs pin {pin_master} skipped")
+    elif run_master != pin_master:
+        print(f"FAIL bench capture {bench_path}: run.master {run_master} "
+              f"differs from the pin's {pin_master} — drift ratios across a "
+              f"core-count gap are not machine drift")
+        sys.exit(1)
+    else:
+        master_note = f"; master {run_master} matches the pin"
     total = bench["value"]
     norm = total / max(cons, 1.0)
     agree = max(ratio, all_ratio) / max(min(ratio, all_ratio), 1e-9)
@@ -188,7 +209,7 @@ def check_bench_capture(bench_path, oracle_json_path):
         sys.exit(1)
     print(f"PASS bench capture: {len(got)} queries cover all "
           f"{len(registry)} registry ids, samples + load averages present; "
-          f"{verdict}")
+          f"{verdict}{master_note}")
     sys.exit(0)
 
 
