@@ -1,5 +1,7 @@
 package graft
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.functions.Native
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.io.File
 import java.nio.file.{Files, Paths}
@@ -48,7 +50,8 @@ object Bench {
   /** The config a run measured under, stamped as the envelope's `run`
     * block: master (hence cpus), the effective shuffle partitions and AQE
     * flag, max heap, `SPARK_GRAFT_EXTRA_JVM` verbatim, the ObjectHashAggregate
-    * fallback threshold and git HEAD (null outside a checkout).
+    * fallback threshold, the codegen cache capacity, the artifact isolation
+    * flag and git HEAD (null outside a checkout).
     */
   private[graft] def runJson(spark: SparkSession): String = {
     val conf = spark.conf
@@ -64,6 +67,8 @@ object Bench {
       .put("extra_jvm", sys.env.get("SPARK_GRAFT_EXTRA_JVM").orNull)
       .put("ohagg_fallback_threshold",
         conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold").toInt)
+      .put("codegen_cache_max_entries", conf.get(Native.CodegenCacheKey).toInt)
+      .put("artifact_isolation", conf.get(Native.IsolationKey).toBoolean)
       .put("git_head", head)
     json.writeValueAsString(run)
   }
@@ -71,10 +76,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // The tables below compile code before the first `Q.run` installs, so
+    // the codegen cache capacity `Native.register` sets would come too
+    // late: the builder passes it (and the isolation flag) up front,
+    // unless a `-D` probe in SPARK_GRAFT_EXTRA_JVM already sets the key.
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(Native.sessionConf.filterNot(kv => sys.props.contains(kv._1)).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Materialize the shared table cache up front so per-query timings
@@ -201,13 +211,16 @@ object Bench {
     // bare scans. The noop sink fully evaluates each output row and
     // discards it. A FAILED sample is +inf, never its (near-zero) elapsed
     // time: a fast failure must not win a min or be summed as a fast row.
-    // Every sample runs under its own JobTally tag, so the envelope can
-    // stamp each row's job count for the sample its time comes from.
+    // Every sample runs under its own JobTally tag and counts the classes
+    // Janino compiled while it ran, so the envelope can stamp each row's
+    // job and compile counts for the sample its time comes from.
     val registry = SparkEntry.queries
     val tally = new JobTally(spark.sparkContext)
-    val tags = scala.collection.mutable.ArrayBuffer.empty[(String, Double, String)]
+    val tags = scala.collection.mutable.ArrayBuffer.empty[(String, Double, String, Long)]
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def once(name: String): Double = {
       val tag = s"$name#${tags.size}"
+      val c0 = compiled
       val t0 = System.nanoTime()
       val t = tally.tagged(tag) {
         try {
@@ -219,7 +232,7 @@ object Bench {
           Double.PositiveInfinity
         }
       }
-      tags += ((name, t, tag))
+      tags += ((name, t, tag, compiled - c0))
       t
     }
     // Each query runs twice and reports the MIN: a loaded machine (or a
@@ -265,13 +278,18 @@ object Bench {
     val results = firstPass.map { case (k, v) =>
       k -> retimed.get(k).map(r => math.min(v, r._2)).getOrElse(v)
     }
-    // Jobs of each measured row's fastest sample (a failed row has none).
-    val jobs = results.keys.toSeq.sorted.map { k =>
-      k -> tally(tags.filter(t => t._1 == k && !t._2.isInfinity).minBy(_._2)._3)
+    // Jobs and compiles of each measured row's fastest sample (a failed
+    // row has none).
+    val fastest = results.keys.toSeq.sorted.map { k =>
+      k -> tags.filter(t => t._1 == k && !t._2.isInfinity).minBy(_._2)
     }
+    val jobs = fastest.map { case (k, t) => k -> tally(t._3).toLong }
     tally.close()
-    val jobsJson = jobs.map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
-    val jobsTotal = jobs.map(_._2.toLong).sum
+    val compiles = fastest.map { case (k, t) => k -> t._4 }
+    def counts(xs: Seq[(String, Long)]): String =
+      xs.map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
+    val jobsTotal = jobs.map(_._2).sum
+    val compilesTotal = compiles.map(_._2).sum
     val loadAfter = loadNow
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -374,7 +392,8 @@ object Bench {
       .mkString("[", ",", "]")
     val envelope =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
-        s""""queries":$qs,"jobs":$jobsJson,$failedJson"samples":$both,""" +
+        s""""queries":$qs,"jobs":${counts(jobs)},"compiles":${counts(compiles)},""" +
+        s"""$failedJson"samples":$both,""" +
         s""""output_linear":$outLinear,""" +
         s"""$retimeJson$canaryJson,$load,$run,"sf":"$sfDir"}""" + "\n"
     val top = results.toSeq.sortBy(-_._2).take(15)
@@ -383,7 +402,8 @@ object Bench {
     val fullPtr = fullStamped.map(p => s""""full":"$p",""").getOrElse("")
     val compactLine =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-        s""""n":${results.size},"jobs_total":$jobsTotal,$fullPtr$failedJson$canaryJson,""" +
+        s""""n":${results.size},"jobs_total":$jobsTotal,"compiles_total":$compilesTotal,""" +
+        s"""$fullPtr$failedJson$canaryJson,""" +
         s""""queries":$top,$load,$run,"sf":"$sfDir"}"""
     Capture(envelope, fullLine, compactLine)
   }

@@ -23,7 +23,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   *     file must fail loudly here, with the re-pin instructions);
   *   - the envelope's `run` block reports the session it ran in;
   *   - the pin capture's master is read and stamped beside `run.master`;
-  *   - a capture stamps each row's job count and their total.
+  *   - a capture stamps each row's job and compile counts and their totals.
   */
 class BenchPinSpec extends SparkSpec {
 
@@ -69,10 +69,15 @@ class BenchPinSpec extends SparkSpec {
     assert(jobs.keySet == rows)
     assert(jobs.keySet == fields(env.get("queries")).keySet)
     assert(jobs.values.forall(_ >= 1), jobs)
+    val compiles = fields(env.get("compiles")).map { case (k, v) => k -> v.asLong }
+    assert(compiles.keySet == rows)
+    assert(compiles.values.forall(_ >= 0), compiles)
     assert(env.get("canary").get("pin_master").asText == "local[32]")
     assert(env.get("run").get("master").asText == "local[4]")
     val compact = json.readTree(c.compactLine)
     assert(compact.get("jobs_total").asLong == jobs.values.sum)
+    assert(compact.get("compiles_total").asLong == compiles.values.sum)
+    assert(compact.get("run").get("codegen_cache_max_entries").asInt == 1024)
     assert(compact.get("canary").get("pin_master").asText == "local[32]")
     assert(c.compactLine.length < 1800, c.compactLine.length)
   }
@@ -118,6 +123,8 @@ class BenchPinSpec extends SparkSpec {
     assert(Option(run.get("extra_jvm")).filterNot(_.isNull).map(_.asText) ==
       sys.env.get("SPARK_GRAFT_EXTRA_JVM"))
     assert(run.get("ohagg_fallback_threshold").asInt == 4194304)
+    assert(run.get("codegen_cache_max_entries").asInt == 1024)
+    assert(!run.get("artifact_isolation").asBoolean)
     assert(run.get("git_head").isNull || run.get("git_head").asText.matches("[0-9a-f]{40}"))
   }
 }

@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * in the engine is a second memo with its own keying and lifetime, an
   * install call outside `Q` is a second install path, and a `main` outside
   * the five entry points is a second harness, so this spec fails on each.
+  * The warm-run conf keys `Native.register` installs and `Bench` passes to
+  * its builder have one source too, `Native.sessionConf`.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
@@ -62,5 +64,14 @@ class SingleMemoSpec extends AnyFunSuite {
     assert(mains.isEmpty,
       s"main outside the entry points: ${mains.mkString(", ")} — time a " +
         "question with graft.Bench and probe config through SPARK_GRAFT_EXTRA_JVM")
+  }
+
+  test("the warm-run conf keys are spelled only in Native") {
+    val found = offenders("graft/functions/DotProduct.scala")(line =>
+      line.contains("spark.sql.codegen.cache.maxEntries") ||
+        line.contains("spark.sql.artifact.isolation.enabled"))
+    assert(found.isEmpty,
+      s"warm-run conf keys outside Native: ${found.mkString(", ")} — read " +
+        "Native.CodegenCacheKey, Native.IsolationKey or Native.sessionConf")
   }
 }
