@@ -2,11 +2,12 @@ package graft.queries
 
 import graft.{Q, QueryPack, Tables}
 import graft.Fns._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
+import scala.jdk.CollectionConverters._
 
 /** SURVEY.md §2.I — streaming over `events`.
   *
@@ -18,6 +19,10 @@ import org.apache.spark.sql.types.DecimalType
   * `stream_late_data_policy` is a true Structured Streaming run
   * (Trigger.AvailableNow + watermark, append mode) and is bench/smoke only.
   * The batch/stream twin pairing is asserted in StreamingTwinSpec.
+  *
+  * Every true-streaming row runs through [[StreamingQueries.runToEnd]]
+  * (memory-sink rows through [[StreamingQueries.drainToMemory]]), whose
+  * Scaladoc states the stream-run rule.
   */
 object StreamingQueries extends QueryPack {
 
@@ -60,23 +65,25 @@ object StreamingQueries extends QueryPack {
     p
   }
 
-  /** Run a true-streaming body with a state-store-sized shuffle-partition
-    * count. Stateful micro-batch queries pay per-partition state-store
-    * overhead (one store + checkpoint delta per partition per batch); the
-    * demo streams hold only a few thousand keys, so 32 partitions are pure
-    * overhead, while at production volume this knob is exactly the one a
-    * real deployment sizes to its key cardinality. The stream executes
-    * eagerly inside `body` (awaitTermination), so restoring the conf after
-    * cannot affect results.
+  /** State-store partitions of every true-streaming row. Stateful
+    * micro-batch queries pay per-partition state-store overhead (one store
+    * + checkpoint delta per partition per batch); the demo streams hold
+    * only a few thousand keys, so 32 partitions are pure overhead, while at
+    * production volume this is exactly the knob a real deployment sizes to
+    * its key cardinality.
     */
-  /** `graft.stream.partitions`, when set, overrides every streaming row's
-    * built-in state-store partition count — the knob
+  private val StreamPartitions = 2
+
+  /** Run a true-streaming row body with [[StreamPartitions]] shuffle
+    * partitions, or with `graft.stream.partitions` when set — the knob
     * PartitionInvarianceSpec sweeps to prove the emitted set does not
-    * depend on state-store parallelism.
+    * depend on state-store parallelism. The stream executes eagerly inside
+    * `body` ([[runToEnd]]), so restoring the conf after cannot affect
+    * results.
     */
-  private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+  private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
     val eff = s.conf.getOption("graft.stream.partitions")
-      .map(_.toInt).getOrElse(n)
+      .map(_.toInt).getOrElse(StreamPartitions)
     withStreamConfs(s, "spark.sql.shuffle.partitions" -> eff.toString)(body)
   }
 
@@ -90,6 +97,62 @@ object StreamingQueries extends QueryPack {
     try body
     finally olds.foreach { case (k, o) =>
       o.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
+  /** The one way a stream runs here. Every `writeStream` ends in this
+    * call, which
+    *  - checkpoints to `ckpt`: a fresh scratch dir unless the caller
+    *    shares one across legs of a restart;
+    *  - triggers `AvailableNow`: drain what the source holds now, then stop;
+    *  - starts the query and waits for it to finish, so the sink holds the
+    *    row's whole output when this returns and a stream row is an eager
+    *    DataFrame builder like any batch row.
+    * A memory-sink run goes through [[drainToMemory]], which also drops the
+    * temp view the sink registers, after resolving it.
+    */
+  private[graft] def runToEnd[T](
+      w: DataStreamWriter[T],
+      ckpt: String = scratchDir("graft_stream_ckpt").toString): StreamingQuery = {
+    val q = w.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
+
+  /** A finished memory-sink run: its output rows, and the query for its
+    * `recentProgress`.
+    */
+  private[graft] final case class Drained(rows: DataFrame, query: StreamingQuery)
+
+  /** [[runToEnd]] into Spark's memory sink. The sink registers its output
+    * as a temp view named after the query; the view is resolved, then
+    * dropped, so nothing stays in the session catalog. The resolved plan
+    * keeps its reference to the sink, so the rows live exactly as long as
+    * the returned DataFrame.
+    */
+  private[graft] def drainToMemory[T](
+      s: SparkSession, ds: Dataset[T], mode: String,
+      ckpt: String = scratchDir("graft_stream_ckpt").toString): Drained = {
+    val name = s"mem_${Scratch.newTag()}"
+    val q = runToEnd(
+      ds.writeStream.queryName(name).outputMode(mode).format("memory"), ckpt)
+    val rows = s.table(name)
+    s.catalog.dropTempView(name)
+    Drained(rows, q)
+  }
+
+  /** Writes `df` as ONE parquet file under `dir` and returns that file: the
+    * unit a file-stream source reads per trigger under `maxFilesPerTrigger`.
+    */
+  private[graft] def writeSingleParquet(
+      df: DataFrame, dir: String): java.nio.file.Path = {
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try ls.iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no parquet part in $dir"))
+    finally ls.close()
   }
 
   /** Staged per-event-type spools for the stream-stream family: all four
@@ -127,18 +190,14 @@ object StreamingQueries extends QueryPack {
     * and streamed from there. At scale the spool is the landing zone a real
     * pipeline would already have.
     */
-  private[graft] def eventsStream(
-      s: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+  private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val batch = Tables(s, dir, "events")
     val spool = Staged.memo(s, dir, "stream/events_spool") {
       val p = scratchDir("graft_events_spool").toString
       batch.write.mode("overwrite").parquet(p)
       p
     }
-    val r = s.readStream.schema(batch.schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(spool)
+    s.readStream.schema(batch.schema).parquet(spool)
   }
 
   def queries: Seq[Q] = Seq(
@@ -324,12 +383,10 @@ object StreamingQueries extends QueryPack {
              |FROM r, mx
              |WHERE NOT (rn = 1 AND t_end > mts - INTERVAL 30 MINUTE)
              |ORDER BY user_id, s_start""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         import s.implicits._
         import graft.streaming.Sessionize
-        val sink = s"sess_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_sess_ckpt").toString
-        val q = eventsStream(s, dir)
+        val sessions = eventsStream(s, dir)
           .withWatermark("ts", "0 seconds")
           .select("user_id", "ts", "event_id")
           .as[Sessionize.Ev]
@@ -338,15 +395,8 @@ object StreamingQueries extends QueryPack {
             org.apache.spark.sql.streaming.OutputMode.Append,
             org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
             Sessionize.apply)
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink).oracleOrder("user_id", "s_start")
+        drainToMemory(s, sessions, "append").rows
+          .oracleOrder("user_id", "s_start")
       }),
 
     // Online CUSUM drift alarms (VERDICT r18 item 8): the STREAMING twin
@@ -383,12 +433,10 @@ object StreamingQueries extends QueryPack {
              |  CAST(event_id AS BIGINT) AS event_id, ROUND(s, 6) AS cusum
              |FROM c WHERE s > 300.0 AND sp <= 300.0
              |ORDER BY user_id, event_id""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         import s.implicits._
         import graft.streaming.CusumAlert
-        val sink = s"cusum_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_cusum_ckpt").toString
-        val q = eventsStream(s, dir)
+        val alarms = eventsStream(s, dir)
           .withWatermark("ts", "0 seconds")
           .select("user_id", "ts", "event_id", "value")
           .as[CusumAlert.Ev]
@@ -397,19 +445,11 @@ object StreamingQueries extends QueryPack {
             org.apache.spark.sql.streaming.OutputMode.Append,
             org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
             CusumAlert.apply)
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         // 6-dp presentation round happens HERE (Spark's own round, the
         // same one the batch row uses) — the state machine emits the raw
         // fold value, so no hand-rolled rounding can drift from the
         // engines' shared ROUND semantics.
-        s.table(sink)
+        drainToMemory(s, alarms, "append").rows
           .select(col("user_id"), col("event_id"),
             round(col("cusum"), 6).as("cusum"))
           .oracleOrder("user_id", "event_id")
@@ -425,12 +465,9 @@ object StreamingQueries extends QueryPack {
       Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS ws,
              |  CAST(COUNT(*) AS BIGINT) AS n
              |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
-        val out = Scratch.register(
-          s"${System.getProperty("java.io.tmpdir")}/graft_feb_sink_" +
-            java.util.UUID.randomUUID.toString.replace("-", ""))
-        val ckpt = scratchDir("graft_feb_ckpt").toString
-        val q = eventsStream(s, dir)
+      (s, dir) => withStreamPartitions(s) {
+        val out = Scratch.path("graft_feb_sink")
+        runToEnd(eventsStream(s, dir)
           .groupBy(window(col("ts"), "1 hour"))
           .agg(cnt.as("n"))
           .select(
@@ -440,11 +477,7 @@ object StreamingQueries extends QueryPack {
           .outputMode("complete")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("overwrite").parquet(out)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         s.read.parquet(out).oracleOrder("ws")
       }),
 
@@ -495,7 +528,7 @@ object StreamingQueries extends QueryPack {
              |UNION ALL SELECT * FROM unmatched_v
              |UNION ALL SELECT * FROM unmatched_c
              |ORDER BY view_id NULLS FIRST, click_id""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         val views = typedEventsStream(s, dir, "view")
           .select(
             col("event_id").as("view_id"), col("user_id"),
@@ -506,24 +539,13 @@ object StreamingQueries extends QueryPack {
             col("event_id").as("click_id"), col("user_id").as("c_user"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "1 day")
-        val sink = s"ssfo_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_ssfo_ckpt").toString
-        val q = views
-          .join(
-            clicks,
-            col("user_id") === col("c_user") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
-            "full_outer")
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+        val joined = views.join(
+          clicks,
+          col("user_id") === col("c_user") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
+          "full_outer")
+        drainToMemory(s, joined, "append").rows
           .select(
             col("view_id"), col("click_id"),
             coalesce(col("user_id"), col("c_user")).as("user_id"),
@@ -563,7 +585,7 @@ object StreamingQueries extends QueryPack {
              |SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
              |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 4) AS s
              |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         val base = Tables(s, dir, "orders")
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
         // Stage the three key-disjoint change batches (single-file
@@ -581,13 +603,8 @@ object StreamingQueries extends QueryPack {
           val cdc = upd.unionAll(ins)
           val stage = scratchDir("graft_cdc_batches")
           (0 until 3).map { b =>
-            val p = stage.resolve(s"batch$b").toString
-            cdc.filter(pmod(col("o_orderkey"), lit(3)) === b)
-              .coalesce(1).write.parquet(p)
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.list(java.nio.file.Paths.get(p)).iterator()
-              .asScala.find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"no parquet part in $p"))
+            writeSingleParquet(cdc.filter(pmod(col("o_orderkey"), lit(3)) === b),
+              stage.resolve(s"batch$b").toString)
           }
         }
         val run = scratchDir("graft_cdc_run").toString
@@ -615,7 +632,7 @@ object StreamingQueries extends QueryPack {
           java.nio.file.Files.copy(
             f, java.nio.file.Paths.get(log, s"batch$i.parquet"))
         }
-        val q = s.readStream
+        runToEnd(s.readStream
           .schema(s.read.parquet(batches.head.toString).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(log)
@@ -641,11 +658,7 @@ object StreamingQueries extends QueryPack {
                 .localCheckpoint()
               merged.write.mode("overwrite").parquet(part)
             }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, ckpt)
         s.read.parquet(target)
           .groupBy("o_orderstatus")
           .agg(cnt.as("n"), round(dsum(col("o_totalprice")), 4).as("s"))
@@ -672,8 +685,7 @@ object StreamingQueries extends QueryPack {
       Some("""SELECT o_orderpriority AS pri, CAST(COUNT(*) AS BIGINT) AS n,
              |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 4) AS s
              |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
-        import org.apache.spark.sql.types.DecimalType
+      (s, dir) => withStreamPartitions(s) {
         // Stage the two-file ordered spool:
         // part-0 = the 90% snapshot batch, part-1 = the 10% delta batch
         // (lexicographic names pin arrival order — the file source breaks
@@ -686,13 +698,8 @@ object StreamingQueries extends QueryPack {
           Seq(orders.filter(col("o_orderkey") % 10 =!= 0),
               orders.filter(col("o_orderkey") % 10 === 0))
             .zipWithIndex.foreach { case (df, i) =>
-              val tmp = scratchDir(s"graft_aggview_stage$i").toString
-              df.coalesce(1).write.mode("overwrite").parquet(tmp)
-              import scala.jdk.CollectionConverters._
-              val part = java.nio.file.Files.list(
-                  java.nio.file.Paths.get(tmp)).iterator().asScala
-                .find(_.getFileName.toString.endsWith(".parquet"))
-                .getOrElse(sys.error(s"no parquet part in $tmp"))
+              val part = writeSingleParquet(
+                df, scratchDir(s"graft_aggview_stage$i").toString)
               java.nio.file.Files.move(
                 part, java.nio.file.Paths.get(p, s"part-$i.parquet"))
             }
@@ -705,7 +712,7 @@ object StreamingQueries extends QueryPack {
           df.groupBy("pri").agg(
             cnt.as("n"),
             sum(col("o_totalprice").cast(DecimalType(18, 6))).as("s"))
-        val q = s.readStream
+        runToEnd(s.readStream
           .schema(s.read.parquet(spool).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(spool)
@@ -730,11 +737,7 @@ object StreamingQueries extends QueryPack {
                 .localCheckpoint()
               merged.write.mode("overwrite").parquet(view)
             }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, ckpt)
         s.read.parquet(view)
           .select(col("pri"), col("n"),
             round(col("s").cast("double"), 4).as("s"))
@@ -759,7 +762,7 @@ object StreamingQueries extends QueryPack {
              |         + (CASE WHEN MIN(day(ts)) <= 20 THEN 1 ELSE 0 END) AS INT)
              |    AS n_versions
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         // One file per generation so the stream genuinely tails the log
         // incrementally (3 micro-batches), not as one bulk load.
         val logDir = Staged.memo(s, dir, "stream/metrics_spool") {
@@ -777,9 +780,7 @@ object StreamingQueries extends QueryPack {
           }
           p
         }
-        val sink = s"mem_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_metrics_ckpt").toString
-        val q = s.readStream
+        val served = s.readStream
           .schema("name STRING, bucket DATE, value DOUBLE, epoch INT")
           .option("maxFilesPerTrigger", "1")
           .parquet(logDir)
@@ -787,15 +788,7 @@ object StreamingQueries extends QueryPack {
           .agg(
             max_by(col("value"), col("epoch")).as("value"),
             cnt.cast("int").as("n_versions"))
-          .writeStream
-          .queryName(sink)
-          .outputMode("complete")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink).oracleOrder("name", "bucket")
+        drainToMemory(s, served, "complete").rows.oracleOrder("name", "bucket")
       }),
 
     // Restart/recovery across process generations — THE operational
@@ -824,7 +817,7 @@ object StreamingQueries extends QueryPack {
              |     (SELECT DISTINCT event_type, date_trunc('month', ts) FROM events))
              |    AS run2_input_rows
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         val base = scratchDir("graft_restart").toString
         val logDir = s"$base/log"
         val ckpt = s"$base/ckpt" // SHARED across both legs — the point
@@ -838,20 +831,14 @@ object StreamingQueries extends QueryPack {
         val genFiles = Staged.memo(s, dir, "stream/restart_gens") {
           val stage = scratchDir("graft_restart_gens")
           Seq(10 -> 1, 20 -> 2, 31 -> 3, 31 -> 4).map { case (maxDay, e) =>
-            val p = stage.resolve(s"gen$e").toString
-            Tables(s, dir, "events")
+            writeSingleParquet(Tables(s, dir, "events")
               .filter(dayofmonth(col("ts")) <= maxDay)
               .groupBy(
                 col("event_type").as("name"),
                 date_trunc("month", col("ts")).cast("date").as("bucket"))
               .agg(cnt.cast("double").as("value"))
-              .withColumn("epoch", lit(e))
-              .coalesce(1)
-              .write.parquet(p)
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.list(java.nio.file.Paths.get(p)).iterator()
-              .asScala.find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"no parquet part in $p"))
+              .withColumn("epoch", lit(e)),
+              stage.resolve(s"gen$e").toString)
           }
         }
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(logDir))
@@ -859,32 +846,20 @@ object StreamingQueries extends QueryPack {
           java.nio.file.Files.copy(
             genFiles(epoch - 1),
             java.nio.file.Paths.get(logDir, s"gen$epoch.parquet"))
-        def runLeg(sink: String) = {
-          val q = s.readStream
-            .schema("name STRING, bucket DATE, value DOUBLE, epoch INT")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(logDir)
-            .groupBy("name", "bucket")
-            .agg(
-              max_by(col("value"), col("epoch")).as("value"),
-              cnt.cast("int").as("n_versions"))
-            .writeStream
-            .queryName(sink)
-            .outputMode("complete")
-            .format("memory")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q
-        }
+        def runLeg() = drainToMemory(s, s.readStream
+          .schema("name STRING, bucket DATE, value DOUBLE, epoch INT")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(logDir)
+          .groupBy("name", "bucket")
+          .agg(
+            max_by(col("value"), col("epoch")).as("value"),
+            cnt.cast("int").as("n_versions")), "complete", ckpt)
         Seq(1, 2, 3).foreach(emitGeneration)
-        val uid = java.util.UUID.randomUUID.toString.replace("-", "")
-        runLeg(s"restart1_$uid")
+        runLeg()
         emitGeneration(4) // the "restarted trainer" emits a new epoch
-        val leg2 = runLeg(s"restart2_$uid")
-        val run2Rows = leg2.recentProgress.map(_.numInputRows).sum
-        s.table(s"restart2_$uid")
+        val leg2 = runLeg()
+        val run2Rows = leg2.query.recentProgress.map(_.numInputRows).sum
+        leg2.rows
           .withColumn("run2_input_rows", lit(run2Rows).cast("long"))
           .oracleOrder("name", "bucket")
       }),
@@ -901,24 +876,14 @@ object StreamingQueries extends QueryPack {
              |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS sum_v
              |FROM events JOIN customer ON user_id = c_custkey
              |GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         val dim = Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"))
-        val sink = s"sse_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_sse_ckpt").toString
-        val q = eventsStream(s, dir)
+        val segments = eventsStream(s, dir)
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy("c_mktsegment")
           .agg(cnt.as("n"), round(dsum(col("value")), 4).as("sum_v"))
-          .writeStream
-          .queryName(sink)
-          .outputMode("complete")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink).oracleOrder("c_mktsegment")
+        drainToMemory(s, segments, "complete").rows.oracleOrder("c_mktsegment")
       }),
 
     // Stream-stream inner join — the hardest stateful operator Structured
@@ -947,7 +912,7 @@ object StreamingQueries extends QueryPack {
       // it: their null rows only emit in that batch).
       // withStreamPartitions (not a raw shuffle-partitions conf) so the
       // graft.stream.partitions sweep knob covers this row too.
-      (s, dir) => withStreamPartitions(s, 2) { withStreamConfs(
+      (s, dir) => withStreamPartitions(s) { withStreamConfs(
         s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         val views = typedEventsStream(s, dir, "view")
           .select(
@@ -959,23 +924,12 @@ object StreamingQueries extends QueryPack {
             col("event_id").as("click_id"), col("user_id").as("c_user"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "1 day")
-        val sink = s"ssj_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_ssj_ckpt").toString
-        val q = views
-          .join(
-            clicks,
-            col("user_id") === col("c_user") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"))
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+        val joined = views.join(
+          clicks,
+          col("user_id") === col("c_user") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"))
+        drainToMemory(s, joined, "append").rows
           .select(
             col("view_id"), col("click_id"), col("user_id"),
             (unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
@@ -1028,7 +982,7 @@ object StreamingQueries extends QueryPack {
              |SELECT * FROM matched
              |UNION ALL SELECT * FROM unmatched
              |ORDER BY view_id, click_id""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         val views = typedEventsStream(s, dir, "view")
           .select(
             col("event_id").as("view_id"), col("user_id"),
@@ -1039,24 +993,13 @@ object StreamingQueries extends QueryPack {
             col("event_id").as("click_id"), col("user_id").as("c_user"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "1 day")
-        val sink = s"sslo_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_sslo_ckpt").toString
-        val q = views
-          .join(
-            clicks,
-            col("user_id") === col("c_user") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
-            "left_outer")
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+        val joined = views.join(
+          clicks,
+          col("user_id") === col("c_user") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
+          "left_outer")
+        drainToMemory(s, joined, "append").rows
           .select(
             col("view_id"), col("click_id"), col("user_id"),
             (unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
@@ -1101,7 +1044,7 @@ object StreamingQueries extends QueryPack {
              |SELECT * FROM matched
              |UNION ALL SELECT * FROM unmatched_c
              |ORDER BY view_id NULLS FIRST, click_id""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
+      (s, dir) => withStreamPartitions(s) {
         val views = typedEventsStream(s, dir, "view")
           .select(
             col("event_id").as("view_id"), col("user_id").as("v_user"),
@@ -1112,24 +1055,13 @@ object StreamingQueries extends QueryPack {
             col("event_id").as("click_id"), col("user_id"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "1 day")
-        val sink = s"ssro_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_ssro_ckpt").toString
-        val q = views
-          .join(
-            clicks,
-            col("user_id") === col("v_user") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
-            "right_outer")
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+        val joined = views.join(
+          clicks,
+          col("user_id") === col("v_user") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
+          "right_outer")
+        drainToMemory(s, joined, "append").rows
           .select(
             col("view_id"), col("click_id"), col("user_id"),
             (unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
@@ -1160,23 +1092,13 @@ object StreamingQueries extends QueryPack {
              |FROM agg, mx
              |WHERE epoch_us(w_start) + 3600000000 <= wm_us
              |ORDER BY ws, event_type""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
-        val sink = s"mem_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_stream_ckpt").toString
-        val q = eventsStream(s, dir)
+      (s, dir) => withStreamPartitions(s) {
+        val windows = eventsStream(s, dir)
           .withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(cnt.as("n"))
           .select(col("window.start").as("ws"), col("event_type"), col("n"))
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink)
+        drainToMemory(s, windows, "append").rows
           .select(
             date_format(col("ws"), "yyyy-MM-dd HH:mm:ss").as("ws"),
             col("event_type"), col("n"))
@@ -1212,31 +1134,21 @@ object StreamingQueries extends QueryPack {
              |FROM agg, mx
              |WHERE epoch_us(w_start) + 3600000000 <= wm_us
              |ORDER BY ws""".stripMargin),
-      (s, dir) => withStreamPartitions(s, 2) {
-        val sink = s"mem_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        val ckpt = scratchDir("graft_stream_ckpt").toString
-        val q = eventsStream(s, dir)
+      (s, dir) => withStreamPartitions(s) {
+        val approx = drainToMemory(s, eventsStream(s, dir)
           .withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(approx_count_distinct(col("user_id")).as("approx_users"))
           .select(
             date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
-            col("approx_users"))
-          .writeStream
-          .queryName(sink)
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            col("approx_users")), "append").rows
         val exact = Tables(s, dir, "events")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(countDistinct(col("user_id")).cast("long").as("exact_users"))
           .select(
             date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
             col("exact_users"))
-        s.table(sink)
+        approx
           .join(exact, "ws")
           .select(
             col("ws"), col("exact_users"),

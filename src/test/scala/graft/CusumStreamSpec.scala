@@ -72,34 +72,28 @@ class CusumStreamSpec extends SparkSpec {
     */
   test("multi-batch time-ordered replay equals the batch onsets") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.queries.StreamingQueries.{drainToMemory, scratchDir, writeSingleParquet}
     import graft.streaming.CusumAlert
     val rows = Tables(spark, sf, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._2.getTime, t._3))
-    val spool = java.nio.file.Files.createTempDirectory("cusum_mb").toString
+    val spool = scratchDir("cusum_mb").toString
     val n = rows.length
     require(n >= 3)
     (0 until 3).foreach { i =>
       val slice = rows.slice(i * n / 3, (i + 1) * n / 3).toSeq
-      val tmp = java.nio.file.Files.createTempDirectory("cusum_mb_part")
-      slice.toDF("user_id", "ts", "event_id", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS")).head
+      val part = writeSingleParquet(
+        slice.toDF("user_id", "ts", "event_id", "value"),
+        scratchDir("cusum_mb_part").toString)
       // Lexicographic name == arrival order: the file source breaks
       // equal-mod-time ties by path.
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(part),
-        java.nio.file.Paths.get(s"$spool/part-$i.parquet"))
+      java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$spool/part-$i.parquet"))
     }
     val schema = Tables(spark, sf, "events")
       .select("user_id", "ts", "event_id", "value").schema
-    val sink = s"cusum_mb_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val ckpt = java.nio.file.Files.createTempDirectory("cusum_mb_ckpt").toString
-    val q = spark.readStream.schema(schema)
+    val run = drainToMemory(spark, spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(spool)
       .withWatermark("ts", "0 seconds")
       .as[CusumAlert.Ev]
@@ -107,18 +101,10 @@ class CusumStreamSpec extends SparkSpec {
       .flatMapGroupsWithState(
         org.apache.spark.sql.streaming.OutputMode.Append,
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        CusumAlert.apply)
-      .writeStream
-      .queryName(sink)
-      .outputMode("append")
-      .format("memory")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        CusumAlert.apply), "append")
+    val dataBatches = run.query.recentProgress.count(_.numInputRows > 0)
     assert(dataBatches >= 3, s"expected >=3 data micro-batches, got $dataBatches")
-    val got = spark.table(sink)
+    val got = run.rows
       .select(col("user_id"), col("event_id"), round(col("cusum"), 6).as("c"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

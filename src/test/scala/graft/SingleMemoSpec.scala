@@ -13,28 +13,56 @@ import org.scalatest.funsuite.AnyFunSuite
   * install call outside `Q` is a second install path, and a `main` outside
   * the five entry points is a second harness, so this spec fails on each.
   * The warm-run conf keys `Native.register` installs and `Bench` passes to
-  * its builder have one source too, `Native.sessionConf`.
+  * its builder have one source too, `Native.sessionConf`, and a stream runs
+  * one way, through `StreamingQueries.runToEnd`.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
+
+  /** `file:line` of every Scala source line under `tree` matching `hit`
+    * (paths relative to `tree`).
+    */
+  private def hits(tree: Path)(hit: String => Boolean): List[String] = {
+    val walk = Files.walk(tree)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p: Path =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if hit(line) => s"${tree.relativize(p)}:${i + 1}"
+        }
+      }.toList
+    finally walk.close()
+  }
 
   /** `file:line` of every main source line matching `hit`, outside the
     * `allowed` files (paths relative to `src/main/scala`).
     */
   private def offenders(allowed: String*)(hit: String => Boolean): List[String] = {
     allowed.foreach(a => assert(Files.exists(root.resolve(a)), a))
-    val walk = Files.walk(root)
-    try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => allowed.exists(a => p.endsWith(Paths.get(a))))
-      .flatMap { p: Path =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if hit(line) => s"${root.relativize(p)}:${i + 1}"
-        }
-      }.toList
-    finally walk.close()
+    hits(root)(hit).filterNot(h => allowed.exists(a => h.startsWith(s"$a:")))
   }
+
+  /** The spellings of a stream run and of a fresh unique name, each with
+    * the one file that may hold it, once: the stream-run helper in
+    * StreamingQueries, and `Scratch.newTag`.
+    */
+  private val oneHome = Seq(
+    "Trigger.AvailableNow()" -> "graft/queries/StreamingQueries.scala",
+    """.format("memory")""" -> "graft/queries/StreamingQueries.scala",
+    "awaitTermination()" -> "graft/queries/StreamingQueries.scala",
+    "randomUUID" -> "graft/queries/Scratch.scala")
+
+  /** `spelling -> file:line` of every use of a [[oneHome]] spelling under
+    * `tree`, unless it is the single use, in its home file.
+    */
+  private def inlinedRuns(tree: Path): List[(String, String)] =
+    oneHome.toList.flatMap { case (token, home) =>
+      hits(tree)(_.contains(token)) match {
+        case List(h) if h.startsWith(s"$home:") => Nil
+        case found => found.map(token -> _)
+      }
+    }
 
   test("no memo map is declared outside queries/Staged.scala") {
     val found = offenders("graft/queries/Staged.scala")(line =>
@@ -73,5 +101,40 @@ class SingleMemoSpec extends AnyFunSuite {
     assert(found.isEmpty,
       s"warm-run conf keys outside Native: ${found.mkString(", ")} — read " +
         "Native.CodegenCacheKey, Native.IsolationKey or Native.sessionConf")
+  }
+
+  test("a stream is run, and a unique name drawn, in one place") {
+    val found = inlinedRuns(root)
+    assert(found.isEmpty,
+      s"stream run or UUID outside its helper: ${found.mkString(", ")} — run " +
+        "a stream with StreamingQueries.runToEnd or drainToMemory, and draw " +
+        "a name with Scratch.newTag")
+  }
+
+  test("the one-place rule flags a stream run inlined back into a row") {
+    val tree = Files.createTempDirectory("single_run")
+    try {
+      val queries = tree.resolve("graft/queries")
+      Files.createDirectories(queries)
+      for (f <- Seq("StreamingQueries.scala", "Scratch.scala"))
+        Files.copy(root.resolve(s"graft/queries/$f"), queries.resolve(f))
+      assert(inlinedRuns(tree).isEmpty)
+      val inlined =
+        """        val sink = s"mem_${java.util.UUID.randomUUID.toString}"
+          |        val q = eventsStream(s, dir).writeStream
+          |          .queryName(sink).outputMode("append").format("memory")
+          |          .option("checkpointLocation", ckpt)
+          |          .trigger(Trigger.AvailableNow())
+          |          .start()
+          |        q.awaitTermination()
+          |""".stripMargin
+      Files.writeString(queries.resolve("StreamingQueries.scala"), inlined,
+        java.nio.file.StandardOpenOption.APPEND)
+      assert(inlinedRuns(tree).map(_._1).toSet == oneHome.map(_._1).toSet)
+    } finally {
+      val walk = Files.walk(tree)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
+import graft.queries.StreamingQueries.{drainToMemory, eventsStream}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming twins (SURVEY.md §5.2.5): each oracle-checked batch window
   * aggregation must emit the same window set when run as a real Structured
@@ -10,28 +10,28 @@ import org.apache.spark.sql.streaming.Trigger
   */
 class StreamingTwinSpec extends SparkSpec {
 
-  private def runStream(
-      agg: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory(s"twin_$name").toString
-    val qy = agg.writeStream
-      .queryName(name)
-      .outputMode("complete")
-      .format("memory")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    qy.awaitTermination()
-    spark.table(name)
+  private def runStream(agg: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    drainToMemory(spark, agg, "complete").rows
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("memory-sink stream rows leave no temp view in the session catalog") {
+    val before = tempViews()
+    for (id <- Seq("stream_static_enrich", "stream_restart_exactly_once"))
+      assert(Registry.byId(id).run(spark, sf).collect().nonEmpty, id)
+    val left = tempViews() -- before
+    assert(left.isEmpty, s"stream runs left temp views behind: $left")
   }
 
   test("tumbling window counts: streaming == batch") {
-    val stream = graft.queries.StreamingQueries.eventsStream(spark, sf)
+    val stream = eventsStream(spark, sf)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
         col("event_type"), col("n"))
-    val got = runStream(stream, "twin_tumbling").orderBy("ws", "event_type")
+    val got = runStream(stream).orderBy("ws", "event_type")
       .collect().toSeq
     val want = Registry.byId("stream_tumbling_counts").run(spark, sf)
       .select("ws", "event_type", "n").collect().toSeq
@@ -39,24 +39,24 @@ class StreamingTwinSpec extends SparkSpec {
   }
 
   test("sliding window counts: streaming == batch") {
-    val stream = graft.queries.StreamingQueries.eventsStream(spark, sf)
+    val stream = eventsStream(spark, sf)
       .groupBy(window(col("ts"), "1 hour", "30 minutes"))
       .agg(count(lit(1)).as("n"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
         col("n"))
-    val got = runStream(stream, "twin_sliding").orderBy("ws").collect().toSeq
+    val got = runStream(stream).orderBy("ws").collect().toSeq
     val want = Registry.byId("stream_sliding_windows").run(spark, sf)
       .collect().toSeq
     assert(got == want)
   }
 
   test("streaming dedup keeps exactly the distinct event ids") {
-    val stream = graft.queries.StreamingQueries.eventsStream(spark, sf)
+    val stream = eventsStream(spark, sf)
       .withWatermark("ts", "1 day")
       .dropDuplicates("event_id")
       .groupBy().agg(count(lit(1)).as("n"))
-    val got = runStream(stream, "twin_dedup").collect().head.getLong(0)
+    val got = runStream(stream).collect().head.getLong(0)
     val want = Tables(spark, sf, "events").select("event_id").distinct().count()
     assert(got == want)
   }
@@ -187,27 +187,19 @@ class StreamingTwinSpec extends SparkSpec {
   /** Final-batch total state rows of a started streaming DataFrame. */
   private def finalStateRows(
       df: org.apache.spark.sql.DataFrame, name: String): Long = {
-    val ckpt = java.nio.file.Files.createTempDirectory(s"sb_$name").toString
-    val qy = df.writeStream
-      .queryName(name)
-      .outputMode("append")
-      .format("memory")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    qy.awaitTermination()
+    val qy = drainToMemory(spark, df, "append").query
     val withState = qy.recentProgress.filter(_.stateOperators.nonEmpty)
     assert(withState.nonEmpty, s"$name reported no stateful progress")
     withState.last.stateOperators.map(_.numRowsTotal).sum
   }
 
   test("stream-stream join state is watermark-bounded: only unexpired rows remain buffered") {
-    val views = graft.queries.StreamingQueries.eventsStream(spark, sf)
+    val views = eventsStream(spark, sf)
       .filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"),
         col("ts").as("v_ts"))
       .withWatermark("v_ts", "1 day")
-    val clicks = graft.queries.StreamingQueries.eventsStream(spark, sf)
+    val clicks = eventsStream(spark, sf)
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
@@ -247,7 +239,7 @@ class StreamingTwinSpec extends SparkSpec {
     // requires the event-time column in the key set) — the scale-correct
     // streaming dedup is dropDuplicatesWithinWatermark, whose state rows
     // carry expiresAt = ts + delay and evict once the watermark passes it.
-    val deduped = graft.queries.StreamingQueries.eventsStream(spark, sf)
+    val deduped = eventsStream(spark, sf)
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
     val stateRows = finalStateRows(deduped, "sb_dedup")
