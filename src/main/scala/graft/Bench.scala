@@ -73,6 +73,30 @@ object Bench {
     json.writeValueAsString(run)
   }
 
+  /** The round a full capture stamps as `BENCH_FULL_rNN.json`, from the
+    * cwd's file names and the `SPARK_GRAFT_RESTAMP` opt-in, or why it
+    * stamps none. The driver-written BENCH_rNN.json are authoritative
+    * (the driver writes round N's capture only after this run → stamp
+    * N+1) but untracked, so on a fresh clone only the committed
+    * BENCH_FULL_rNN.json exist and the round falls back to their max.
+    * A BENCH_FULL_rNN.json already in the cwd is a recorded capture:
+    * overwriting it with another machine's numbers needs the opt-in.
+    */
+  private[graft] def stampRound(files: Seq[String], restamp: Boolean): Either[String, Int] = {
+    def maxRound(re: scala.util.matching.Regex): Int =
+      files.flatMap(f => re.findFirstMatchIn(f).map(_.group(1).toInt))
+        .foldLeft(0)(math.max)
+    val driver = maxRound("^BENCH_r(\\d+)\\.json$".r)
+    val full = maxRound("^BENCH_FULL_r(\\d+)\\.json$".r)
+    val r = math.max(driver + 1, full)
+    val stamped = f"BENCH_FULL_r$r%02d.json"
+    if (driver == 0 && full == 0) Left("no BENCH_rNN.json/BENCH_FULL_rNN.json in cwd")
+    else if (files.contains(stamped) && !restamp)
+      Left(s"$stamped is a recorded capture — refusing to overwrite; set " +
+        "SPARK_GRAFT_RESTAMP=1 to force")
+    else Right(r)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -133,45 +157,19 @@ object Bench {
     // only a 2000-char stdout tail, so the full per-query map can never ride
     // the stdout line (263 keys ≈ 10 KB). Instead, stamp the SAME complete
     // envelope into a round-numbered file that gets committed — cross-round
-    // per-query comparison reads these, never the log tail. Round number =
-    // 1 + the highest driver-written BENCH_rNN.json present (the driver
-    // writes round N's capture only after this run).
-    // Only a FULL registry run earns the round stamp — a dev-loop
-    // SPARK_GRAFT_ONLY subset must never clobber the committed capture.
-    // Round number: the driver-written BENCH_rNN.json are authoritative
-    // (driver writes round N's capture only after this run → stamp N+1)
-    // but untracked, so on a fresh clone only the committed
-    // BENCH_FULL_rNN.json exist — fall back to their max WITHOUT +1
-    // (max(driver+1, full) is idempotent: re-running the full bench in the
-    // same round re-stamps the same file instead of advancing the round).
-    val roundStamp = if (only.nonEmpty) None
-    else {
-      def maxRound(re: scala.util.matching.Regex): Int =
-        Option(Paths.get(".").toFile.list()).toSeq.flatten
-          .flatMap(f => re.findFirstMatchIn(f).map(_.group(1).toInt))
-          .foldLeft(0)(math.max)
-      val driver = maxRound("^BENCH_r(\\d+)\\.json$".r)
-      val full = maxRound("^BENCH_FULL_r(\\d+)\\.json$".r)
-      val r = math.max(driver + 1, full)
-      if (driver == 0 && full == 0) {
-        System.err.println("[bench] no BENCH_rNN.json/BENCH_FULL_rNN.json " +
-          "in cwd — round stamp skipped (envelope still at " + outPath + ")")
-        None
-      } else if (r != driver + 1 &&
-          Files.exists(Paths.get(f"BENCH_FULL_r$r%02d.json")) &&
-          !sys.env.get("SPARK_GRAFT_RESTAMP").contains("1")) {
-        // ADVICE r17: on a fresh clone (no untracked driver BENCH_rNN.json)
-        // the fallback resolves to the last COMMITTED round — overwriting
-        // that already-recorded capture with a new machine's numbers needs
-        // an explicit opt-in, not a silent clobber. Re-stamping the current
-        // round (r == driver + 1) stays idempotent as before.
-        System.err.println(s"[bench] BENCH_FULL_r$r.json is a committed " +
-          "capture of an already-recorded round (no driver BENCH_rNN.json " +
-          s"says we're in round $r) — refusing to overwrite; set " +
-          "SPARK_GRAFT_RESTAMP=1 to force (envelope still at " + outPath + ")")
-        None
-      } else Some(r)
-    }
+    // per-query comparison reads these, never the log tail. Only a FULL
+    // registry run earns the round stamp — a dev-loop SPARK_GRAFT_ONLY
+    // subset must never clobber the committed capture.
+    val roundStamp =
+      if (only.nonEmpty) None
+      else stampRound(Option(Paths.get(".").toFile.list()).toSeq.flatten,
+          sys.env.get("SPARK_GRAFT_RESTAMP").contains("1")) match {
+        case Right(r) => Some(r)
+        case Left(why) =>
+          System.err.println(s"[bench] $why — round stamp skipped " +
+            s"(envelope still at $outPath)")
+          None
+      }
     val fullStamped = roundStamp.map(r => f"BENCH_FULL_r$r%02d.json")
     val c = capture(spark, sfDir, only, pins, fullStamped)
     Files.writeString(Paths.get(outPath), c.envelope)

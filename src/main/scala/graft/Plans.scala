@@ -111,19 +111,15 @@ object Plans {
       // executed-rows differential), but the dump alone would read as if
       // the mechanism were off. Disable the cosmetic rewrite for this one
       // dump (VERDICT r16 item 5).
-      val bucketConf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val savedBucketConf = spark.conf.getOption(bucketConf)
-      if (id == "sink_bucket_pruning") spark.conf.set(bucketConf, "false")
-      // try/finally (ADVICE r17): a throwing run()/explainString must not
-      // leave the conf disabled for every later headline dump.
-      val plan =
-        try {
-          val df = Registry.byId(id).run(spark, sfDir)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        } finally if (id == "sink_bucket_pruning")
-          savedBucketConf.fold(spark.conf.unset(bucketConf))(
-            spark.conf.set(bucketConf, _))
+      val bucketOff =
+        if (id == "sink_bucket_pruning")
+          Seq("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
+        else Nil
+      val plan = graft.queries.Confs.scoped(spark, bucketOff: _*) {
+        val df = Registry.byId(id).run(spark, sfDir)
+        df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
       sb.append(s"\n## $id\n\n```\n$plan```\n")
       if (id == "join_cbo_reorder") {
         // The registry row executes eagerly inside the CBO scope and
@@ -133,7 +129,7 @@ object Plans {
         val t = graft.queries.Joins.cboTables(spark, sfDir)
         val sql = graft.queries.Joins.cboSql(t)
         val syntax = spark.sql(sql).queryExecution.optimizedPlan.treeString
-        val stats = graft.queries.Joins.withCbo(spark)(
+        val stats = graft.queries.Confs.scoped(spark, graft.queries.Joins.CboConfs: _*)(
           spark.sql(sql).queryExecution.optimizedPlan.treeString)
         sb.append(s"\n### join_cbo_reorder — optimized logical plan, CBO off (syntax order)\n\n```\n$syntax```\n")
         sb.append(s"\n### join_cbo_reorder — optimized logical plan, CBO on (stats-driven reorder)\n\n```\n$stats```\n")

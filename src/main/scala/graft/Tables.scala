@@ -52,17 +52,18 @@ object Tables {
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    // Session-wide, not scoped: the parquet reader reads it when the lazily
+    // cached scan executes, after any scope would have closed.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Scope NTZ-off to the events read: other tables (lineitem dates) must
     // keep their naive NTZ reading — the oracle compares them naive-to-naive.
     // The schema is resolved eagerly at spark.read time, so restoring the
     // conf right after does not affect the returned DataFrame.
-    val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val prevNtz = spark.conf.get(ntzKey, "true")
-    if (name == "events") spark.conf.set(ntzKey, "false")
-    val raw =
-      try spark.read.parquet(s"$sfDir/$name.parquet")
-      finally spark.conf.set(ntzKey, prevNtz)
+    val ntzOff =
+      if (name == "events") Seq("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+      else Nil
+    val raw = graft.queries.Confs.scoped(spark, ntzOff: _*)(
+      spark.read.parquet(s"$sfDir/$name.parquet"))
     if (name == "events") {
       raw.schema("ts").dataType match {
         case LongType =>

@@ -259,9 +259,11 @@ object Aggregations extends QueryPack {
       // DataFrame rollup+grouping() combination trips Spark 4's ambiguous-
       // self-join detector on reused cached dims; SQL resolution does not.
       (s, dir) => {
-        Seq("customer", "nation", "region")
-          .foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
-        s.sql("""SELECT r_name, n_name,
+        val views = Seq("customer", "nation", "region")
+        views.foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
+        // Dropped once s.sql has analyzed the query, through the session
+        // catalog, which leaves the cached Tables frame cached.
+        try s.sql("""SELECT r_name, n_name,
                 |  CAST(GROUPING(r_name) AS INT) AS g_r, CAST(GROUPING(n_name) AS INT) AS g_n,
                 |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS sum_bal,
                 |  CAST(COUNT(*) AS BIGINT) AS n
@@ -270,6 +272,7 @@ object Aggregations extends QueryPack {
                 |JOIN region ON n_regionkey = r_regionkey
                 |GROUP BY ROLLUP(r_name, n_name)
                 |ORDER BY g_r, g_n, r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin)
+        finally views.foreach(s.sessionState.catalog.dropTempView)
       }),
 
     // one_hot as conditional aggregation (explicit SUM(CASE ...) both sides

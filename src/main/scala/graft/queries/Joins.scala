@@ -64,29 +64,91 @@ object Joins extends QueryPack {
        |WHERE nt.n_name IN ('NATION_3', 'NATION_7')
        |GROUP BY n_name ORDER BY n_name""".stripMargin
 
-  /** Run `body` with cost-based optimization + stats-driven join reorder
-    * on, restoring both keys after. The body must EXECUTE its plan inside
-    * the scope (localCheckpoint) — a lazily-returned DataFrame would be
-    * re-optimized with CBO off when the harness writes it.
+  /** Cost-based optimization and stats-driven join reorder, the confs
+    * `join_cbo_reorder` runs [[cboSql]] under (through [[Confs.scoped]]).
     */
-  private[graft] def withCbo[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val olds = keys.map(k => k -> s.conf.getOption(k))
-    keys.foreach(s.conf.set(_, "true"))
-    try body
-    finally olds.foreach { case (k, o) =>
-      o.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  private[graft] val CboConfs = Seq(
+    "spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true")
+
+  /** AQE skew-join thresholds low enough that `join_skew_aqe`'s hot key
+    * splits at test scale; [[skewJoin]] runs under them.
+    */
+  private[graft] val SkewConfs = Seq(
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB")
+
+  /** `join_skew_aqe`'s join: every `l_orderkey` not divisible by 4 lands on
+    * one hot key. Run it under [[SkewConfs]]; PlanShapeSpec reads the skew
+    * split in AQE's final plan.
+    */
+  private[graft] def skewJoin(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val hotL = when(col("l_orderkey") % 4 =!= 0, lit(0L))
+      .otherwise(col("l_orderkey"))
+    val hotO = when(col("o_orderkey") % 4 =!= 0, lit(0L))
+      .otherwise(col("o_orderkey"))
+    // Skew splitting carves a hot reduce partition along MAP-task
+    // boundaries — with the whole fact in one cached partition (one
+    // mapper) there is nothing to carve, so spread the map side the way a
+    // real multi-file fact table already is.
+    val f = Tables(s, dir, "lineitem")
+      .select(hotL.as("hk"), col("l_extendedprice"))
+      .repartition(8)
+    // Materialize the dim first: OptimizeSkewedJoin only matches
+    // SMJ(Sort(ShuffleStage), Sort(ShuffleStage)) — an aggregation between
+    // its own shuffle and the join blocks the rewrite, and a materialized
+    // relation that PRESERVES hash partitioning on the join key skips the
+    // join-side exchange entirely. Round-robin repartition before the
+    // checkpoint discards that partitioning, so the join inserts fresh
+    // ENSURE_REQUIREMENTS shuffles on both sides — the exact shape the
+    // skew rule can split.
+    val d = Tables(s, dir, "orders")
+      .select(hotO.as("hk"))
+      .groupBy("hk").agg(cnt.as("n_orders"))
+      .repartition(4)
+      .localCheckpoint()
+    f.join(d.hint("merge"), "hk")
+      .groupBy(when(col("hk") === 0, 1).otherwise(0).as("is_hot"))
+      .agg(
+        cnt.as("n"),
+        dsum(col("l_extendedprice")).as("s"),
+        max("n_orders").cast("long").as("max_orders"))
+      .oracleOrder("is_hot")
   }
 
-  /** Final executed plan of the last `join_skew_aqe` materialization —
-    * captured inside the query because the skew-enabled execution happens
-    * eagerly under the temporarily-lowered AQE thresholds (PlanShapeSpec
-    * asserts the skew split on this string).
+  /** Runtime bloom-filter thresholds for `join_bloom_runtime_filter`:
+    * the application side's scan must look > 10 GB for the rule to
+    * consider it worthwhile, which is exactly true at production scale and
+    * false at sf0.1. [[bloomJoin]] runs under them.
     */
-  @volatile private[graft] var lastSkewPlan: String = ""
+  private[graft] val BloomConfs = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  @volatile private[graft] var lastBloomPlan: String = ""
+  /** `join_bloom_runtime_filter`'s join. Both sides scan fresh parquet (not
+    * the session cache) because the rule sizes real scans, not
+    * InMemoryRelations.
+    */
+  private[graft] def bloomJoin(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val fact = s.read.parquet(s"$dir/lineitem.parquet")
+      .select("l_partkey", "l_extendedprice")
+    val dim = s.read.parquet(s"$dir/part.parquet")
+      .filter(col("p_size") === 1)
+      .select("p_partkey", "p_brand")
+    fact
+      .join(dim, col("l_partkey") === col("p_partkey"))
+      .groupBy("p_brand")
+      .agg(cnt.as("n"), dsum(col("l_extendedprice")).as("revenue"))
+      .oracleOrder("p_brand")
+  }
 
   /** Exact revenue sum on the long fast path: price and discount are
     * exact 2-dp decimals, so price·(1−disc) is an exact multiple of 1e-4
@@ -154,9 +216,12 @@ object Joins extends QueryPack {
              |JOIN region   ON n_regionkey = r_regionkey
              |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
       (s, dir) => {
-        for (t <- Seq("lineitem", "orders", "customer", "nation", "region"))
-          Tables(s, dir, t).createOrReplaceTempView(s"graft_$t")
-        s.sql("""SELECT r_name, CAST(year(o_orderdate) AS INT) AS o_year,
+        val tables = Seq("lineitem", "orders", "customer", "nation", "region")
+        tables.foreach(t => Tables(s, dir, t).createOrReplaceTempView(s"graft_$t"))
+        // s.sql analyzes eagerly, so the views can go once it returns. The
+        // session catalog drops a view alone: `s.catalog.dropTempView`
+        // would also uncache its plan, here the cached Tables frame.
+        try s.sql("""SELECT r_name, CAST(year(o_orderdate) AS INT) AS o_year,
                 |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
                 |  CAST(COUNT(*) AS BIGINT) AS n
                 |FROM graft_lineitem
@@ -165,6 +230,7 @@ object Joins extends QueryPack {
                 |JOIN graft_nation   ON c_nationkey = n_nationkey
                 |JOIN graft_region   ON n_regionkey = r_regionkey
                 |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+        finally tables.foreach(t => s.sessionState.catalog.dropTempView(s"graft_$t"))
       }),
 
     Q(
@@ -435,9 +501,10 @@ object Joins extends QueryPack {
     // (hint merge), and AQE's runtime skew handling splits the hot shuffle
     // partition into advisory-sized chunks (plan-asserted in PlanShapeSpec)
     // — no manual salting of the JOIN needed. The skew thresholds are
-    // lowered only while THIS query materializes (eager cache + restore),
-    // because test/bench partitions are far below the production 256 MB
-    // default; at real scale the defaults fire the same path.
+    // lowered only inside this row's conf scope, and the join executes
+    // there (localCheckpoint), as the Confs.scoped rule requires; test and
+    // bench partitions are far below the production 256 MB default, and
+    // at real scale the defaults fire the same path.
     Q(
       "join_skew_aqe",
       Some("""WITH f AS (SELECT CASE WHEN l_orderkey % 4 <> 0 THEN 0 ELSE l_orderkey END AS hk,
@@ -450,113 +517,25 @@ object Joins extends QueryPack {
              |  CAST(MAX(d.n_orders) AS BIGINT) AS max_orders
              |FROM f JOIN d ON f.hk = d.hk
              |GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) => {
-        val skewConfs = Seq(
-          "spark.sql.adaptive.skewJoin.enabled" -> "true",
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
-          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB")
-        val saved = skewConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-        skewConfs.foreach { case (k, v) => s.conf.set(k, v) }
-        try {
-          val hotL = when(col("l_orderkey") % 4 =!= 0, lit(0L))
-            .otherwise(col("l_orderkey"))
-          val hotO = when(col("o_orderkey") % 4 =!= 0, lit(0L))
-            .otherwise(col("o_orderkey"))
-          // Skew splitting carves a hot reduce partition along MAP-task
-          // boundaries — with the whole fact in one cached partition (one
-          // mapper) there is nothing to carve, so spread the map side the
-          // way a real multi-file fact table already is.
-          val f = Tables(s, dir, "lineitem")
-            .select(hotL.as("hk"), col("l_extendedprice"))
-            .repartition(8)
-          // Materialize the dim first: OptimizeSkewedJoin only matches
-          // SMJ(Sort(ShuffleStage), Sort(ShuffleStage)) — an aggregation
-          // between its own shuffle and the join blocks the rewrite, and a
-          // cached relation that PRESERVES hash partitioning on the join
-          // key skips the join-side exchange entirely. Round-robin
-          // repartition before caching discards that partitioning, so the
-          // join inserts fresh ENSURE_REQUIREMENTS shuffles on both sides —
-          // the exact shape the skew rule can split.
-          val d = Tables(s, dir, "orders")
-            .select(hotO.as("hk"))
-            .groupBy("hk").agg(cnt.as("n_orders"))
-            .repartition(4)
-            .cache()
-          d.count()
-          val out = f.join(d.hint("merge"), "hk")
-            .groupBy(when(col("hk") === 0, 1).otherwise(0).as("is_hot"))
-            .agg(
-              cnt.as("n"),
-              dsum(col("l_extendedprice")).as("s"),
-              max("n_orders").cast("long").as("max_orders"))
-            .oracleOrder("is_hot")
-          // Pin the skew-enabled execution in the cache: count() runs the
-          // join eagerly while the lowered thresholds are in force, and the
-          // returned (lazy) DataFrame re-reads the cached 2-row aggregate
-          // instead of repeating the join under restored confs. No rows
-          // cross the driver — the result stays distributed.
-          out.cache()
-          out.count()
-          // The materialized InMemoryRelation prints its cached plan — the
-          // resolved adaptive plan with the skew split — as an inner child.
-          lastSkewPlan = out.queryExecution.executedPlan.toString
-            .split("== Initial Plan ==").head
-          out
-        } finally saved.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-      }),
+      (s, dir) =>
+        Confs.scoped(s, SkewConfs: _*)(skewJoin(s, dir).localCheckpoint())),
 
     // Runtime bloom-filter pruning (Spark's InjectRuntimeFilter): a
     // selective dim filter (p_size = 1 keeps ~2% of parts) builds a bloom
     // filter of surviving join keys at runtime, and the fact side applies
     // `might_contain` BEFORE its shuffle — at 100 TB this is the difference
     // between shuffling the whole fact table and shuffling the ~2% that can
-    // join. Thresholds are lowered only while THIS query materializes
-    // (same eager cache+count pinning as the skew demo): the application
-    // side's scan must look > 10 GB for the rule to consider it worthwhile,
-    // which is exactly true at production scale and false at sf0.1. Both
-    // sides scan fresh parquet (not the session cache) because the rule
-    // sizes real scans, not InMemoryRelations.
+    // join. Thresholds are lowered only inside this row's conf scope, and
+    // the join executes there (localCheckpoint), as the Confs.scoped rule
+    // requires.
     Q(
       "join_bloom_runtime_filter",
       Some("""SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n,
              |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
              |FROM lineitem JOIN part ON l_partkey = p_partkey
              |WHERE p_size = 1 GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) => {
-        val confs = Seq(
-          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-        confs.foreach { case (k, v) => s.conf.set(k, v) }
-        try {
-          val fact = s.read.parquet(s"$dir/lineitem.parquet")
-            .select("l_partkey", "l_extendedprice")
-          val dim = s.read.parquet(s"$dir/part.parquet")
-            .filter(col("p_size") === 1)
-            .select("p_partkey", "p_brand")
-          val out = fact
-            .join(dim, col("l_partkey") === col("p_partkey"))
-            .groupBy("p_brand")
-            .agg(cnt.as("n"), dsum(col("l_extendedprice")).as("revenue"))
-            .oracleOrder("p_brand")
-          // Pin the bloom-enabled execution in the cache (count() runs the
-          // join eagerly under the lowered thresholds; the returned lazy
-          // DataFrame re-reads the tiny cached aggregate).
-          out.cache()
-          out.count()
-          lastBloomPlan = out.queryExecution.executedPlan.toString
-          out
-        } finally saved.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-      }),
+      (s, dir) =>
+        Confs.scoped(s, BloomConfs: _*)(bloomJoin(s, dir).localCheckpoint())),
 
     // Keyless range join, bucketized: "events within ±5 min of each error"
     // has NO equi key — naively a BroadcastNestedLoopJoin, the O(n·m)
@@ -773,6 +752,6 @@ object Joins extends QueryPack {
              |GROUP BY n_name ORDER BY n_name""".stripMargin),
       (s, dir) => {
         val t = cboTables(s, dir)
-        withCbo(s) { s.sql(cboSql(t)).localCheckpoint() }
+        Confs.scoped(s, CboConfs: _*)(s.sql(cboSql(t)).localCheckpoint())
       }))
 }

@@ -77,26 +77,16 @@ object StreamingQueries extends QueryPack {
   /** Run a true-streaming row body with [[StreamPartitions]] shuffle
     * partitions, or with `graft.stream.partitions` when set — the knob
     * PartitionInvarianceSpec sweeps to prove the emitted set does not
-    * depend on state-store parallelism. The stream executes eagerly inside
-    * `body` ([[runToEnd]]), so restoring the conf after cannot affect
+    * depend on state-store parallelism — plus any row-specific `kvs`, all
+    * in one [[Confs.scoped]] scope. The stream executes eagerly inside
+    * `body` ([[runToEnd]]), so restoring the confs after cannot affect
     * results.
     */
-  private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
+  private def withStreamPartitions[T](
+      s: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val eff = s.conf.getOption("graft.stream.partitions")
       .map(_.toInt).getOrElse(StreamPartitions)
-    withStreamConfs(s, "spark.sql.shuffle.partitions" -> eff.toString)(body)
-  }
-
-  /** Scoped conf overrides for an eagerly-executed streaming body; every
-    * key is restored (or unset) after, so nothing leaks session-wide.
-    */
-  private def withStreamConfs[T](
-      s: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally olds.foreach { case (k, o) =>
-      o.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    Confs.scoped(s, ("spark.sql.shuffle.partitions" -> eff.toString) +: kvs: _*)(body)
   }
 
   /** The one way a stream runs here. Every `writeStream` ends in this
@@ -912,7 +902,7 @@ object StreamingQueries extends QueryPack {
       // it: their null rows only emit in that batch).
       // withStreamPartitions (not a raw shuffle-partitions conf) so the
       // graft.stream.partitions sweep knob covers this row too.
-      (s, dir) => withStreamPartitions(s) { withStreamConfs(
+      (s, dir) => withStreamPartitions(
         s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         val views = typedEventsStream(s, dir, "view")
           .select(
@@ -935,7 +925,7 @@ object StreamingQueries extends QueryPack {
             (unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
               .as("delta_us"))
           .oracleOrder("view_id", "click_id")
-      } }),
+      }),
 
     // Stream-stream LEFT OUTER join — the completion of the stream-join
     // family and the hardest emission semantics Structured Streaming has:

@@ -23,7 +23,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   *     file must fail loudly here, with the re-pin instructions);
   *   - the envelope's `run` block reports the session it ran in;
   *   - the pin capture's master is read and stamped beside `run.master`;
-  *   - a capture stamps each row's job and compile counts and their totals.
+  *   - a capture stamps each row's job and compile counts and their totals;
+  *   - a full run stamps no round whose BENCH_FULL_rNN.json is already
+  *     recorded, unless SPARK_GRAFT_RESTAMP opts in.
   */
 class BenchPinSpec extends SparkSpec {
 
@@ -111,6 +113,15 @@ class BenchPinSpec extends SparkSpec {
         "implementations are genuinely untouched (or the pin envelope was " +
         "re-captured), update the sha256 in tools/canary_pins.json in the " +
         "same commit; check.py --bench enforces the same tripwire")
+  }
+
+  test("a full run does not overwrite a recorded round capture") {
+    val cwd = Seq("BENCH_r22.json", "BENCH_FULL_r23.json")
+    assert(Bench.stampRound(cwd, restamp = false).isLeft)
+    assert(Bench.stampRound(cwd, restamp = true) == Right(23))
+    assert(Bench.stampRound(cwd :+ "BENCH_r23.json", restamp = false) == Right(24))
+    assert(Bench.stampRound(Seq("BENCH_FULL_r23.json"), restamp = false).isLeft)
+    assert(Bench.stampRound(Seq("README.md"), restamp = true).isLeft)
   }
 
   test("the run block stamps the session's config") {

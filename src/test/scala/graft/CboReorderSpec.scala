@@ -19,7 +19,8 @@ class CboReorderSpec extends SparkSpec {
     val sql = queries.Joins.cboSql(t)
     val plan =
       if (cbo)
-        queries.Joins.withCbo(spark)(spark.sql(sql).queryExecution.optimizedPlan)
+        queries.Confs.scoped(spark, queries.Joins.CboConfs: _*)(
+          spark.sql(sql).queryExecution.optimizedPlan)
       else spark.sql(sql).queryExecution.optimizedPlan
     plan.collectLeaves().collect {
       case r: LogicalRelation =>
@@ -42,7 +43,8 @@ class CboReorderSpec extends SparkSpec {
     val t = queries.Joins.cboTables(spark, sf)
     val sql = queries.Joins.cboSql(t)
     val plain = spark.sql(sql).collect().toSeq
-    val cbo = queries.Joins.withCbo(spark)(spark.sql(sql).localCheckpoint())
+    val cbo = queries.Confs.scoped(spark, queries.Joins.CboConfs: _*)(
+      spark.sql(sql).localCheckpoint())
       .collect().toSeq
     assert(plain == cbo)
   }

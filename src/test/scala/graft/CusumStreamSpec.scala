@@ -48,11 +48,8 @@ class CusumStreamSpec extends SparkSpec {
   }
 
   test("emitted set is invariant to state-store parallelism") {
-    def at(n: Int): Seq[(Long, Long, Double)] = {
-      spark.conf.set("graft.stream.partitions", n.toString)
-      try streamed()
-      finally spark.conf.unset("graft.stream.partitions")
-    }
+    def at(n: Int): Seq[(Long, Long, Double)] =
+      queries.Confs.scoped(spark, "graft.stream.partitions" -> n.toString)(streamed())
     assert(at(1) == at(3))
   }
 

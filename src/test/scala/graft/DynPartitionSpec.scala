@@ -31,13 +31,10 @@ class DynPartitionSpec extends SparkSpec {
       .map(p => p -> dataFiles(part(p))).toMap
     val touchedBefore = touched.toSeq.map(p => p -> dataFiles(part(p))).toMap
 
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try base.filter(col("pri").isin(touched.toSeq: _*))
-      .withColumn("o_totalprice", col("o_totalprice") * 1.1)
-      .write.mode("overwrite").partitionBy("pri").parquet(run.toString)
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    queries.Confs.scoped(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+      base.filter(col("pri").isin(touched.toSeq: _*))
+        .withColumn("o_totalprice", col("o_totalprice") * 1.1)
+        .write.mode("overwrite").partitionBy("pri").parquet(run.toString))
 
     for ((p, before) <- untouchedBefore)
       assert(dataFiles(part(p)) == before,

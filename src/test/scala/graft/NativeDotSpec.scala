@@ -147,10 +147,7 @@ class NativeDotSpec extends SparkSpec {
     * compile failure into a hard error instead of a WARN.
     */
   test("wide dot projection over non-nullable inputs compiles under CODEGEN_ONLY") {
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "CODEGEN_ONLY")
-    try {
+    queries.Confs.scoped(spark, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
       // range id is non-nullable and transform of non-null lambdas keeps
       // containsNull=false — so every graft_dot below has nullable=false.
       val v = transform(sequence(lit(1), lit(64)),
@@ -161,11 +158,6 @@ class NativeDotSpec extends SparkSpec {
             slice(col("emb"), (o % 4) * 16 + 1, 16),
             array(synMat(64, 16)(o).toIndexedSeq.map(lit): _*))): _*).as("ds"))
       assert(df.agg(sum(element_at(col("ds"), 1))).collect().head.get(0) != null)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

@@ -21,21 +21,17 @@ class PartitionInvarianceSpec extends SparkSpec {
 
   private def sweep(
       id: String, key: String = "spark.sql.shuffle.partitions"): Unit = {
-    val old = spark.conf.getOption(key)
-    try {
-      val results = Seq("1", "7", "32").map { n =>
-        spark.conf.set(key, n)
-        (n, canon(id))
-      }
-      val (n0, r0) = results.head
-      assert(r0.nonEmpty, s"$id returned no rows")
-      results.tail.foreach { case (n, r) =>
-        assert(r == r0,
-          s"$id differs between partitions=$n0 and partitions=$n: " +
-            s"${r0.diff(r).take(3)} vs ${r.diff(r0).take(3)}")
-      }
-      info(s"$id: ${r0.size} rows bit-identical at partitions 1/7/32")
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val results = Seq("1", "7", "32").map { n =>
+      (n, queries.Confs.scoped(spark, key -> n)(canon(id)))
+    }
+    val (n0, r0) = results.head
+    assert(r0.nonEmpty, s"$id returned no rows")
+    results.tail.foreach { case (n, r) =>
+      assert(r == r0,
+        s"$id differs between partitions=$n0 and partitions=$n: " +
+          s"${r0.diff(r).take(3)} vs ${r.diff(r0).take(3)}")
+    }
+    info(s"$id: ${r0.size} rows bit-identical at partitions 1/7/32")
   }
 
   test("decimal-sum dialect (agg_global_mean_std) is partition-invariant") {

@@ -47,10 +47,7 @@ class PlanInvariantSpec extends SparkSpec {
     var worstId = ""
     var worstMethod = 0
     var worstMethodId = ""
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "CODEGEN_ONLY")
-    try {
+    queries.Confs.scoped(spark, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
       for (q <- Registry.all) {
         val plan: SparkPlan = q.run(spark, sf).queryExecution.executedPlan
         val p = plan.toString
@@ -96,11 +93,6 @@ class PlanInvariantSpec extends SparkSpec {
             }
           case _ => ()
         }
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
     }
     info(s"worst hash-exchange count: $worst ($worstId)")

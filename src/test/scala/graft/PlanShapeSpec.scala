@@ -109,21 +109,31 @@ class PlanShapeSpec extends SparkSpec {
     assert(equi == 1, s"expected 1 gather equi-join, got $equi\n$p")
   }
 
+  /** The executed plan of one of `Joins`' scoped builders, run to the end
+    * under its row's confs, as the row runs it.
+    */
+  private def scopedPlan(
+      confs: Seq[(String, String)],
+      build: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
+  ): String = queries.Confs.scoped(spark, confs: _*) {
+    val df = build(spark, sf)
+    df.collect()
+    df.queryExecution.executedPlan.toString
+  }
+
   test("AQE splits the hot partition in the skew join") {
-    Registry.byId("join_skew_aqe").run(spark, sf)
-    // run() executed eagerly under the lowered skew thresholds and stashed
-    // AQE's final plan; the skew split marks the join and/or shuffle read.
-    val p = graft.queries.Joins.lastSkewPlan
+    // AQE's final plan (the string's part before the initial plan); the
+    // skew split marks the join and/or shuffle read.
+    val p = scopedPlan(queries.Joins.SkewConfs, queries.Joins.skewJoin)
+      .split("== Initial Plan ==").head
     assert(p.contains("skew=true") || p.contains("isSkewJoin=true") ||
       p.contains("skewed"), p)
   }
 
   test("runtime bloom filter prunes the fact side of the selective join") {
-    Registry.byId("join_bloom_runtime_filter").run(spark, sf)
-    // run() executed eagerly under the lowered bloom thresholds and stashed
-    // the executed plan; the injected filter shows as might_contain /
-    // bloom_filter_agg on the fact (application) side.
-    val p = graft.queries.Joins.lastBloomPlan
+    // The injected filter shows as might_contain / bloom_filter_agg on the
+    // fact (application) side.
+    val p = scopedPlan(queries.Joins.BloomConfs, queries.Joins.bloomJoin)
     assert(p.contains("might_contain") || p.contains("bloom_filter"), p)
   }
 

@@ -69,16 +69,13 @@ class PropertySpec extends SparkSpec {
   }
 
   test("5x5 multiband conv is invariant to shuffle partitioning") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    def runSorted() = Registry.byId("ml_conv2d_5x5_multiband").run(spark, sf)
-      .collect().map(_.toString).toSeq
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val a = runSorted()
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
-      val b = runSorted()
-      assert(a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    def runSorted(n: String) =
+      queries.Confs.scoped(spark, "spark.sql.shuffle.partitions" -> n)(
+        Registry.byId("ml_conv2d_5x5_multiband").run(spark, sf)
+          .collect().map(_.toString).toSeq)
+    val a = runSorted("7")
+    val b = runSorted("13")
+    assert(a == b)
   }
 
   test("one-hot is exact: bit=1 iff idx==cls, exactly one per event") {

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the five entry points is a second harness, so this spec fails on each.
   * The warm-run conf keys `Native.register` installs and `Bench` passes to
   * its builder have one source too, `Native.sessionConf`, and a stream runs
-  * one way, through `StreamingQueries.runToEnd`.
+  * one way, through `StreamingQueries.runToEnd`. A row overrides session
+  * confs one way, `queries.Confs.scoped`, and only `Tables` caches.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
@@ -64,6 +65,51 @@ class SingleMemoSpec extends AnyFunSuite {
       }
     }
 
+  /** A code line: comments name the spellings below without using them. */
+  private def code(line: String): Boolean = {
+    val t = line.trim
+    !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+  }
+
+  /** The one conf `Tables.load` sets for the session's life: the parquet
+    * reader reads it when the lazily cached scan executes, after any scope
+    * around the load would have closed.
+    */
+  private val sessionWide = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `spelling -> file:line` under `tree` of a session-conf write outside
+    * `Confs.scoped` in the query packs or `Tables`, and of a `.cache()`
+    * outside `Tables`. A row that overrides confs goes through the scope,
+    * and executes inside it instead of caching its answer.
+    */
+  private def looseScopes(tree: Path): List[(String, String)] = {
+    val confWrites = Seq("conf.set(", "conf.unset(").flatMap { token =>
+      hits(tree)(l => code(l) && l.contains(token) && !l.contains(sessionWide))
+        .filter(h => h.startsWith("graft/queries/") || h.startsWith("graft/Tables.scala:"))
+        .filterNot(_.startsWith("graft/queries/Confs.scala:"))
+        .map(token -> _)
+    }
+    val caches = hits(tree)(l => code(l) && l.contains(".cache()"))
+      .filterNot(_.startsWith("graft/Tables.scala:"))
+      .map(".cache()" -> _)
+    (confWrites ++ caches).toList
+  }
+
+  private def withCopy(files: String*)(body: Path => Unit): Unit = {
+    val tree = Files.createTempDirectory("single_home")
+    try {
+      for (f <- files) {
+        Files.createDirectories(tree.resolve(f).getParent)
+        Files.copy(root.resolve(f), tree.resolve(f))
+      }
+      body(tree)
+    } finally {
+      val walk = Files.walk(tree)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
+  }
+
   test("no memo map is declared outside queries/Staged.scala") {
     val found = offenders("graft/queries/Staged.scala")(line =>
       line.contains("TrieMap") || line.contains("WeakHashMap"))
@@ -112,12 +158,8 @@ class SingleMemoSpec extends AnyFunSuite {
   }
 
   test("the one-place rule flags a stream run inlined back into a row") {
-    val tree = Files.createTempDirectory("single_run")
-    try {
+    withCopy("graft/queries/StreamingQueries.scala", "graft/queries/Scratch.scala") { tree =>
       val queries = tree.resolve("graft/queries")
-      Files.createDirectories(queries)
-      for (f <- Seq("StreamingQueries.scala", "Scratch.scala"))
-        Files.copy(root.resolve(s"graft/queries/$f"), queries.resolve(f))
       assert(inlinedRuns(tree).isEmpty)
       val inlined =
         """        val sink = s"mem_${java.util.UUID.randomUUID.toString}"
@@ -131,10 +173,31 @@ class SingleMemoSpec extends AnyFunSuite {
       Files.writeString(queries.resolve("StreamingQueries.scala"), inlined,
         java.nio.file.StandardOpenOption.APPEND)
       assert(inlinedRuns(tree).map(_._1).toSet == oneHome.map(_._1).toSet)
-    } finally {
-      val walk = Files.walk(tree)
-      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
-      finally walk.close()
+    }
+  }
+
+  test("session confs are overridden only through Confs.scoped, and only Tables caches") {
+    val found = looseScopes(root)
+    assert(found.isEmpty,
+      s"conf write or cache outside its home: ${found.mkString(", ")} — " +
+        "override confs with Confs.scoped and execute the row inside it " +
+        "(localCheckpoint) instead of caching its answer")
+  }
+
+  test("the conf-scope rule flags an inlined save/set/restore and a cache") {
+    withCopy("graft/queries/Confs.scala", "graft/queries/Joins.scala",
+        "graft/Tables.scala") { tree =>
+      assert(looseScopes(tree).isEmpty)
+      val inlined =
+        """        val saved = s.conf.getOption(k)
+          |        s.conf.set(k, "true")
+          |        try out.cache()
+          |        finally saved.fold(s.conf.unset(k))(s.conf.set(k, _))
+          |""".stripMargin
+      Files.writeString(tree.resolve("graft/queries/Joins.scala"), inlined,
+        java.nio.file.StandardOpenOption.APPEND)
+      assert(looseScopes(tree).map(_._1).toSet ==
+        Set("conf.set(", "conf.unset(", ".cache()"))
     }
   }
 }

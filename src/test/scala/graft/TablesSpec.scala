@@ -52,12 +52,10 @@ class TablesSpec extends SparkSpec {
   test("events ts: native TIMESTAMP encoding passes through") {
     import spark.implicits._
     val dir = freshDir()
-    val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try micros.map(us => (1L, us)).toDF("event_id", "us")
-      .select(col("event_id"), timestamp_micros(col("us")).as("ts"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    finally prev.foreach(spark.conf.set("spark.sql.parquet.outputTimestampType", _))
+    queries.Confs.scoped(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
+      micros.map(us => (1L, us)).toDF("event_id", "us")
+        .select(col("event_id"), timestamp_micros(col("us")).as("ts"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet"))
     assert(loadTs(dir) === micros)
   }
 
