@@ -22,13 +22,7 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Diagnostic switch (graft.Plans): bypass the in-memory cache so plan
-    * dumps show the real parquet scans (PushedFilters / ReadSchema) instead
-    * of InMemoryTableScan.
-    */
-  @volatile var noCache: Boolean = false
-
-  /** Cached DataFrame for one table of one scale-factor directory.
+  /** Uncached DataFrame for one table of one scale-factor directory.
     *
     * `events.parquet` has shipped with three `ts` physical encodings across
     * driver generations, so normalization branches on the SCANNED dtype
@@ -49,7 +43,7 @@ object Tables {
     *     belt-and-braces fallback should the conf ever not apply.
     *   - TimestampType already: pass through.
     */
-  private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  private[graft] def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     // Session-wide, not scoped: the parquet reader reads it when the lazily
@@ -78,9 +72,8 @@ object Tables {
     } else raw
   }
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (noCache) load(spark, sfDir, name)
-    else graft.queries.Staged.memo(spark, sfDir, s"table/$name")(
+  /** The cached [[load]] of `name`, staged once per (session, sfDir). */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    graft.queries.Staged.memo(spark, sfDir, s"table/$name")(
       load(spark, sfDir, name).cache())
-  }
 }

@@ -43,8 +43,8 @@ private[graft] object Staged {
     */
   private final class Holder(s: SparkSession, build: () => AnyRef) {
     val session = new WeakReference[SparkSession](s)
-    @volatile var built: AnyRef = _
-    lazy val value: AnyRef = { val v = build(); built = v; v }
+    val built = new java.util.concurrent.atomic.AtomicReference[AnyRef]()
+    lazy val value: AnyRef = { val v = build(); built.set(v); v }
     def dead: Boolean = session.get match {
       case null => true
       case ss => ss.sparkContext.isStopped
@@ -62,7 +62,7 @@ private[graft] object Staged {
   /** Free the blocks an evicted entry created (best-effort: on a stopped
     * context they are already gone). Called after the entry left the map.
     */
-  private def release(k: Key, h: Holder): Unit = h.built match {
+  private def release(k: Key, h: Holder): Unit = h.built.get match {
     case d: Dataset[_] =>
       try d.queryExecution.logical match {
         case r: LogicalRDD => r.rdd.unpersist(blocking = false)

@@ -11,11 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * harness, [[graft.Bench]]. A concurrent or weak map declared anywhere else
   * in the engine is a second memo with its own keying and lifetime, an
   * install call outside `Q` is a second install path, and a `main` outside
-  * the five entry points is a second harness, so this spec fails on each.
+  * the four entry points is a second harness, so this spec fails on each.
   * The warm-run conf keys `Native.register` installs and `Bench` passes to
   * its builder have one source too, `Native.sessionConf`, and a stream runs
   * one way, through `StreamingQueries.runToEnd`. A row overrides session
-  * confs one way, `queries.Confs.scoped`, and only `Tables` caches.
+  * confs one way, `queries.Confs.scoped`, and only `Tables` caches. No
+  * mutable `@volatile` field switches behaviour for the whole JVM.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
@@ -132,12 +133,22 @@ class SingleMemoSpec extends AnyFunSuite {
         "— add the strategy to Native.strategies instead")
   }
 
-  test("a main is declared only by the five entry points") {
-    val mains = offenders("graft/Bench.scala", "graft/Verify.scala", "graft/Plans.scala",
-      "graft/PlanDump.scala", "graft/ScaleGen.scala")(_.contains("def main("))
+  test("a main is declared only by the four entry points") {
+    val main = """\bdef\s+main\s*\(""".r
+    val mains = offenders("graft/Bench.scala", "graft/Verify.scala",
+      "graft/PlanDump.scala", "graft/ScaleGen.scala")(main.findFirstIn(_).nonEmpty)
     assert(mains.isEmpty,
       s"main outside the entry points: ${mains.mkString(", ")} — time a " +
         "question with graft.Bench and probe config through SPARK_GRAFT_EXTRA_JVM")
+  }
+
+  test("no mutable @volatile field is declared in main code") {
+    val volatileVar = """@volatile\s+(private\S*\s+|protected\S*\s+)?var\b""".r
+    val found = hits(root)(l => code(l) && volatileVar.findFirstIn(l).nonEmpty)
+    assert(found.isEmpty,
+      s"mutable @volatile field in main code: ${found.mkString(", ")} — a mutable " +
+        "switch on an object leaks across sessions; pass the choice in, or " +
+        "plan it (PlanDump.scanPlan shows uncached scans without one)")
   }
 
   test("the warm-run conf keys are spelled only in Native") {

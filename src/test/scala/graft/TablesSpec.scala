@@ -16,13 +16,10 @@ class TablesSpec extends SparkSpec {
   private val micros: Seq[Long] =
     Seq(0L, 1700000000000000L, 1700000123456789L)
 
-  private def loadTs(dir: String): Seq[Long] = {
-    Tables.noCache = true
-    try Tables(spark, dir, "events")
+  private def loadTs(dir: String): Seq[Long] =
+    Tables.load(spark, dir, "events")
       .select(unix_micros(col("ts")))
       .collect().map(_.getLong(0)).toSeq.sorted
-    finally Tables.noCache = false
-  }
 
   private def freshDir(): String =
     Files.createTempDirectory("graft_tables_spec").toString
@@ -70,19 +67,14 @@ class TablesSpec extends SparkSpec {
     // NTZ inference is disabled at load, so the scan yields TimestampType
     // directly and a ts range predicate must reach PushedFilters — a cast
     // on top of an NTZ scan would silently drop row-group pruning.
-    // clearCache: an events cache from a previous test would substitute an
-    // InMemoryRelation for the scan and hide the PushedFilters line.
-    spark.catalog.clearCache()
-    Tables.noCache = true
-    try {
-      val plan = Tables(spark, sf, "events")
-        .filter(col("ts") >= lit("2024-01-02").cast("timestamp"))
-        .queryExecution.executedPlan.toString
-      val pushed = plan.linesIterator
-        .filter(_.contains("PushedFilters")).mkString
-      assert(pushed.contains("ts"), s"no ts in PushedFilters: $pushed")
-      assert(!pushed.contains("PushedFilters: []"), pushed)
-    } finally Tables.noCache = false
+    // scanPlan plans past the table cache, so the parquet scan shows even
+    // though the events frame is cached.
+    val plan = PlanDump.scanPlan(Tables(spark, sf, "events")
+      .filter(col("ts") >= lit("2024-01-02").cast("timestamp"))).toString
+    val pushed = plan.linesIterator
+      .filter(_.contains("PushedFilters")).mkString
+    assert(pushed.contains("ts"), s"no ts in PushedFilters: $pushed")
+    assert(!pushed.contains("PushedFilters: []"), pushed)
   }
 
   /** Testdata-drift sentinel for EVERY table, not just events: the driver
@@ -113,9 +105,8 @@ class TablesSpec extends SparkSpec {
         "lang" -> "string", "source" -> "string", "n_chars" -> "bigint"),
       "embeddings" -> Map("vec_id" -> "bigint",
         "embedding" -> "array<float>", "label" -> "int"))
-    Tables.noCache = true
-    try for ((table, cols) <- expected) {
-      val schema = Tables(spark, sf, table).schema
+    for ((table, cols) <- expected) {
+      val schema = Tables.load(spark, sf, table).schema
       for ((name, dtype) <- cols) {
         val f = schema.fields.find(_.name == name)
         assert(f.isDefined, s"$table.$name missing — driver testdata drifted")
@@ -123,7 +114,7 @@ class TablesSpec extends SparkSpec {
           s"$table.$name is ${f.get.dataType.simpleString}, expected $dtype " +
             "— driver testdata drifted; audit Tables.load normalization")
       }
-    } finally Tables.noCache = false
+    }
   }
 
   /** Physical-encoding sentinel (footer-level, below Spark's logical
