@@ -35,10 +35,9 @@ object PlanDump {
     * does not show; an object's identity hash (`pkg.Class@1f2e3d`, a
     * typed aggregator's default `toString`) becomes `@_`, and a lambda's
     * class (`$Lambda$5952/0x7f29ad67c000`) `$Lambda`; and a scratch path's
-    * random suffix, a 32-hex `Scratch.newTag()` or the digits
-    * `Files.createTempDirectory` appends to a `graft_` prefix, becomes
-    * `<tag>`. Every pattern is linear in the plan's length: a plan can hold
-    * a literal of hundreds of thousands of characters.
+    * `Scratch.newTag()` suffix (32 hex) becomes `<tag>`. Every pattern is
+    * linear in the plan's length: a plan can hold a literal of hundreds of
+    * thousands of characters.
     */
   def normalize(plan: String): String = {
     def renumber(s: String, re: Regex, fmt: Int => String): String = {
@@ -52,8 +51,7 @@ object PlanDump {
     val sites = "\\b(\\w+\\.scala):\\d+".r.replaceAllIn(rdds, "$1:_")
     val lambdas = "\\$Lambda\\$\\d+/0x[0-9a-f]+".r.replaceAllIn(sites, "\\$Lambda")
     val hashes = "(\\b[A-Za-z_][\\w$]*(?:\\.[\\w$]+)+)@[0-9a-f]+\\b".r.replaceAllIn(lambdas, "$1@_")
-    val tags = "(?<![0-9a-f])[0-9a-f]{32}(?![0-9a-f])".r.replaceAllIn(hashes, "<tag>")
-    "(/graft_[a-z_]*)\\d{6,}".r.replaceAllIn(tags, "$1<tag>")
+    "(?<![0-9a-f])[0-9a-f]{32}(?![0-9a-f])".r.replaceAllIn(hashes, "<tag>")
   }
 
   /** `df`'s physical plan as planned from its analyzed plan, without the

@@ -52,6 +52,29 @@ object Joins extends QueryPack {
       }
     }
 
+  /** Staged catalog tables for `join_bucketed_colocated`: each side is
+    * written once per session, bucketed and sorted on its join key into 8
+    * buckets, EXTERNAL over a scratch path. Returns (lineitem, orders).
+    */
+  private[graft] def colocatedTables(
+      s: org.apache.spark.sql.SparkSession, dir: String): (String, String) =
+    Staged.memo(s, dir, "join/colocated_tables") {
+      val tag = Scratch.newTag()
+      def bucketed(src: String, base: String, key: String, cols: String*): String = {
+        val t = s"${base}_$tag"
+        Tables(s, dir, src).select(cols.map(col): _*)
+          .write.mode("overwrite")
+          .bucketBy(8, key).sortBy(key)
+          .option("path", Scratch.path(base, tag))
+          .format("parquet")
+          .saveAsTable(t)
+        t
+      }
+      (bucketed("lineitem", "graft_li_b", "l_orderkey",
+          "l_orderkey", "l_extendedprice", "l_discount"),
+        bucketed("orders", "graft_o_b", "o_orderkey", "o_orderkey", "o_orderpriority"))
+    }
+
   /** The deliberately fact-first join text `join_cbo_reorder` hands the
     * optimizer (CboReorderSpec pins that CBO flips it dimension-first).
     */
@@ -436,12 +459,10 @@ object Joins extends QueryPack {
     // external tables, so the SortMergeJoin needs NO exchange (the plan-shape
     // test asserts it). This is the 100 TB big-big join strategy: pay the
     // shuffle once at layout time, every subsequent join is shuffle-free.
-    // The layout is reused across JVMs the way a real bucketed warehouse
-    // table would be: if the files are already on disk (tagged by source
-    // path + mtime so regenerated testdata invalidates them), the table is
-    // just re-registered over them via CREATE TABLE ... CLUSTERED BY ...
-    // LOCATION instead of rewritten. hint("merge") keeps the small sf sides
-    // from being broadcast so the bucketed path is actually exercised.
+    // The layout is staged once per session (colocatedTables), the way a
+    // real bucketed warehouse table is written once and joined many times.
+    // hint("merge") keeps the small sf sides from being broadcast so the
+    // bucketed path is actually exercised.
     Q(
       "join_bucketed_colocated",
       Some("""SELECT o_orderpriority,
@@ -450,45 +471,7 @@ object Joins extends QueryPack {
              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
              |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        import org.apache.hadoop.fs.Path
-        val tmp = System.getProperty("java.io.tmpdir")
-        val hconf = s.sparkContext.hadoopConfiguration
-        // Layout identity: source file path + its modification time. A
-        // regenerated source invalidates the tag, so a stale layout can
-        // never serve a new dataset.
-        def srcTag(src: String): String = {
-          val p = new Path(s"$dir/$src.parquet")
-          val fs = p.getFileSystem(hconf)
-          val mt = if (fs.exists(p)) fs.getFileStatus(p).getModificationTime else 0L
-          java.lang.Integer.toHexString(
-            scala.util.hashing.MurmurHash3.stringHash(s"$dir/$src:$mt"))
-        }
-        def bucketed(src: String, cols: Seq[String], key: String, base: String): String = {
-          val table = s"${base}_${srcTag(src)}"
-          if (!s.catalog.tableExists(table)) {
-            val path = s"$tmp/graft_bucket_$table"
-            val fs = new Path(path).getFileSystem(hconf)
-            if (fs.exists(new Path(s"$path/_SUCCESS"))) {
-              // Files already bucketed by a previous JVM: register, don't rewrite.
-              val ddl = Tables(s, dir, src).select(cols.map(col): _*).schema.toDDL
-              s.sql(s"""CREATE TABLE $table ($ddl) USING parquet
-                       |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-                       |LOCATION '$path'""".stripMargin)
-            } else {
-              Tables(s, dir, src).select(cols.map(col): _*)
-                .write.mode("overwrite")
-                .bucketBy(8, key).sortBy(key)
-                .option("path", path)
-                .format("parquet")
-                .saveAsTable(table)
-            }
-          }
-          table
-        }
-        val li = bucketed("lineitem",
-          Seq("l_orderkey", "l_extendedprice", "l_discount"), "l_orderkey", "graft_li_b")
-        val o = bucketed("orders",
-          Seq("o_orderkey", "o_orderpriority"), "o_orderkey", "graft_o_b")
+        val (li, o) = colocatedTables(s, dir)
         s.table(li).hint("merge")
           .join(s.table(o), col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderpriority")

@@ -756,16 +756,10 @@ object MLOps extends QueryPack {
         val (_, hist) =
           TrainEval.run(m("train"), m("test"), GD.State(0, 0.0, 0.0), 5, 0.001)
         // Metrics-sink round-trip: persist the scalar series the way the
-        // reference's SummaryWriter does, then serve it back ordered. Path is
-        // keyed by (user, input dir) — distinct users/dirs never clobber each
-        // other, and repeated runs on the same dir OVERWRITE in place instead
-        // of accumulating a new directory per applicationId (unbounded /tmp
-        // growth on long-lived hosts).
-        val outDir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_metrics/train_eval_" +
-            s"${System.getProperty("user.name")}_${Integer.toHexString(dir.hashCode)}"
+        // reference's SummaryWriter does, then serve it back ordered.
+        val outDir = Scratch.path("graft_train_eval")
         s.createDataFrame(hist).toDF("metric", "epoch", "value")
-          .write.mode("overwrite").parquet(outDir)
+          .write.parquet(outDir)
         s.read.parquet(outDir).oracleOrder("epoch", "metric")
       }),
 
@@ -791,15 +785,9 @@ object MLOps extends QueryPack {
             Tables(s, dir, "lineitem")
               .select(col("l_quantity").as("x"), col("l_extendedprice").as("y"))))
         val (_, full) = GD.run(m, GD.State(0, 0.0, 0.0), 3, 0.001)
-        val ckptDir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_ckpt/gd_resume"
-        // Clean slate: restoreLatest takes the global max step, so a stale
-        // step left by an older run would restore foreign state and silently
-        // flip bit_equal — delete the shared dir before this run's legs.
-        val ckptPath = new org.apache.hadoop.fs.Path(ckptDir)
-        ckptPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(ckptPath, true)
-        val ckpt = ModelCheckpoint(s, ckptDir)
+        // A fresh store per run: restoreLatest takes the store's max step,
+        // so only this run's steps may be in it.
+        val ckpt = ModelCheckpoint(s, Scratch.path("graft_gd_resume"))
         val (_, firstLeg) =
           GD.run(m, GD.State(0, 0.0, 0.0), 2, 0.001, Some(ckpt))
         // "Restart": recover state purely from the checkpoint store.

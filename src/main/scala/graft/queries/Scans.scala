@@ -14,11 +14,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Scans extends QueryPack {
 
-  /** Per-invocation unique scratch dir for write-then-read-back staging
-    * (see [[Scratch.path]]).
-    */
-  private def scratch(prefix: String): String = Scratch.path(prefix)
-
   /** The 2-D box predicate served by the z-ordered layout. Plain column
     * comparisons on the MATERIALIZED dims (`ck`, `dy`): parquet stats
     * pushdown only sees raw-column predicates — a filter on
@@ -277,7 +272,7 @@ object Scans extends QueryPack {
       "sink_parquet_overwrite",
       Some("SELECT * FROM part ORDER BY p_partkey"),
       (s, dir) => {
-        val tmp = scratch("graft_sink_parquet")
+        val tmp = Scratch.path("graft_sink_parquet")
         Tables(s, dir, "part").write.mode("overwrite").parquet(tmp)
         s.read.parquet(tmp).oracleOrder("p_partkey")
       }),
@@ -291,7 +286,7 @@ object Scans extends QueryPack {
       Some("""SELECT n_regionkey, CAST(COUNT(*) AS BIGINT) AS n
              |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_csv_nation")
+        val tmp = Scratch.path("graft_csv_nation")
         Tables(s, dir, "nation")
           .select("n_nationkey", "n_regionkey", "n_name")
           .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -311,7 +306,7 @@ object Scans extends QueryPack {
              |  CAST(SUM(n_chars) AS BIGINT) AS chars
              |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_json_docs")
+        val tmp = Scratch.path("graft_json_docs")
         Tables(s, dir, "documents")
           .write.mode("overwrite").json(tmp)
         s.read.json(tmp)
@@ -334,7 +329,7 @@ object Scans extends QueryPack {
              |  CAST(MAX(n_chars) AS BIGINT) AS max_chars
              |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_jsonl_gz")
+        val tmp = Scratch.path("graft_jsonl_gz")
         Tables(s, dir, "documents")
           .write.mode("overwrite").option("compression", "gzip").json(tmp)
         s.read.json(tmp)
@@ -362,7 +357,7 @@ object Scans extends QueryPack {
              |  CAST(SUM(c_nationkey) AS BIGINT) AS natsum
              |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_xml_customer")
+        val tmp = Scratch.path("graft_xml_customer")
         Tables(s, dir, "customer")
           .select("c_custkey", "c_nationkey", "c_mktsegment")
           .write.mode("overwrite").option("rowTag", "customer")
@@ -389,7 +384,7 @@ object Scans extends QueryPack {
              |  CAST(MAX(length(text)) AS INT) AS max_len
              |FROM documents""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_text_docs")
+        val tmp = Scratch.path("graft_text_docs")
         Tables(s, dir, "documents")
           .select("text")
           .write.mode("overwrite").text(tmp)
@@ -414,7 +409,7 @@ object Scans extends QueryPack {
              |FROM orders WHERE year(o_orderdate) = 1995
              |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_part_orders")
+        val tmp = Scratch.path("graft_part_orders")
         Tables(s, dir, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
@@ -445,10 +440,7 @@ object Scans extends QueryPack {
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val tmp = scratch("graft_metrics_log")
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        val tmp = Scratch.path("graft_metric_log")
         for ((maxDay, e) <- Seq(10, 20, 31).zipWithIndex) {
           Tables(s, dir, "events")
             .filter(dayofmonth(col("ts")) <= maxDay)
@@ -487,7 +479,7 @@ object Scans extends QueryPack {
              |FROM orders
              |WHERE o_custkey % 256 < 32 AND dayofyear(o_orderdate) % 256 < 32""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_zorder_orders")
+        val tmp = Scratch.path("graft_zorder_orders")
         Scans.writeZOrdered(Tables(s, dir, "orders"), tmp)
         s.read.parquet(tmp)
           .filter(zorderBox)
@@ -575,7 +567,7 @@ object Scans extends QueryPack {
              |FROM documents""".stripMargin),
       (s, dir) => {
         import s.implicits._
-        val tmp = scratch("graft_corrupt_json")
+        val tmp = Scratch.path("graft_corrupt_json")
         Tables(s, dir, "documents")
           .select("doc_id", "lang", "n_chars")
           .write.mode("overwrite").json(tmp)
@@ -654,7 +646,7 @@ object Scans extends QueryPack {
               .as("o_orderstatus"),
             coalesce(col("c.o_totalprice"), col("b.o_totalprice"))
               .as("o_totalprice"))
-        val tmp = scratch("graft_merge_orders")
+        val tmp = Scratch.path("graft_merge_orders")
         merged.write.mode("overwrite").parquet(tmp)
         s.read.parquet(tmp)
           .groupBy("o_orderstatus")
@@ -686,8 +678,7 @@ object Scans extends QueryPack {
           df.groupBy("pri").agg(
             cnt.as("n"),
             sum(col("o_totalprice").cast(DecimalType(18, 6))).as("s"))
-        val run = java.nio.file.Files
-          .createTempDirectory("graft_aggview").toString + "/view"
+        val run = Scratch.path("graft_aggview")
         partials(orders.filter(col("o_orderkey") % 10 =!= 0))
           .write.parquet(run)
         val delta = partials(orders.filter(col("o_orderkey") % 10 === 0))
@@ -728,8 +719,7 @@ object Scans extends QueryPack {
              |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 4) AS s
              |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, dir) => {
-        val run = java.nio.file.Files
-          .createTempDirectory("graft_dpo").toString
+        val run = Scratch.path("graft_dpo")
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"),
             col("o_orderpriority").as("pri"), col("o_totalprice"))
@@ -795,7 +785,7 @@ object Scans extends QueryPack {
         val v2 = chg.select(
           col("c_custkey").cast("long"), lit(2).as("valid_from"),
           lit(null).cast("int").as("valid_to"), col("seg"), col("acctbal"))
-        val tmp = scratch("graft_scd2_customer")
+        val tmp = Scratch.path("graft_scd2_customer")
         v1.unionByName(v2).write.mode("overwrite").parquet(tmp)
         s.read.parquet(tmp)
           .filter(col("c_custkey") < 300)
@@ -808,6 +798,9 @@ object Scans extends QueryPack {
     // read time, absent columns surface as NULLs. Footer merging is
     // per-file metadata work — the data itself is never rewritten, which
     // is why schema evolution is free at 100 TB while a rewrite is not.
+    // Spark merges the footers in path order, so each generation lands in
+    // its own path-ordered directory: gen 1 merges first on every run and
+    // the merged column order is (doc_id, lang, n_chars, source).
     Q(
       "scan_merge_schema",
       Some("""WITH m AS (
@@ -822,15 +815,15 @@ object Scans extends QueryPack {
              |  CAST(SUM(coalesce(n_chars, 0)) AS BIGINT) AS sum_chars
              |FROM m GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
       (s, dir) => {
-        val tmp = scratch("graft_schema_evo")
+        val tmp = Scratch.path("graft_schema_evo")
         val d = Tables(s, dir, "documents")
         d.filter(col("doc_id") < 250)
           .select("doc_id", "lang")
-          .write.mode("overwrite").parquet(tmp)
+          .write.parquet(s"$tmp/gen1")
         d.filter(col("doc_id") >= 250)
           .select("doc_id", "n_chars", "source")
-          .write.mode("append").parquet(tmp)
-        s.read.option("mergeSchema", "true").parquet(tmp)
+          .write.parquet(s"$tmp/gen2")
+        s.read.option("mergeSchema", "true").parquet(s"$tmp/gen1", s"$tmp/gen2")
           .groupBy(
             coalesce(col("lang"), lit("?")).as("lang"),
             coalesce(col("source"), lit("?")).as("source"))

@@ -22,8 +22,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     Dead entries are swept on every miss and when an application ends.
   *     An evicted entry releases the blocks it holds: a checkpointed frame
   *     unpersists its RDD, a cached frame uncaches unless another live
-  *     session's entry shares the same cached plan. Staged paths come
-  *     from [[Scratch]] (session-private) and are deleted at JVM exit.
+  *     session's entry shares the same cached plan. A staged path is a
+  *     [[Scratch.path]], private to its session; Scratch's Scaladoc states
+  *     where it lives and when it is deleted.
   *   - At most once: the map stores a holder whose `lazy val` guards the
   *     build, so concurrent first access runs it once and every racer
   *     shares the winner's value. A build that throws is retried on the

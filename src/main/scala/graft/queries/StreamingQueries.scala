@@ -22,7 +22,9 @@ import scala.jdk.CollectionConverters._
   *
   * Every true-streaming row runs through [[StreamingQueries.runToEnd]]
   * (memory-sink rows through [[StreamingQueries.drainToMemory]]), whose
-  * Scaladoc states the stream-run rule.
+  * Scaladoc states the stream-run rule. Every spool, checkpoint and staged
+  * batch is a [[Scratch.path]], whose Scaladoc states where scratch lives
+  * and when it goes.
   */
 object StreamingQueries extends QueryPack {
 
@@ -42,27 +44,6 @@ object StreamingQueries extends QueryPack {
       else java.nio.file.Files.copy(p, t,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } finally walk.close()
-  }
-
-  /** Scratch dir for spools, checkpoints and staged batches: prefer tmpfs
-    * (/dev/shm) when present — streaming checkpoints are many tiny fsynced
-    * files (offsets, commits, state deltas) whose latency is pure
-    * micro-batch tax on a disk-backed /tmp; on a real cluster the
-    * checkpoint lives on the job's fast scratch volume for the same
-    * reason. Falls back to java.io.tmpdir when tmpfs is absent.
-    */
-  private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val p =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    // tmpfs dirs are RAM — register for JVM-exit deletion (ADVICE r20's
-    // scratch-accumulation class; per-invocation checkpoints otherwise
-    // pile up in /dev/shm across bench samples).
-    Scratch.register(p.toString)
-    p
   }
 
   /** State-store partitions of every true-streaming row. Stateful
@@ -91,7 +72,7 @@ object StreamingQueries extends QueryPack {
 
   /** The one way a stream runs here. Every `writeStream` ends in this
     * call, which
-    *  - checkpoints to `ckpt`: a fresh scratch dir unless the caller
+    *  - checkpoints to `ckpt`: a fresh [[Scratch.path]] unless the caller
     *    shares one across legs of a restart;
     *  - triggers `AvailableNow`: drain what the source holds now, then stop;
     *  - starts the query and waits for it to finish, so the sink holds the
@@ -102,7 +83,7 @@ object StreamingQueries extends QueryPack {
     */
   private[graft] def runToEnd[T](
       w: DataStreamWriter[T],
-      ckpt: String = scratchDir("graft_stream_ckpt").toString): StreamingQuery = {
+      ckpt: String = Scratch.path("graft_stream_ckpt")): StreamingQuery = {
     val q = w.option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -123,7 +104,7 @@ object StreamingQueries extends QueryPack {
     */
   private[graft] def drainToMemory[T](
       s: SparkSession, ds: Dataset[T], mode: String,
-      ckpt: String = scratchDir("graft_stream_ckpt").toString): Drained = {
+      ckpt: String = Scratch.path("graft_stream_ckpt")): Drained = {
     val name = s"mem_${Scratch.newTag()}"
     val q = runToEnd(
       ds.writeStream.queryName(name).outputMode(mode).format("memory"), ckpt)
@@ -160,7 +141,7 @@ object StreamingQueries extends QueryPack {
   private[graft] def typedEventsStream(
       s: SparkSession, dir: String, eventType: String): DataFrame = {
     val spool = Staged.memo(s, dir, s"stream/events_spool/$eventType") {
-      val p = scratchDir(s"graft_events_${eventType}_spool").toString
+      val p = Scratch.path(s"graft_events_${eventType}_spool")
       Tables(s, dir, "events")
         .filter(col("event_type") === eventType)
         .select("event_id", "user_id", "ts")
@@ -183,7 +164,7 @@ object StreamingQueries extends QueryPack {
   private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val batch = Tables(s, dir, "events")
     val spool = Staged.memo(s, dir, "stream/events_spool") {
-      val p = scratchDir("graft_events_spool").toString
+      val p = Scratch.path("graft_events_spool")
       batch.write.mode("overwrite").parquet(p)
       p
     }
@@ -591,13 +572,13 @@ object StreamingQueries extends QueryPack {
               (col("o_orderkey") + 100000000L).as("o_orderkey"),
               lit("N").as("o_orderstatus"), col("o_totalprice"))
           val cdc = upd.unionAll(ins)
-          val stage = scratchDir("graft_cdc_batches")
+          val stage = Scratch.path("graft_cdc_batches")
           (0 until 3).map { b =>
             writeSingleParquet(cdc.filter(pmod(col("o_orderkey"), lit(3)) === b),
-              stage.resolve(s"batch$b").toString)
+              s"$stage/batch$b")
           }
         }
-        val run = scratchDir("graft_cdc_run").toString
+        val run = Scratch.path("graft_cdc_run")
         val target = s"$run/target"
         val log = s"$run/log"
         val ckpt = s"$run/ckpt"
@@ -611,7 +592,7 @@ object StreamingQueries extends QueryPack {
         // so each run clones a staged PRISTINE partitioned copy with a
         // plain file copy instead of re-paying the partitioned write.
         val pristine = Staged.memo(s, dir, "stream/cdc_pristine") {
-          val p = scratchDir("graft_cdc_pristine").toString
+          val p = Scratch.path("graft_cdc_pristine")
           base.withColumn("pb", pmod(col("o_orderkey"), lit(3)))
             .write.mode("overwrite").partitionBy("pb").parquet(p)
           p
@@ -681,7 +662,8 @@ object StreamingQueries extends QueryPack {
         // (lexicographic names pin arrival order — the file source breaks
         // equal-mod-time ties by path).
         val spool = Staged.memo(s, dir, "stream/aggview_spool") {
-          val p = scratchDir("graft_aggview_spool").toString
+          val p = Scratch.path("graft_aggview_spool")
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
           val orders = Tables(s, dir, "orders")
             .select(col("o_orderkey"),
               col("o_orderpriority").as("pri"), col("o_totalprice"))
@@ -689,13 +671,13 @@ object StreamingQueries extends QueryPack {
               orders.filter(col("o_orderkey") % 10 === 0))
             .zipWithIndex.foreach { case (df, i) =>
               val part = writeSingleParquet(
-                df, scratchDir(s"graft_aggview_stage$i").toString)
+                df, Scratch.path(s"graft_aggview_stage$i"))
               java.nio.file.Files.move(
                 part, java.nio.file.Paths.get(p, s"part-$i.parquet"))
             }
           p
         }
-        val run = scratchDir("graft_aggview_run").toString
+        val run = Scratch.path("graft_aggview_run")
         val view = s"$run/view"
         val ckpt = s"$run/ckpt"
         def partials(df: DataFrame): DataFrame =
@@ -756,7 +738,7 @@ object StreamingQueries extends QueryPack {
         // One file per generation so the stream genuinely tails the log
         // incrementally (3 micro-batches), not as one bulk load.
         val logDir = Staged.memo(s, dir, "stream/metrics_spool") {
-          val p = scratchDir("graft_metrics_spool").toString
+          val p = Scratch.path("graft_metric_spool")
           for ((maxDay, e) <- Seq(10, 20, 31).zipWithIndex) {
             Tables(s, dir, "events")
               .filter(dayofmonth(col("ts")) <= maxDay)
@@ -808,7 +790,7 @@ object StreamingQueries extends QueryPack {
              |    AS run2_input_rows
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
       (s, dir) => withStreamPartitions(s) {
-        val base = scratchDir("graft_restart").toString
+        val base = Scratch.path("graft_restart")
         val logDir = s"$base/log"
         val ckpt = s"$base/ckpt" // SHARED across both legs — the point
         // The four epoch generations are pure functions of the input dir,
@@ -819,7 +801,7 @@ object StreamingQueries extends QueryPack {
         // keeps repeated runs measuring the streaming legs — the thing
         // under test — not four re-aggregations of `events`.
         val genFiles = Staged.memo(s, dir, "stream/restart_gens") {
-          val stage = scratchDir("graft_restart_gens")
+          val stage = Scratch.path("graft_restart_gens")
           Seq(10 -> 1, 20 -> 2, 31 -> 3, 31 -> 4).map { case (maxDay, e) =>
             writeSingleParquet(Tables(s, dir, "events")
               .filter(dayofmonth(col("ts")) <= maxDay)
@@ -828,7 +810,7 @@ object StreamingQueries extends QueryPack {
                 date_trunc("month", col("ts")).cast("date").as("bucket"))
               .agg(cnt.cast("double").as("value"))
               .withColumn("epoch", lit(e)),
-              stage.resolve(s"gen$e").toString)
+              s"$stage/gen$e")
           }
         }
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(logDir))

@@ -23,9 +23,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * first time it takes it, so one warm pass may still compile a few classes;
   * the spec runs two warm passes and asserts that one of them compiles
   * nothing (at Spark's defaults every warm pass recompiles well over 100).
-  * `scan_merge_schema` merges its parquet footers in file-name order, and
-  * the names are random, so its scan's column order takes either of two
-  * orders. With adaptive execution on, AQE picks the broadcast side of a
+  * With adaptive execution on, AQE picks the broadcast side of a
   * join between two small aggregates from whichever shuffle stage it sees
   * first (`join_null_safe_eq`, `agg_ab_welch_ttest`), so the passes run in
   * a child of the shared session with adaptive execution off. The child

@@ -69,21 +69,23 @@ class CusumStreamSpec extends SparkSpec {
     */
   test("multi-batch time-ordered replay equals the batch onsets") {
     import spark.implicits._
-    import graft.queries.StreamingQueries.{drainToMemory, scratchDir, writeSingleParquet}
+    import graft.queries.Scratch
+    import graft.queries.StreamingQueries.{drainToMemory, writeSingleParquet}
     import graft.streaming.CusumAlert
     val rows = Tables(spark, sf, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._2.getTime, t._3))
-    val spool = scratchDir("cusum_mb").toString
+    val spool = Scratch.path("cusum_mb")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(spool))
     val n = rows.length
     require(n >= 3)
     (0 until 3).foreach { i =>
       val slice = rows.slice(i * n / 3, (i + 1) * n / 3).toSeq
       val part = writeSingleParquet(
         slice.toDF("user_id", "ts", "event_id", "value"),
-        scratchDir("cusum_mb_part").toString)
+        Scratch.path("cusum_mb_part"))
       // Lexicographic name == arrival order: the file source breaks
       // equal-mod-time ties by path.
       java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$spool/part-$i.parquet"))

@@ -10,13 +10,11 @@ class PlanDumpSpec extends SparkSpec {
       "Scan ExistingRDD MapPartitionsRDD[88] at localCheckpoint at SimOps.scala:412 [x#12]\n" +
       "Functions [1]: [agg(x#12, graft.functions.MinHashAgg@7e09bee)]\n" +
       "Location: InMemoryFileIndex [file:/tmp/graft_feb_sink_0f3a9c1e2b4d5f60718293a4b5c6d7e8]\n" +
-      "Location: InMemoryFileIndex [file:/tmp/graft_aggview4954668809352559400/view]\n" +
       "Arguments: graft.queries.Scans$$$Lambda$5952/0x00007f29ad67c000@433ec38c, obj#20"
     val b = "Project [x#3, y#5] [plan_id=2]\n" +
       "Scan ExistingRDD MapPartitionsRDD[9] at localCheckpoint at SimOps.scala:430 [x#3]\n" +
       "Functions [1]: [agg(x#3, graft.functions.MinHashAgg@2799f9a)]\n" +
       "Location: InMemoryFileIndex [file:/tmp/graft_feb_sink_9e8d7c6b5a4f30211203f4e5d6c7b8a9]\n" +
-      "Location: InMemoryFileIndex [file:/tmp/graft_aggview5884321334533101515/view]\n" +
       "Arguments: graft.queries.Scans$$$Lambda$5961/0x00007fa4656783d0@6e3f108c, obj#6"
     val n = PlanDump.normalize(a)
     assert(n == PlanDump.normalize(b))
@@ -24,7 +22,6 @@ class PlanDumpSpec extends SparkSpec {
       "Scan ExistingRDD MapPartitionsRDD[1] at localCheckpoint at SimOps.scala:_ [x#1]\n" +
       "Functions [1]: [agg(x#1, graft.functions.MinHashAgg@_)]\n" +
       "Location: InMemoryFileIndex [file:/tmp/graft_feb_sink_<tag>]\n" +
-      "Location: InMemoryFileIndex [file:/tmp/graft_aggview<tag>/view]\n" +
       "Arguments: graft.queries.Scans$$$Lambda@_, obj#3")
     // Distinct ids stay distinct.
     assert(PlanDump.normalize("a#1 b#2") != PlanDump.normalize("a#1 b#1"))

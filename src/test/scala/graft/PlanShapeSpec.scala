@@ -166,6 +166,16 @@ class PlanShapeSpec extends SparkSpec {
     assert(!below.contains("Exchange hashpartitioning"), p)
   }
 
+  test("scan_merge_schema merges generation 1's footer first on every run") {
+    val orders = (1 to 5).map { _ =>
+      PlanDump.scanPlan(Registry.byId("scan_merge_schema").run(spark, sf)).collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.dataSchema.fieldNames.toList
+      }
+    }
+    assert(orders.forall(_ == List(List("doc_id", "lang", "n_chars", "source"))), orders)
+  }
+
   test("partitioned sink read prunes partitions") {
     val df = Registry.byId("sink_partitioned_pruning").run(spark, sf)
     val p = df.queryExecution.executedPlan.toString

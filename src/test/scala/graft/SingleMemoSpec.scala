@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * its builder have one source too, `Native.sessionConf`, and a stream runs
   * one way, through `StreamingQueries.runToEnd`. A row overrides session
   * confs one way, `queries.Confs.scoped`, and only `Tables` caches. No
-  * mutable `@volatile` field switches behaviour for the whole JVM.
+  * mutable `@volatile` field switches behaviour for the whole JVM. Every
+  * directory main code writes is drawn from `queries.Scratch.path`.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
@@ -95,6 +96,21 @@ class SingleMemoSpec extends AnyFunSuite {
       .map(".cache()" -> _)
     (confWrites ++ caches).toList
   }
+
+  /** The spellings that pick a scratch directory, which only
+    * `queries/Scratch.scala` may hold.
+    */
+  private val scratchSpellings = Seq("createTempDirectory", "java.io.tmpdir", "\"/dev/shm\"")
+
+  /** `spelling -> file:line` under `tree` of a code line that picks a
+    * scratch directory outside `Scratch`.
+    */
+  private def looseScratch(tree: Path): List[(String, String)] =
+    scratchSpellings.toList.flatMap { token =>
+      hits(tree)(l => code(l) && l.contains(token))
+        .filterNot(_.startsWith("graft/queries/Scratch.scala:"))
+        .map(token -> _)
+    }
 
   private def withCopy(files: String*)(body: Path => Unit): Unit = {
     val tree = Files.createTempDirectory("single_home")
@@ -209,6 +225,30 @@ class SingleMemoSpec extends AnyFunSuite {
         java.nio.file.StandardOpenOption.APPEND)
       assert(looseScopes(tree).map(_._1).toSet ==
         Set("conf.set(", "conf.unset(", ".cache()"))
+    }
+  }
+
+  test("every scratch directory is drawn in queries/Scratch.scala") {
+    val found = looseScratch(root)
+    assert(found.isEmpty,
+      s"scratch directory picked outside Scratch: ${found.mkString(", ")} — " +
+        "draw a fresh, registered path with Scratch.path")
+  }
+
+  test("the scratch rule flags a temp dir inlined back into a row") {
+    withCopy("graft/queries/Scans.scala", "graft/queries/Scratch.scala") { tree =>
+      assert(looseScratch(tree).isEmpty)
+      val inlined =
+        """        // a comment may name createTempDirectory and java.io.tmpdir
+          |        val run = java.nio.file.Files
+          |          .createTempDirectory("graft_aggview").toString + "/view"
+          |        val ckpt = s"${System.getProperty("java.io.tmpdir")}/graft_ckpt"
+          |        val shm = java.nio.file.Paths.get("/dev/shm")
+          |""".stripMargin
+      Files.writeString(tree.resolve("graft/queries/Scans.scala"), inlined,
+        java.nio.file.StandardOpenOption.APPEND)
+      val found = looseScratch(tree)
+      assert(found.map(_._1) == scratchSpellings, found)
     }
   }
 }

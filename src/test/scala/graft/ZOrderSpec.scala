@@ -30,8 +30,8 @@ class ZOrderSpec extends SparkSpec {
   test("morton layout reads fewer rows than key-ordered for the 2-D box") {
     val orders = Tables(spark, sf, "orders")
     val total = orders.count()
-    val zPath = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_spec_z"
-    val kPath = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_spec_k"
+    val zPath = queries.Scratch.path("graft_zorder_spec_z")
+    val kPath = queries.Scratch.path("graft_zorder_spec_k")
     queries.Scans.writeZOrdered(orders, zPath)
     queries.Scans.withDims(orders)
       .repartitionByRange(8, col("o_orderkey"))
