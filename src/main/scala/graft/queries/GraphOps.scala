@@ -64,32 +64,35 @@ object GraphOps extends QueryPack {
       eds.union(eds.select(col("dst").as("src"), col("src").as("dst")))
     }
 
-  /** The ONE build of the staged "knn_und_200" artifact (ADVICE r17): the
-    * symmetrized exact top-3 kNN edge set over the 200-node embedding
-    * slice, shared by `graph_knn_triangles` and `graph_kcore_prune`.
-    * Hoisted so the staged table has exactly one definition per key — two
-    * inline copies of the build expression could silently drift apart
-    * under an edit, with execution-order-dependent results.
+  /** The exact top-3 kNN digraph (`q` → `c`, [[SimOps.cosTopK]]) over the
+    * embedding slice `vec_id < n`.
     */
-  private def knnUnd200(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir, "embeddings").filter(col("vec_id") < 200)
-    val a = e.select(col("vec_id").as("qa"), col("embedding").as("ea"))
-    val b = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
-    val w = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
+  private def knnDigraph(
+      s: SparkSession, dir: String, n: Int, q: String, c: String): DataFrame = {
+    val e = Tables(s, dir, "embeddings").filter(col("vec_id") < n)
+    val pairs = broadcast(e.select(col("vec_id").as(q), col("embedding").as("ea")))
+      .crossJoin(e.select(col("vec_id").as(c), col("embedding").as("eb")))
+      .filter(col(q) =!= col(c))
+    SimOps.cosTopK(pairs, q, c, 3).select(q, c)
+  }
+
+  /** The ONE build of each staged kNN artifact over the 200-node slice
+    * (ADVICE r17): "knn_dir_200", the directed top-3 edges (qa, qb) of
+    * `graph_kcore_prune`, and "knn_und_200", their symmetrized distinct
+    * (a < b) set, shared by `graph_knn_triangles` and
+    * `graph_jaccard_linkpred`. A session computes the kNN once for both.
+    */
+  private def knnDir200(s: SparkSession, dir: String): DataFrame =
+    Staged(s, dir, "knn_dir_200")(knnDigraph(s, dir, 200, "qa", "qb"))
+
+  private def knnUnd200(s: SparkSession, dir: String): DataFrame =
     Staged(s, dir, "knn_und_200") {
-      broadcast(a)
-        .crossJoin(b)
-        .filter(col("qa") =!= col("qb"))
-        .select(col("qa"), col("qb"),
-          round(SimOps.ncos(col("ea"), col("eb")), 6).as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      knnDir200(s, dir)
         .select(
           least(col("qa"), col("qb")).as("a"),
           greatest(col("qa"), col("qb")).as("b"))
         .distinct()
     }
-  }
 
   /** One long key for a partkey pair `pa < pb < 2^32`: `pa << 32 | pb`.
     * For `pa >= 2^31` the shift sets the sign bit, so [[pairHi]] decodes
@@ -248,10 +251,8 @@ object GraphOps extends QueryPack {
 
     // Triangle participation on the embedding kNN graph (top-3 cosine
     // neighbors per vector, symmetrized) — the mutual-neighbor-clique
-    // statistic used to confirm near-dup clusters. The kNN construction
-    // reuses sim_cosine_topk's exact dialect (native fused cosine, ROUND 6,
-    // tie-break by neighbor id); the a<b<c edge orientation enumerates each
-    // triangle exactly once.
+    // statistic used to confirm near-dup clusters. The a<b<c edge
+    // orientation enumerates each triangle exactly once.
     Q(
       "graph_knn_triangles",
       Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings
@@ -449,20 +450,7 @@ object GraphOps extends QueryPack {
              |FROM deg2 JOIN deg0 ON deg2.n = deg0.n
              |ORDER BY node""".stripMargin),
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings").filter(col("vec_id") < 200)
-        val a = e.select(col("vec_id").as("qa"), col("embedding").as("ea"))
-        val b = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
-        val w = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        val knn = Staged(s, dir, "knn_dir_200") {
-          broadcast(a)
-            .crossJoin(b)
-            .filter(col("qa") =!= col("qb"))
-            .select(col("qa"), col("qb"),
-              round(SimOps.ncos(col("ea"), col("eb")), 6).as("cos"))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 3)
-            .select("qa", "qb")
-        }
+        val knn = knnDir200(s, dir)
         val mut = knn
           .join(knn.select(col("qb").as("qa"), col("qa").as("qb")),
             Seq("qa", "qb"))
@@ -703,12 +691,11 @@ object GraphOps extends QueryPack {
     // reachability is a real signal: an SCC is a set of vectors that all
     // lead back to each other through nearest-neighbor hops, the recurrent
     // cores of a retrieval graph; transient satellites point in but are
-    // never pointed back to). kNN edges reuse sim_cosine_topk's exact
-    // dialect (fused native cosine, ROUND 6, neighbor-id tie-break) on a
-    // bounded 60-vector slice; the closure is PATH DOUBLING — 6 unrolled
-    // rounds of the bounded pair relation composed with itself (with
-    // identity seeded, round k holds all paths ≤ 2^k, and 2^6 = 64 > 59
-    // covers any simple path on 60 nodes) — and scc_id(v) = MIN over the
+    // never pointed back to). kNN edges span a bounded 60-vector slice;
+    // the closure is PATH DOUBLING — 6 unrolled rounds of the bounded
+    // pair relation composed with itself (with identity seeded, round k
+    // holds all paths ≤ 2^k, and 2^6 = 64 > 59 covers any simple path on
+    // 60 nodes) — and scc_id(v) = MIN over the
     // forward∩backward pair intersection, exactly the oracle's
     // recursive-CTE closure. Scale shape: transitive closure is only sane
     // on BOUNDED node sets, which is how a production dedup uses it — the
@@ -746,18 +733,8 @@ object GraphOps extends QueryPack {
              |FROM scc GROUP BY 1 ORDER BY scc_id""".stripMargin),
       (s, dir) => {
         val q = Tables(s, dir, "embeddings").filter(col("vec_id") < 60)
-        val a = q.select(col("vec_id").as("src"), col("embedding").as("ea"))
-        val b = q.select(col("vec_id").as("dst"), col("embedding").as("eb"))
-        val w = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
-        val e = broadcast(a).crossJoin(b)
-          .filter(col("src") =!= col("dst"))
-          .select(col("src"), col("dst"),
-            round(SimOps.ncos(col("ea"), col("eb")), 6).as("cos"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .select(col("src"), col("dst"))
         var reach = Staged(s, dir, "scc_seed_60") {
-          e
+          knnDigraph(s, dir, 60, "src", "dst")
             .union(q.select(col("vec_id").as("src"), col("vec_id").as("dst")))
             .distinct()
             .repartition(4, col("src"))

@@ -81,6 +81,46 @@ object SimOps extends QueryPack {
   private[graft] def ncos(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
+  /** The one exact-cosine kNN ranking: every kNN, ANN re-rank and
+    * graph-over-kNN row ranks its candidate pairs here, and each oracle
+    * spells its DuckDB twin,
+    * `ROUND(<list_sum cosine>, 6) AS cos`, then
+    * `row_number() OVER (PARTITION BY q ORDER BY cos DESC, c) AS rn`,
+    * kept `WHERE rn <= k`. `pairs` holds query `q` with vector `ea` and
+    * candidate `c` with vector `b`; the result is (q, c, keep..., cos,
+    * rn). Both engines fold the cosine in the same order and round it to
+    * 6 dp, so they rank the same value, and cosines that tie at 6 dp
+    * rank by candidate id: the ranking is total and the top k is one set.
+    */
+  private[graft] def cosTopK(
+      pairs: org.apache.spark.sql.DataFrame, q: String, c: String, k: Int,
+      b: String = "eb", rn: String = "rn",
+      keep: Seq[String] = Nil): org.apache.spark.sql.DataFrame =
+    cosRanked(pairs, q, c, k, b, rn, keep)(identity)
+
+  /** A kNN row's reported answer: [[cosTopK]] of (`qa`, `qb`) pairs as
+    * (qa, qb, cos, rn) in the oracle's (qa, rn) order, `rn` spelled as
+    * the oracle's `CAST(rn AS INT)`. `row_number` is already INT, so the
+    * cast leaves every value as it is; it only moves the rank into a
+    * projection over the window's `_we0`, the plan PLANS.md shows.
+    */
+  private[graft] def cosTopKRows(
+      pairs: org.apache.spark.sql.DataFrame, k: Int,
+      b: String = "eb"): org.apache.spark.sql.DataFrame =
+    cosRanked(pairs, "qa", "qb", k, b, "rn", Nil)(_.cast("int"))
+      .oracleOrder("qa", "rn")
+
+  private def cosRanked(
+      pairs: org.apache.spark.sql.DataFrame, q: String, c: String, k: Int,
+      b: String, rn: String, keep: Seq[String])(
+      rank: Column => Column): org.apache.spark.sql.DataFrame =
+    pairs
+      .select((col(q) +: col(c) +: keep.map(col)) :+
+        round(ncos(col("ea"), col(b)), 6).as("cos"): _*)
+      .withColumn(rn, rank(row_number().over(
+        Window.partitionBy(q).orderBy(col("cos").desc, col(c)))))
+      .filter(col(rn) <= k)
+
   /** Query-INDEPENDENT staged ANN-graph edge build (r17 items 2 + 6): the
     * (src, dst) top-`k` digraph over the fixed 200-node slice, self-loops
     * included, staged once per (session, dir) — the built-once graph
@@ -137,16 +177,12 @@ object SimOps extends QueryPack {
             .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"))
             .distinct()
         }
-      val wr = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
-      pairs
+      val withVecs = pairs
         .join(n.select(col("vec_id").as("src"), col("embedding").as("ea")),
           "src")
         .join(n.select(col("vec_id").as("dst"), col("embedding").as("eb")),
           "dst")
-        .select(col("src"), col("dst"),
-          round(ncos(col("ea"), col("eb")), 6).as("cos"))
-        .withColumn("rn", row_number().over(wr))
-        .filter(col("rn") <= k)
+      cosTopK(withVecs, "src", "dst", k)
         .select("src", "dst")
         .union(n.select(col("vec_id").as("src"), col("vec_id").as("dst")))
     }
@@ -460,25 +496,38 @@ object SimOps extends QueryPack {
   private def planeSql(i: Int): String =
     Planes(i).mkString("[", ", ", "]::DOUBLE[]")
 
-  /** DuckDB oracle for sim_ann_ivf_topk, generated against the TRAINED
-    * centroids (exact float->double literals, graft.ml.Quantizers.sqlFloat)
-    * so both engines quantize with bit-identical values.
-    */
-  private def ivfOracle(cents: Array[Array[Float]]): String = {
+  /** Shared SQL fragments for the generated oracles. */
+  private def centsSql(cents: Array[Array[Float]]): String = {
     import graft.ml.Quantizers.sqlFloat
-    val centVals = cents.zipWithIndex
+    cents.zipWithIndex
       .map { case (c, i) =>
         s"($i, ${c.map(sqlFloat).mkString("[", ", ", "]")}::DOUBLE[])" }
       .mkString(",\n  ")
-    val dotQC =
-      """list_sum(list_transform(list_zip(e.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))""".stripMargin
-    s"""WITH cents AS (SELECT * FROM (VALUES
-       |  $centVals) t(cid, embedding)),
+  }
+
+  private val cosPairSql: String =
+    """ROUND(list_sum(list_transform(list_zip(x.embedding, y.embedding),
+      |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
+      |       * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))), 6) AS cos""".stripMargin
+
+  /** Vector `e` dotted with centroid `c`. */
+  private val dotQCSql: String =
+    """list_sum(list_transform(list_zip(e.embedding, c.embedding),
+      |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))""".stripMargin
+
+  /** The IVF CTEs over the trained centroids (exact float->double
+    * literals, graft.ml.Quantizers.sqlFloat, so both engines quantize
+    * with bit-identical values): `assigned` is each vector's list,
+    * `probes` the two lists each of the 20 queries probes.
+    */
+  private def ivfSql(cents: Array[Array[Float]]): String =
+    s"""cents AS (SELECT * FROM (VALUES
+       |  ${centsSql(cents)}) t(cid, embedding)),
        |dists AS (
        |  SELECT e.vec_id, c.cid,
        |    list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-       |      - 2 * $dotQC AS dist
+       |      - 2 * $dotQCSql AS dist
        |  FROM embeddings e, cents c),
        |assigned AS (
        |  SELECT vec_id, cid FROM (
@@ -487,22 +536,21 @@ object SimOps extends QueryPack {
        |probes AS (
        |  SELECT vec_id, cid FROM (
        |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM dists WHERE vec_id < 20) WHERE rn <= 2),
+       |    FROM dists WHERE vec_id < 20) WHERE rn <= 2)""".stripMargin
+
+  /** DuckDB oracle for sim_ann_ivf_topk. */
+  private def ivfOracle(cents: Array[Array[Float]]): String =
+    s"""WITH ${ivfSql(cents)},
        |cand AS (
        |  SELECT DISTINCT p.vec_id AS qa, a.vec_id AS qb
        |  FROM probes p JOIN assigned a ON p.cid = a.cid AND p.vec_id <> a.vec_id),
        |sc AS (
-       |  SELECT cand.qa, cand.qb,
-       |    ROUND(list_sum(list_transform(list_zip(x.embedding, y.embedding),
-       |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-       |      / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-       |       * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))), 6) AS cos
+       |  SELECT cand.qa, cand.qb, $cosPairSql
        |  FROM cand JOIN embeddings x ON cand.qa = x.vec_id
        |            JOIN embeddings y ON cand.qb = y.vec_id),
        |r AS (SELECT *, row_number() OVER (PARTITION BY qa ORDER BY cos DESC, qb) AS rn FROM sc)
        |SELECT qa, qb, cos, CAST(rn AS INT) AS rn
        |FROM r WHERE rn <= 3 ORDER BY qa, rn""".stripMargin
-  }
 
   /** DuckDB twin of the OPQ rotation: each rotated coordinate is the
     * list_sum dot against the exact float-literal weight row, rounded to
@@ -518,13 +566,13 @@ object SimOps extends QueryPack {
     s"rot AS (SELECT vec_id, $comps AS embedding FROM embeddings),\n"
   }
 
-  /** DuckDB oracle for sim_ann_pq_topk / sim_ann_opq_topk, generated
-    * against the TRAINED codebook. `pre`/`src` let the OPQ variant encode
-    * over the rotated CTE while the exact re-rank stays on raw embeddings.
+  /** The PQ pieces of the oracles over the TRAINED codebook: the `codes`
+    * CTE (each vector's code per subspace), the `q` CTE (each of the 20
+    * queries' exact sub-distance to every codeword), both reading `src`,
+    * and the ADC distance of a (q, codes) row pair.
     */
-  private def pqOracle(
-      cb: Array[Array[Array[Float]]],
-      pre: String = "", src: String = "embeddings"): String = {
+  private def pqSql(
+      cb: Array[Array[Array[Float]]], src: String): (String, String, String) = {
     import graft.ml.Quantizers.sqlFloat
     val cc = pqCc(cb) _
     def cbSql(si: Int, c: Int): String =
@@ -555,100 +603,16 @@ object SimOps extends QueryPack {
       s"(CASE code$si ${(0 until PqCodes)
         .map(c => s"WHEN $c THEN ql_${si}_$c").mkString(" ")} END)"
     }.mkString(" + ")
-    s"""WITH ${pre}codes AS (SELECT vec_id AS qb, $codeCols FROM $src),
-       |q AS (SELECT vec_id AS qa, $lutCols FROM $src WHERE vec_id < 20),
-       |p AS (SELECT qa, qb, $adistSql AS adist
-       |      FROM q, codes WHERE qa <> qb),
-       |short AS (SELECT qa, qb FROM (
-       |    SELECT qa, qb, row_number() OVER (PARTITION BY qa ORDER BY adist, qb) AS rs
-       |    FROM p) WHERE rs <= $PqShortlist),
-       |sc AS (
-       |  SELECT short.qa, short.qb,
-       |    ROUND(list_sum(list_transform(list_zip(x.embedding, y.embedding),
-       |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-       |      / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-       |       * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))), 6) AS cos
-       |  FROM short JOIN embeddings x ON short.qa = x.vec_id
-       |             JOIN embeddings y ON short.qb = y.vec_id),
-       |r AS (SELECT qa, qb, cos,
-       |        row_number() OVER (PARTITION BY qa ORDER BY cos DESC, qb) AS rn
-       |      FROM sc)
-       |SELECT qa, qb, cos, CAST(rn AS INT) AS rn
-       |FROM r WHERE rn <= 3 ORDER BY qa, rn""".stripMargin
+    (s"codes AS (SELECT vec_id AS qb, $codeCols FROM $src)",
+      s"q AS (SELECT vec_id AS qa, $lutCols FROM $src WHERE vec_id < 20)",
+      adistSql)
   }
 
-  /** Shared SQL fragments for the generated oracles. */
-  private def centsSql(cents: Array[Array[Float]]): String = {
-    import graft.ml.Quantizers.sqlFloat
-    cents.zipWithIndex
-      .map { case (c, i) =>
-        s"($i, ${c.map(sqlFloat).mkString("[", ", ", "]")}::DOUBLE[])" }
-      .mkString(",\n  ")
-  }
-
-  private val cosPairSql: String =
-    """ROUND(list_sum(list_transform(list_zip(x.embedding, y.embedding),
-      |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))), 6) AS cos""".stripMargin
-
-  /** DuckDB oracle for sim_ann_ivfpq_topk: IVF list pruning (trained
-    * centroids) composed with PQ/ADC inside the probed lists (trained
-    * codebook) — both value sets inlined as exact literals.
+  /** The ADC shortlist of `p(qa, qb, adist)` and its exact re-rank
+    * against the raw embeddings: the tail of both PQ oracles.
     */
-  private def ivfpqOracle(
-      cents: Array[Array[Float]], cb: Array[Array[Array[Float]]]): String = {
-    import graft.ml.Quantizers.sqlFloat
-    val cc = pqCc(cb) _
-    def cbSql(si: Int, c: Int): String =
-      cb(si)(c).map(sqlFloat).mkString("[", ", ", "]::DOUBLE[]")
-    def subSql(si: Int): String =
-      s"embedding[${si * PqSubDim + 1}:${(si + 1) * PqSubDim}]"
-    def dotSql(si: Int, c: Int): String =
-      s"list_sum(list_transform(list_zip(${subSql(si)}, ${cbSql(si, c)}), " +
-        "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-    def qqSql(si: Int): String =
-      s"list_sum(list_transform(${subSql(si)}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def codeSql(si: Int): String = {
-      val ds = (0 until PqCodes)
-        .map(c => s"(${cc(si, c)} - 2 * ${dotSql(si, c)})")
-        .mkString("[", ",\n      ", "]")
-      s"list_position($ds, list_min($ds)) - 1 AS code$si"
-    }
-    val codeCols = (0 until PqSubs).map(codeSql).mkString(",\n")
-    val lutCols = (for (si <- 0 until PqSubs; c <- 0 until PqCodes) yield
-      s"${qqSql(si)} - 2 * ${dotSql(si, c)} + ${cc(si, c)} AS ql_${si}_$c")
-      .mkString(",\n")
-    val adistSql = (0 until PqSubs).map { si =>
-      s"(CASE code$si ${(0 until PqCodes)
-        .map(c => s"WHEN $c THEN ql_${si}_$c").mkString(" ")} END)"
-    }.mkString(" + ")
-    val dotQC =
-      """list_sum(list_transform(list_zip(e.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))""".stripMargin
-    s"""WITH cents AS (SELECT * FROM (VALUES
-       |  ${centsSql(cents)}) t(cid, embedding)),
-       |dists AS (
-       |  SELECT e.vec_id, c.cid,
-       |    list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-       |      - 2 * $dotQC AS dist
-       |  FROM embeddings e, cents c),
-       |assigned AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM dists) WHERE rn = 1),
-       |probes AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM dists WHERE vec_id < 20) WHERE rn <= 2),
-       |codes AS (SELECT vec_id AS qb, $codeCols FROM embeddings),
-       |codesc AS (SELECT a.cid, c.* FROM codes c JOIN assigned a ON c.qb = a.vec_id),
-       |q AS (SELECT vec_id AS qa, $lutCols FROM embeddings WHERE vec_id < 20),
-       |p AS (SELECT q.qa, codesc.qb, $adistSql AS adist
-       |      FROM probes pr JOIN q ON pr.vec_id = q.qa
-       |                     JOIN codesc ON pr.cid = codesc.cid
-       |      WHERE q.qa <> codesc.qb),
-       |short AS (SELECT qa, qb FROM (
+  private val pqReRankSql: String =
+    s"""short AS (SELECT qa, qb FROM (
        |    SELECT qa, qb, row_number() OVER (PARTITION BY qa ORDER BY adist, qb) AS rs
        |    FROM p) WHERE rs <= $PqShortlist),
        |sc AS (
@@ -660,15 +624,44 @@ object SimOps extends QueryPack {
        |      FROM sc)
        |SELECT qa, qb, cos, CAST(rn AS INT) AS rn
        |FROM r WHERE rn <= 3 ORDER BY qa, rn""".stripMargin
+
+  /** DuckDB oracle for sim_ann_pq_topk / sim_ann_opq_topk. `pre`/`src`
+    * let the OPQ variant encode over the rotated CTE while the exact
+    * re-rank stays on raw embeddings.
+    */
+  private def pqOracle(
+      cb: Array[Array[Array[Float]]],
+      pre: String = "", src: String = "embeddings"): String = {
+    val (codes, q, adist) = pqSql(cb, src)
+    s"""WITH $pre$codes,
+       |$q,
+       |p AS (SELECT qa, qb, $adist AS adist
+       |      FROM q, codes WHERE qa <> qb),
+       |$pqReRankSql""".stripMargin
+  }
+
+  /** DuckDB oracle for sim_ann_ivfpq_topk: IVF list pruning (trained
+    * centroids) composed with PQ/ADC inside the probed lists (trained
+    * codebook) — both value sets inlined as exact literals.
+    */
+  private def ivfpqOracle(
+      cents: Array[Array[Float]], cb: Array[Array[Array[Float]]]): String = {
+    val (codes, q, adist) = pqSql(cb, "embeddings")
+    s"""WITH ${ivfSql(cents)},
+       |$codes,
+       |codesc AS (SELECT a.cid, c.* FROM codes c JOIN assigned a ON c.qb = a.vec_id),
+       |$q,
+       |p AS (SELECT q.qa, codesc.qb, $adist AS adist
+       |      FROM probes pr JOIN q ON pr.vec_id = q.qa
+       |                     JOIN codesc ON pr.cid = codesc.cid
+       |      WHERE q.qa <> codesc.qb),
+       |$pqReRankSql""".stripMargin
   }
 
   /** DuckDB oracle for dedup_semantic_embcluster, generated against the
     * trained IVF centroids.
     */
   private def semdedupOracle(cents: Array[Array[Float]], tau: Double): String = {
-    val dotQC =
-      """list_sum(list_transform(list_zip(e.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))""".stripMargin
     // Mirror of the engine's candidate set (semAssign): flat n·k below
     // CoarseThreshold; above it, the SAME driver-computed coarse cells and
     // fine→cell map inline as literals, so both engines probe identical
@@ -705,8 +698,8 @@ object SimOps extends QueryPack {
        |dists AS (
        |  SELECT e.vec_id, c.cid,
        |    list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-       |      - 2 * $dotQC AS dist,
-       |    $dotQC
+       |      - 2 * $dotQCSql AS dist,
+       |    $dotQCSql
        |      / (sqrt(list_sum(list_transform(e.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
        |       * sqrt(list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))) AS centsim
        |  $distsFrom),
@@ -823,6 +816,32 @@ object SimOps extends QueryPack {
     element_at(col("lut"), lit(si * PqCodes) + col(s"code$si") + 1)
   }.reduce(_ + _)
 
+  /** The ADC shortlist over the code table: each query's [[PqShortlist]]
+    * (qa, qb) candidates by (adist, qb). `cands` pairs each query's `lut`
+    * with the candidates' codes.
+    */
+  private def pqShortlist(
+      cands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    cands
+      .filter(col("qa") =!= col("qb"))
+      .withColumn("adist", pqAdistCol)
+      .withColumn("rs", row_number().over(
+        Window.partitionBy("qa").orderBy(col("adist"), col("qb"))))
+      .filter(col("rs") <= PqShortlist)
+      .select("qa", "qb")
+
+  /** The exact re-rank of candidate pairs (qa, qb): both raw vectors
+    * re-join by key from `e` (never scanned for candidates), and
+    * [[cosTopKRows]] keeps the top 3 per query.
+    */
+  private def reRankTop3(
+      pairs: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    cosTopKRows(pairs
+      .join(e.select(col("vec_id").as("qa"), col("embedding").as("ea")), "qa")
+      .join(e.select(col("vec_id").as("qb"), col("embedding").as("eb2")), "qb"),
+      3, "eb2")
+
   def queries: Seq[Q] = Seq(
     // Brute-force cosine top-5 for 20 query vectors vs the whole table.
     Q(
@@ -846,16 +865,7 @@ object SimOps extends QueryPack {
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), col("embedding").as("ea"))
         val all = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
-        val w = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        broadcast(q).crossJoin(all)
-          .filter(col("qa") =!= col("qb"))
-          .select(
-            col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb")), 6)
-              .as("cos"))
-          .withColumn("rn", row_number().over(w).cast("int"))
-          .filter(col("rn") <= 5)
-          .oracleOrder("qa", "rn")
+        cosTopKRows(broadcast(q).crossJoin(all).filter(col("qa") =!= col("qb")), 5)
       }),
 
     // Near-duplicate pairs by embedding cosine (the dense-vector twin of the
@@ -938,16 +948,7 @@ object SimOps extends QueryPack {
           .filter(col("q.vec_id") < 20)
           .select(col("q.vec_id").as("qa"), col("c.vec_id").as("qb"))
           .distinct()
-        val w = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        cand
-          .join(e.select(col("vec_id").as("qa"), col("embedding").as("ea")), "qa")
-          .join(e.select(col("vec_id").as("qb"), col("embedding").as("eb2")), "qb")
-          .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb2")), 6)
-              .as("cos"))
-          .withColumn("rn", row_number().over(w).cast("int"))
-          .filter(col("rn") <= 3)
-          .oracleOrder("qa", "rn")
+        reRankTop3(cand, e)
       }),
 
     // Multimodal binary-column plumbing: text re-encoded as an opaque blob
@@ -1001,15 +1002,8 @@ object SimOps extends QueryPack {
           .select(col("vec_id").as("qa"), col("embedding").as("ea"), probeCid)
         // No distinct: each qb sits in one list and each qa probes two
         // distinct lists, so every (qa, qb) pair occurs once.
-        val ws = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        broadcast(probes).join(assigned, "cid")
-          .filter(col("qa") =!= col("qb"))
-          .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb")), 6)
-              .as("cos"))
-          .withColumn("rn", row_number().over(ws).cast("int"))
-          .filter(col("rn") <= 3)
-          .oracleOrder("qa", "rn")
+        cosTopKRows(
+          broadcast(probes).join(assigned, "cid").filter(col("qa") =!= col("qb")), 3)
       },
       oracleGen = Some((s, dir) => ivfOracle(graft.ml.Quantizers.ivf(s, dir)))),
 
@@ -1021,7 +1015,7 @@ object SimOps extends QueryPack {
     // scan runs over the code table, never the raw vectors. A query
     // precomputes its 4x16 lookup table of exact sub-distances once; per
     // candidate the approximate distance is 4 table lookups. The ADC
-    // ranking then shortlists 16 candidates per query and only those are
+    // ranking then shortlists 64 candidates per query and only those are
     // exact-re-ranked against the raw vectors (fetched by key) — the
     // standard production PQ search. Deterministic training => both
     // engines compute identical doubles and the whole path stays
@@ -1033,29 +1027,12 @@ object SimOps extends QueryPack {
         val e = Tables(s, dir, "embeddings")
         val cb = graft.ml.Quantizers.pq(s, dir)
         // First-minimal argmin code assignment and the per-query exact LUT
-        // are the shared fragments [[pqCodesDf]]/[[pqLutCols]] (also the
+        // are the shared fragments [[pqCodesDf]]/[[pqLutCol]] (also the
         // building blocks of the composed sim_ann_ivfpq_topk index).
         val codes = pqCodesDf(e, cb, "qb")
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), pqLutCol(cb))
-        // ADC shortlist over the code table, then exact re-rank of the
-        // shortlist only (raw vectors re-join by key — never scanned).
-        val wAd = Window.partitionBy("qa").orderBy(col("adist"), col("qb"))
-        val shortlist = broadcast(q).crossJoin(codes)
-          .filter(col("qa") =!= col("qb"))
-          .withColumn("adist", pqAdistCol)
-          .withColumn("rs", row_number().over(wAd))
-          .filter(col("rs") <= PqShortlist)
-          .select("qa", "qb")
-        val wc = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        shortlist
-          .join(e.select(col("vec_id").as("qa"), col("embedding").as("ea")), "qa")
-          .join(e.select(col("vec_id").as("qb"), col("embedding").as("eb2")), "qb")
-          .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb2")), 6).as("cos"))
-          .withColumn("rn", row_number().over(wc).cast("int"))
-          .filter(col("rn") <= 3)
-          .oracleOrder("qa", "rn")
+        reRankTop3(pqShortlist(broadcast(q).crossJoin(codes)), e)
       },
       oracleGen = Some((s, dir) => pqOracle(graft.ml.Quantizers.pq(s, dir)))),
 
@@ -1082,22 +1059,7 @@ object SimOps extends QueryPack {
         val codes = pqCodesDf(rot, cb, "qb")
         val q = rot.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), pqLutCol(cb))
-        val wAd = Window.partitionBy("qa").orderBy(col("adist"), col("qb"))
-        val shortlist = broadcast(q).crossJoin(codes)
-          .filter(col("qa") =!= col("qb"))
-          .withColumn("adist", pqAdistCol)
-          .withColumn("rs", row_number().over(wAd))
-          .filter(col("rs") <= PqShortlist)
-          .select("qa", "qb")
-        val wc = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        shortlist
-          .join(e.select(col("vec_id").as("qa"), col("embedding").as("ea")), "qa")
-          .join(e.select(col("vec_id").as("qb"), col("embedding").as("eb2")), "qb")
-          .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb2")), 6).as("cos"))
-          .withColumn("rn", row_number().over(wc).cast("int"))
-          .filter(col("rn") <= 3)
-          .oracleOrder("qa", "rn")
+        reRankTop3(pqShortlist(broadcast(q).crossJoin(codes)), e)
       },
       oracleGen = Some((s, dir) => {
         val (rotW, cb) = graft.ml.Quantizers.opq(s, dir)
@@ -1162,13 +1124,8 @@ object SimOps extends QueryPack {
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), col("embedding").as("ea"))
         val all = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
-        val wS = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        val sem = broadcast(q).crossJoin(all)
-          .filter(col("qa") =!= col("qb"))
-          .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb")), 6).as("cos"))
-          .withColumn("rn_s", row_number().over(wS))
-          .filter(col("rn_s") <= 20).select("qa", "qb", "rn_s")
+        val sem = cosTopK(broadcast(q).crossJoin(all).filter(col("qa") =!= col("qb")),
+          "qa", "qb", 20, rn = "rn_s").select("qa", "qb", "rn_s")
         // Distinct-token posting table + per-doc token counts: the lexical
         // inverted-index artifacts, staged once per (session, dir); the
         // per-query sem/lex rankings and the fusion stay per-invocation.
@@ -1272,22 +1229,7 @@ object SimOps extends QueryPack {
         // list-prune — candidates never leave their list partition.
         val probed = lists.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qa"), pqLutCol(cb), probeCid)
-        val wAd = Window.partitionBy("qa").orderBy(col("adist"), col("qb"))
-        val shortlist = broadcast(probed).join(codes, "cid")
-          .filter(col("qa") =!= col("qb"))
-          .withColumn("adist", pqAdistCol)
-          .withColumn("rs", row_number().over(wAd))
-          .filter(col("rs") <= PqShortlist)
-          .select("qa", "qb")
-        val wc = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
-        shortlist
-          .join(e.select(col("vec_id").as("qa"), col("embedding").as("ea")), "qa")
-          .join(e.select(col("vec_id").as("qb"), col("embedding").as("eb2")), "qb")
-          .select(col("qa"), col("qb"),
-            round(ncos(col("ea"), col("eb2")), 6).as("cos"))
-          .withColumn("rn", row_number().over(wc).cast("int"))
-          .filter(col("rn") <= 3)
-          .oracleOrder("qa", "rn")
+        reRankTop3(pqShortlist(broadcast(probed).join(codes, "cid")), e)
       },
       oracleGen = Some((s, dir) =>
         ivfpqOracle(graft.ml.Quantizers.ivf(s, dir), graft.ml.Quantizers.pq(s, dir)))),
@@ -1559,14 +1501,11 @@ object SimOps extends QueryPack {
     // k-NN majority-vote classification over the embedding store — the
     // label-propagation primitive behind weak supervision and
     // auto-labeling sweeps. Per query (broadcast slice): rank ALL
-    // candidates by the fused native cosine ROUNDED 6dp (the
-    // sim_cosine_topk tie discipline — both engines rank the identical
-    // rounded value with qb as tiebreak), keep k=10, then the vote is a
-    // count per label with (votes DESC, label) argmax — fully
-    // deterministic. Scale path: swap the exact candidate stage for any of
-    // the ANN indexes (LSH/IVF/PQ share this exact re-rank shape); the
-    // vote itself folds map-side on (qa, label). Exact: cosine rounding is
-    // the proven sim_cosine discipline, votes are integers.
+    // candidates ([[cosTopK]]), keep k=10, then the vote is a count per
+    // label with (votes DESC, label) argmax — fully deterministic. Scale
+    // path: swap the exact candidate stage for any of the ANN indexes
+    // (LSH/IVF/PQ share this exact re-rank shape); the vote itself folds
+    // map-side on (qa, label). Votes are integers.
     Q(
       "ml_knn_classify",
       Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
@@ -1593,14 +1532,9 @@ object SimOps extends QueryPack {
           .select(col("vec_id").as("qa"), col("embedding").as("ea"))
         val all = e.select(col("vec_id").as("qb"), col("embedding").as("eb"),
           col("label").as("lb"))
-        val wr = Window.partitionBy("qa").orderBy(col("cos").desc, col("qb"))
         val wv = Window.partitionBy("qa").orderBy(col("votes").desc, col("lb"))
-        broadcast(q).crossJoin(all)
-          .filter(col("qa") =!= col("qb"))
-          .select(col("qa"), col("qb"), col("lb"),
-            round(ncos(col("ea"), col("eb")), 6).as("cos"))
-          .withColumn("rn", row_number().over(wr))
-          .filter(col("rn") <= 10)
+        cosTopK(broadcast(q).crossJoin(all).filter(col("qa") =!= col("qb")),
+            "qa", "qb", 10, keep = Seq("lb"))
           .groupBy("qa", "lb")
           .agg(cnt.as("votes"))
           .withColumn("vr", row_number().over(wv))
@@ -1632,9 +1566,9 @@ object SimOps extends QueryPack {
     // hops, as plain equi-joins + per-query top-k windows, no recursion,
     // no driver loop (the SCC path-doubling discipline). Greedy stalls
     // are handled by construction (self is always a candidate).
-    // Exactness: the sim_cosine dialect end to end (fused native cosine
-    // ROUND 6dp, node-id tie-breaks; the emitted worst6/n_beam
-    // diagnostics are order-free min/count). Scale: nodes are the bounded
+    // Exactness: edges rank by [[cosTopK]], and every beam window by
+    // (cos DESC, node) on the same 6dp cosines; the emitted worst6/n_beam
+    // diagnostics are order-free min/count. Scale: nodes are the bounded
     // graph slice (the per-LSH-cluster shard a production graph index
     // partitions into); queries broadcast, the per-walk adjacency is
     // |Q|·|V|·(deg+1) rows, every hop is a broadcast join over a

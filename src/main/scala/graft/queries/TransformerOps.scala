@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, QueryPack, Tables}
 import graft.Fns.{cnt, dsum}
+import graft.queries.SimOps.ndot
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,9 +35,6 @@ import org.apache.spark.sql.types.DecimalType
   * ROUND 8dp after the transcendental, exact DECIMAL sums after that.
   */
 object TransformerOps extends QueryPack {
-
-  /** Σ x_i — native dot against ones (x_i * 1.0 is exact, fold unchanged). */
-  private def ndot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Staged K/V cache for `ml_kv_cache_decode`: keys/values for positions
     * 1..7 of every sequence, value checksums precomputed at stage time

@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * one way, through `StreamingQueries.runToEnd`. A row overrides session
   * confs one way, `queries.Confs.scoped`, and only `Tables` caches. No
   * mutable `@volatile` field switches behaviour for the whole JVM. Every
-  * directory main code writes is drawn from `queries.Scratch.path`.
+  * directory main code writes is drawn from `queries.Scratch.path`, and a
+  * kNN row ranks its candidate pairs with `queries.SimOps.cosTopK`.
   */
 class SingleMemoSpec extends AnyFunSuite {
 
@@ -109,6 +110,24 @@ class SingleMemoSpec extends AnyFunSuite {
     scratchSpellings.toList.flatMap { token =>
       hits(tree)(l => code(l) && l.contains(token))
         .filterNot(_.startsWith("graft/queries/Scratch.scala:"))
+        .map(token -> _)
+    }
+
+  /** The spellings of the kNN ranking's 6 dp cosine, which only
+    * `queries/SimOps.scala` may hold: a kNN row ranks its pairs with
+    * `SimOps.cosTopK`. `queries/MLOps.scala` is the one known exception;
+    * its two sites stay until that file's canary hash is re-pinned.
+    */
+  private val cosSpellings = Seq("round(ncos(", "round(SimOps.ncos(")
+
+  /** `spelling -> file:line` under `tree` of a code line that rounds a
+    * cosine outside `SimOps` and `MLOps`.
+    */
+  private def looseCosines(tree: Path): List[(String, String)] =
+    cosSpellings.toList.flatMap { token =>
+      hits(tree)(l => code(l) && l.contains(token))
+        .filterNot(h => Seq("graft/queries/SimOps.scala:", "graft/queries/MLOps.scala:")
+          .exists(h.startsWith))
         .map(token -> _)
     }
 
@@ -249,6 +268,31 @@ class SingleMemoSpec extends AnyFunSuite {
         java.nio.file.StandardOpenOption.APPEND)
       val found = looseScratch(tree)
       assert(found.map(_._1) == scratchSpellings, found)
+    }
+  }
+
+  test("a kNN cosine is ranked only in queries/SimOps.scala") {
+    val found = looseCosines(root)
+    assert(found.isEmpty,
+      s"6 dp cosine spelled outside SimOps: ${found.mkString(", ")} — " +
+        "rank candidate pairs with SimOps.cosTopK")
+  }
+
+  test("the cosine rule flags a kNN ranking inlined back into a row") {
+    withCopy("graft/queries/GraphOps.scala", "graft/queries/SimOps.scala") { tree =>
+      assert(looseCosines(tree).isEmpty)
+      val inlined =
+        """        // a comment may name round(ncos( and round(SimOps.ncos(
+          |        val knn = pairs
+          |          .select(col("qa"), col("qb"),
+          |            round(SimOps.ncos(col("ea"), col("eb")), 6).as("cos"))
+          |        val cos6 = round(ncos(col("ea"), col("eb")), 6)
+          |""".stripMargin
+      Files.writeString(tree.resolve("graft/queries/GraphOps.scala"), inlined,
+        java.nio.file.StandardOpenOption.APPEND)
+      val found = looseCosines(tree)
+      assert(found.map(_._1).toSet == cosSpellings.toSet, found)
+      assert(found.forall(_._2.startsWith("graft/queries/GraphOps.scala:")), found)
     }
   }
 }
